@@ -45,7 +45,7 @@ object Verify {
     // the stored index's on-disk location so the DuckDB side can
     // reproduce q_c103 FROM THE ARTIFACT FILES ALONE (no corpus view) —
     // the engine-neutrality claim for the stored-index family. Serving
-    // from the StoredArtifact cache here costs no rebuild: q_c103's dump
+    // from the SessionMemo stored entry here costs no rebuild: q_c103's dump
     // above already built it for this (dir, snapshot) key.
     // a query may contribute SEVERAL keys (a segments dir + its
     // compacted dir) — each key carries ONE path, never a delimited

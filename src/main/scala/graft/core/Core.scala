@@ -294,8 +294,8 @@ object Tables {
   */
 object Sizing {
   /** Total on-disk bytes under `path` — driver-side FS metadata listing
-    * only (O(files) RPCs, no data read), same discipline as
-    * [[SessionMemo.snapshot]].
+    * only (O(files) RPCs, no data read), the listing [[SessionMemo]]
+    * snapshots its inputs with.
     */
   def onDiskBytes(spark: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -400,107 +400,6 @@ object ContentId {
   val SeedB = 0x1b873593
   def hex64(a: Int, b: Int): String =
     java.lang.Long.toHexString((a.toLong << 32) | (b.toLong & 0xFFFFFFFFL))
-}
-
-/** Build-once session cache keyed by (key, content snapshot): two
-  * concurrent first callers of the SAME key share ONE build instead of
-  * both running the full multi-job training/export. The build runs under
-  * a PER-KEY latch, not the map monitor (the SessionMemo `inFlight`
-  * discipline): a lock spanning a Spark job must never serialize
-  * unrelated keys — concurrent trainings of different (dir, params)
-  * proceed in parallel. Entries for a stale snapshot are replaced.
-  */
-final class BuildOnceCache[K, V] {
-  private val m = scala.collection.mutable.Map.empty[K, (String, V)]
-  private val inFlight = new java.util.concurrent.ConcurrentHashMap[K, Object]()
-  def clear(): Unit = { m.synchronized { m.clear() }; inFlight.clear() }
-  def getOrBuild(key: K, snap: String)(build: => V): V = {
-    def lookup(): Option[V] =
-      m.synchronized(m.get(key).filter(_._1 == snap).map(_._2))
-    lookup().getOrElse {
-      val keyLock = inFlight.computeIfAbsent(key, _ => new Object)
-      try keyLock.synchronized {
-        // a concurrent caller may have finished while we waited
-        lookup().getOrElse {
-          val v = build
-          m.synchronized { m(key) = (snap, v) }
-          v
-        }
-      } finally {
-        // hygiene: drop the latch once the build settled so the map does
-        // not grow one Object per distinct key for the JVM lifetime.
-        // Late waiters on the removed latch re-run lookup() under it and
-        // hit the cached value; a racing fresh-snapshot caller at worst
-        // duplicates a build (wasted work, never a wrong result — the
-        // value map itself is monitor-guarded).
-        inFlight.remove(key, keyLock); ()
-      }
-    }
-  }
-}
-
-/** Build-once-per-content-snapshot ON-DISK artifact lifecycle — the
-  * shared discipline behind every stored index and export (BM25
-  * postings + base, MinHash signatures + base, CC family frame, JSONL
-  * export). One policy, single-sourced:
-  *   - keyed by corpus dir, guarded by the SessionMemo content snapshot
-  *     (a regenerated corpus rebuilds; a warm session serves from disk);
-  *   - the build runs under a PER-KEY latch (the [[BuildOnceCache]]
-  *     discipline): concurrent first callers of the same key share one
-  *     build, different keys build in parallel;
-  *   - a superseded snapshot's directory is reclaimed at JVM exit via
-  *     [[LocalArtifacts.deleteOnExit]], never eagerly — a query planned
-  *     against the old path may still be executing and must complete on
-  *     the old (internally consistent) snapshot rather than die with
-  *     FileNotFound mid-run.
-  */
-final class StoredArtifact(tmpPrefix: String) {
-  private val m = scala.collection.mutable.Map.empty[String, (String, String)]
-  private val inFlight = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Test hook (JobCountGateSpec cold-state discipline): forget the
-    * mapping so the next caller pays its build jobs. The directories
-    * themselves stay until exit (the deferred-deletion rationale).
-    */
-  def clear(): Unit = {
-    m.synchronized {
-      m.values.foreach { case (_, path) => LocalArtifacts.deleteOnExit(path) }
-      m.clear()
-    }
-    inFlight.clear()
-  }
-
-  /** The artifact directory for `key` at content snapshot `snap`,
-    * building via `build(path)` on first call / snapshot change.
-    */
-  def getOrBuild(key: String, snap: String)(build: String => Unit): String = {
-    def lookup(): Option[String] =
-      m.synchronized(m.get(key).filter(_._1 == snap).map(_._2))
-    lookup().getOrElse {
-      val keyLock = inFlight.computeIfAbsent(key, _ => new Object)
-      try keyLock.synchronized {
-        lookup().getOrElse {
-          val path =
-            java.nio.file.Files.createTempDirectory(tmpPrefix).toString
-          // a failed build must not leak its partial directory past JVM
-          // exit: reclaim it the same deferred way superseded snapshots
-          // are (it was never published, so no reader can hold it)
-          try build(path)
-          catch { case e: Throwable =>
-            LocalArtifacts.deleteOnExit(path); throw e
-          }
-          m.synchronized(m.put(key, (snap, path))).foreach { case (_, old) =>
-            LocalArtifacts.deleteOnExit(old)
-          }
-          path
-        }
-      } finally {
-        // same latch hygiene as BuildOnceCache: bounded map, no
-        // correctness dependence on latch identity (see rationale there)
-        inFlight.remove(key, keyLock); ()
-      }
-    }
-  }
 }
 
 /** Schema-adaptive event-time canonicalization.

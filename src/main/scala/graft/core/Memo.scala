@@ -1,108 +1,85 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped memo of deterministic, reusable intermediate frames
-  * (MinHash candidate pairs, AllPairs garr arrays): several queries — or a
-  * repeat invocation of one query within a session — consume the SAME
-  * deterministic pipeline output, so each (kind, dir) builds once per
-  * session and the persisted frame is reused. Reuse is a pure plan
-  * substitution: the pipelines are deterministic, so outputs are
-  * bit-identical to rebuilding.
+/** The one keyed cache of derived state: persisted frames, trained
+  * models and probe results, and on-disk indexes and exports. Reuse is a
+  * pure substitution — every build is deterministic in its inputs, so a
+  * hit is bit-identical to rebuilding.
   *
-  * Entries are keyed on (kind, dir) and guarded by a CONTENT SNAPSHOT of
-  * the input files (path + mtime + length of every file under the inputs,
-  * collected driver-side from the Hadoop FileSystem — a metadata-only
-  * listing, no data read): rewriting a fixture at the same path invalidates
-  * the entry instead of serving stale results (round-8 verdict watch item).
+  * Keys and snapshot. Every entry is keyed by (kind, key) and guarded by
+  * a CONTENT SNAPSHOT of the input paths the caller names (path + mtime +
+  * length of every file under them, a driver-side Hadoop FS listing — no
+  * data read). A rewrite at the same path changes the snapshot, and the
+  * next call rebuilds instead of serving stale state. Concurrent callers
+  * of one key share one build through a per-key latch (pruned once the
+  * build settles); different keys build in parallel, and the object lock
+  * never spans a build or a spill. [[buildCount]] counts builds per kind.
   *
-  * Entries are SIZE-BUDGETED (round 10): a materialized view only pays for
-  * itself while it fits in memory next to the queries that consume it. The
-  * round-10 scale sweep measured the failure mode directly — at 10× corpus
-  * the char-5-gram garr frame is GBs, its persisted blocks squat in the
-  * unified memory manager's protected storage region, and the SAME query's
-  * verify-stage shuffle loses that much execution memory and spills
-  * (q_c3 scale10 in a 7-query session: 225.9 s vs 106.7 s isolated), while
-  * the memo hit saves nothing because re-reading spilled blocks costs as
-  * much as rebuilding (pass B 108.6 s ≈ cold). So each build is persisted
-  * as an owned row RDD, materialized eagerly, and MEASURED: a frame larger
-  * than `spark.graft.memo.maxBytes` (default heap/8) moves to the DISK
-  * TIER (round 11; DEFAULT-ON since the round-12 clean-window A/B —
-  * `spark.graft.memo.diskTier=false` opts out to drop-and-rebuild):
-  * spilled once to session-local parquet, its storage blocks freed
-  * immediately, reuse served by columnar scans of the spill file.
-  * When the TOTAL across in-memory entries exceeds the budget the
-  * oldest entries are evicted first — DEMOTED to the disk tier when it
-  * is available (round 15: the spill writes once from the still-
-  * persisted blocks and later reuses serve columnar scans, measured
-  * 5.5× cheaper than the full-pipeline rebuild the old drop forced),
-  * dropped only when it isn't. Under-budget entries keep the round-9 semantics
-  * exactly: they survive per-query `drain()`, unpersist on replacement, on
-  * snapshot mismatch, and eagerly when the owning session stops
-  * (listener), so a long-lived multi-tenant process never carries a dead
-  * frame.
+  * Entry points and lifetimes.
+  *   - [[getOrBuild]]: a frame, persisted as an owned row RDD, measured,
+  *     and bound to the session that built it (another session, or a
+  *     restarted one, rebuilds). Evicted with its session: by
+  *     [[evict]], and eagerly when the session's context stops.
+  *   - [[value]]: any driver-side value (a model, a probe result).
+  *     JVM-wide; it survives [[evict]] unless its kind is named there.
+  *   - [[stored]]: an on-disk artifact built into a fresh temp directory.
+  *     JVM-wide like values. The directory of a failed or superseded
+  *     build is deleted at JVM exit, never eagerly: a query planned
+  *     against the old path may still be running.
+  *
+  * Budget and tiers (frames only). `spark.graft.memo.maxBytes` (default
+  * heap/8) bounds the in-memory frames. A frame larger than the budget
+  * goes to the DISK TIER: spilled once to parquet, its blocks freed, and
+  * every reuse served by a columnar scan of the spill. When the in-memory
+  * total crosses the budget, the oldest frames are DEMOTED to the disk
+  * tier on a background thread. Spills go under `spark.graft.memo.diskRoot`
+  * (a shared filesystem); without it a local master uses a per-JVM temp
+  * root, and a non-local master drops over-budget frames and rebuilds them
+  * per query, because a driver-local spill would be unreadable by
+  * executors. Each frame admission prints one `[memo] <kind>: measured`
+  * line, and a session whose working set (latest size per key) first
+  * crosses the budget gets one warning.
   */
 object SessionMemo {
-  private final case class Entry(
-      session: SparkSession,
-      snapshot: String,
-      df: DataFrame,
-      // Left: in-memory tier (owned persisted row RDD).
-      // Right: disk tier (session-local parquet path) — for frames over
-      // the memory budget, where holding blocks would displace execution
-      // memory but a rebuild costs the whole upstream pipeline.
-      store: Either[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row], String],
-      bytes: Long,
-      seq: Long)
-  // (kind, dir) -> entry; small by construction (one entry per memoized
-  // pipeline kind per data dir)
-  private val slots = scala.collection.mutable.Map.empty[(String, String), Entry]
-  private val builds = scala.collection.mutable.Map.empty[String, Long]
-  private var seqCounter = 0L
-  // sessions whose context already carries our eviction listener (weak keys:
-  // the set must not itself pin a stopped session in memory)
-  private val evictionHooked =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-  // per-session working set: the LATEST admitted size per (kind, dir)
-  // key (the session's memo WORKING SET — what the suite would hold
-  // simultaneously if the budget were large enough) and a
-  // once-per-session under-provisioning warning latch. Keyed per entry,
-  // not accumulated per admission (ADVICE round 16): a re-build of the
-  // same key after eviction, a snapshot change, or the over-budget
-  // drop-per-query path REPLACES its old size instead of adding to it,
-  // so long multi-rebuild sessions can't over-report and warn when the
-  // simultaneous set actually fits. Weak keys: a stopped session's
-  // counters must not be pinned. The r15 scale10 sessions measured the
-  // knee (1.17 GB working set vs the 1 GB heap/8 default) from the
-  // admission log by hand; this surfaces the same under-provisioning
-  // the moment it happens instead of after the eviction variance shows
-  // up in a bench.
-  private val workingSet =
-    new java.util.WeakHashMap[
-      SparkSession, scala.collection.mutable.Map[(String, String), Long]]()
-  private val budgetWarnedSet =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+  private type Key = (String, Any)
 
-  /** Memo storage budget in bytes. Default heap/8: the unified memory
-    * manager protects `storageFraction` (half) of unified memory from
-    * execution eviction, so an unbounded memo can legitimately starve a
-    * large shuffle; an eighth of the heap keeps the memo comfortably
-    * inside the protected region while leaving most of it for the
-    * per-query caches that drain between queries.
-    */
+  private sealed trait Entry { def snapshot: String }
+  // store: Left = in-memory tier (owned persisted rows), Right = spill path
+  private final case class Frame(
+      session: SparkSession, snapshot: String, df: DataFrame,
+      store: Either[RDD[Row], String], bytes: Long, seq: Long) extends Entry
+  private final case class Value(snapshot: String, v: Any) extends Entry
+  private final case class Stored(snapshot: String, path: String) extends Entry
+
+  private val slots = scala.collection.mutable.Map.empty[Key, Entry]
+  private val builds = scala.collection.mutable.Map.empty[String, Long]
+  private val inFlight = new java.util.concurrent.ConcurrentHashMap[Key, Object]()
+  private var seqCounter = 0L
+
+  // per-session bookkeeping; weak keys so a stopped session is never pinned
+  private final class SessionState {
+    val workingSet = scala.collection.mutable.Map.empty[Key, Long]
+    var budgetWarned = false
+    var evictionHooked = false
+    // bumped by evict(): a demotion selected before it must not re-insert
+    var epoch = 0L
+  }
+  private val sessions = new java.util.WeakHashMap[SparkSession, SessionState]()
+  private def stateLocked(s: SparkSession): SessionState =
+    Option(sessions.get(s)).getOrElse {
+      val st = new SessionState; sessions.put(s, st); st
+    }
+
+  /** Frame budget in bytes (`spark.graft.memo.maxBytes`, default heap/8). */
   def maxBytes(s: SparkSession): Long =
     s.conf.getOption("spark.graft.memo.maxBytes").map(_.toLong)
       .getOrElse(Runtime.getRuntime.maxMemory() / 8)
 
-  /** Metadata fingerprint (path:mtime:length per file, sorted) of every
-    * file under `inputs`. Driver-side FS listing only — O(files) RPCs, no
-    * data read — so the staleness guard costs microseconds on local disk
-    * and one listing round-trip on an object store.
-    */
-  def snapshot(s: SparkSession, inputs: Seq[String]): String = {
+  /** path:mtime:length of every file under `inputs`, sorted. */
+  private def snapshot(s: SparkSession, inputs: Seq[String]): String = {
     val conf = s.sparkContext.hadoopConfiguration
     inputs.flatMap { in =>
       val p = new org.apache.hadoop.fs.Path(in)
@@ -120,18 +97,156 @@ object SessionMemo {
     }.sorted.mkString("|")
   }
 
-  private def unpersistEntry(e: Entry): Unit = e.store match {
-    case Left(rdd) =>
-      if (!e.session.sparkContext.isStopped) {
+  private def held(k: Key): Option[Entry] = synchronized(slots.get(k))
+
+  /** Serve `lookup` or run `build` under the key's latch; the latch is
+    * dropped once the build settles, so the latch map stays bounded.
+    */
+  private def buildOnce[A](k: Key)(lookup: => Option[A])(build: => A): A =
+    lookup.getOrElse {
+      val latch = inFlight.computeIfAbsent(k, _ => new Object)
+      try latch.synchronized {
+        // a concurrent caller may have finished the build while we waited
+        lookup.getOrElse {
+          val a = build
+          synchronized { builds(k._1) = builds.getOrElse(k._1, 0L) + 1L }
+          a
+        }
+      } finally { inFlight.remove(k, latch); () }
+    }
+
+  private def release(e: Entry): Unit = e match {
+    case Frame(owner, _, _, Left(rdd), _, _) =>
+      if (!owner.sparkContext.isStopped) {
         try rdd.unpersist(blocking = false)
         catch { case _: Throwable => () }
       }
-    case Right(path) => deleteSpill(e.session, path)
+    case Frame(owner, _, _, Right(path), _, _) => deleteSpill(owner, path)
+    case Stored(_, path) => LocalArtifacts.deleteOnExit(path)
+    case _: Value => ()
   }
 
-  /** Delete a spill directory. A spill under a configured shared-FS root
-    * must be deleted through the Hadoop FS (it may be hdfs:///s3a://);
-    * the default local-temp root is a plain directory.
+  /** Replace the entry at `k`, releasing the one it supersedes. */
+  private def putLocked(k: Key, e: Entry): Unit = slots.put(k, e).foreach(release)
+
+  /** The driver-side value for (kind, key), built once per snapshot of
+    * `inputs`.
+    */
+  def value[V](s: SparkSession, kind: String, key: Any, inputs: Seq[String])(
+      build: => V): V = {
+    val k = (kind, key)
+    val snap = snapshot(s, inputs)
+    buildOnce(k)(held(k).collect { case Value(`snap`, v) => v.asInstanceOf[V] }) {
+      val v = build
+      synchronized(putLocked(k, Value(snap, v)))
+      v
+    }
+  }
+
+  /** The artifact directory for (kind, key), built by `build(dir)` into a
+    * fresh temp directory once per snapshot of `inputs`.
+    */
+  def stored(s: SparkSession, kind: String, key: String, inputs: Seq[String])(
+      build: String => Unit): String = {
+    val k = (kind, key)
+    val snap = snapshot(s, inputs)
+    buildOnce(k)(held(k).collect { case Stored(`snap`, p) => p }) {
+      val path = java.nio.file.Files.createTempDirectory(s"graft-$kind").toString
+      try build(path)
+      catch { case e: Throwable => LocalArtifacts.deleteOnExit(path); throw e }
+      synchronized(putLocked(k, Stored(snap, path)))
+      path
+    }
+  }
+
+  /** The frame for (kind, dir), built by `build` once per owning session
+    * and snapshot of `inputs`, then persisted, measured and admitted to a
+    * tier (see the header).
+    */
+  def getOrBuild(s: SparkSession, kind: String, dir: String, inputs: Seq[String])(
+      build: => DataFrame): DataFrame = {
+    val k: Key = (kind, dir)
+    val snap = snapshot(s, inputs)
+    buildOnce(k)(held(k).collect {
+      case f: Frame if (f.session eq s) && f.snapshot == snap && !s.sparkContext.isStopped =>
+        f.df
+    }) {
+      synchronized { slots.remove(k).foreach(release) }
+      val built = build
+      val rdd = built.rdd
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.foreach(_ => ()) // materialize now so the size is measurable
+      val bytes = s.sparkContext.getRDDStorageInfo
+        .find(_.id == rdd.id).map(i => i.memSize + i.diskSize).getOrElse(0L)
+      val df = s.createDataFrame(rdd, built.schema)
+      val budget = maxBytes(s)
+      synchronized {
+        // latest size per key: a rebuild replaces, never adds
+        val st = stateLocked(s)
+        st.workingSet(k) = bytes
+        val tot = st.workingSet.values.sum
+        if (tot > budget && !st.budgetWarned) {
+          st.budgetWarned = true
+          System.err.println(
+            s"[memo] WORKING SET $tot B has crossed the budget $budget B " +
+              "— evictions (and re-builds or disk-tier scans) ahead; size " +
+              "spark.graft.memo.maxBytes to at least the working set " +
+              "(per-entry sizes are in the admission lines above)")
+        }
+      }
+      val spillTo = if (bytes > budget) spillRoot(s) else None
+      System.err.println(
+        s"[memo] $kind: measured $bytes B vs budget $budget B -> " +
+          (if (bytes <= budget) "memory tier"
+           else if (spillTo.isDefined) "disk tier"
+           else "drop (no shared spill root on a non-local master; set spark.graft.memo.diskRoot)"))
+      if (bytes <= budget) {
+        val victims = synchronized {
+          putLocked(k, Frame(s, snap, df, Left(rdd), bytes, nextSeqLocked()))
+          selectVictims(s, k)
+        }
+        // spills run off the admitting query's path; the victims are
+        // already out of the table, so late completion is safe
+        victims.foreach(enqueueDemotion)
+        hookEviction(s)
+        df
+      } else spillTo match {
+        case Some(root) =>
+          // spill from the materialized blocks, then free them; the seq
+          // keeps spill directories of different keys apart
+          val seq = synchronized(nextSeqLocked())
+          val path = s"$root/$kind-$seq"
+          df.write.mode("overwrite").parquet(path)
+          rdd.unpersist(blocking = false)
+          val diskDf = s.read.parquet(path)
+          synchronized(putLocked(k, Frame(s, snap, diskDf, Right(path), bytes, seq)))
+          hookEviction(s)
+          diskDf
+        case None =>
+          // held for this query's consumers only; drained after it
+          CachedRdds.register(rdd)
+          df
+      }
+    }
+  }
+
+  /** Drop every frame `owner` holds, plus the value and stored entries
+    * of `kinds` (JVM-wide). Also cancels any demotion of `owner`'s frames
+    * still in flight.
+    */
+  def evict(owner: SparkSession, kinds: String*): Unit = synchronized {
+    stateLocked(owner).epoch += 1L
+    val dead = slots.filter {
+      case (_, f: Frame) => f.session eq owner
+      case ((kind, _), _) => kinds.contains(kind)
+    }
+    dead.foreach { case (k, e) => release(e); slots.remove(k) }
+  }
+
+  private def nextSeqLocked(): Long = { seqCounter += 1L; seqCounter }
+
+  /** Delete a spill directory through the Hadoop FS (the root may be
+    * hdfs:// or s3a://), falling back to a local delete.
     */
   private def deleteSpill(owner: SparkSession, path: String): Unit =
     if (!owner.sparkContext.isStopped) {
@@ -139,62 +254,25 @@ object SessionMemo {
         val p = new org.apache.hadoop.fs.Path(path)
         p.getFileSystem(owner.sparkContext.hadoopConfiguration).delete(p, true)
         ()
-      } catch { case _: Throwable => deleteLocal(path) }
-    } else deleteLocal(path)
+      } catch { case _: Throwable => LocalArtifacts.deleteRecursively(path) }
+    } else LocalArtifacts.deleteRecursively(path)
 
-  /** Per-JVM root for disk-tier spills; entries are deleted on evict/
-    * replacement/session stop, the root on JVM exit.
-    */
+  /** Per-JVM spill root for local masters, removed on JVM exit. */
   private lazy val diskRoot: java.nio.file.Path = {
     val d = java.nio.file.Files.createTempDirectory("graft-memo-disk")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteLocal(d.toString)))
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => LocalArtifacts.deleteRecursively(d.toString)))
     d
   }
 
-  private def deleteLocal(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    try rm(new java.io.File(path))
-    catch { case _: Throwable => () }
-  }
-
-  /** Drop every entry owned by `owner` (or all when None). Idempotent.
-    * Advancing the eviction epoch also cancels any in-flight demotion
-    * ([[demoteOrDrop]]) of the SAME owner: a victim selected before this
-    * call must not resurrect itself (entry + spill file) after evict()
-    * returned. Epochs are per-owner (plus a global one for evict(None))
-    * so an unrelated tenant's eviction — e.g. another session's stop
-    * listener — cannot cancel this owner's demotion and silently degrade
-    * it to a rebuild-forcing drop.
+  /** `spark.graft.memo.diskRoot` if set; else the per-JVM temp root on a
+    * local master; else None (executors could not read a driver path).
     */
-  def evict(owner: Option[SparkSession]): Unit = synchronized {
-    owner match {
-      case Some(s) => ownerEpochs.put(s, java.lang.Long.valueOf(ownerEpochLocked(s) + 1L))
-      case None => globalEvictEpoch += 1L
-    }
-    val dead = slots.filter { case (_, e) => owner.forall(_ eq e.session) }
-    dead.foreach { case (k, e) => unpersistEntry(e); slots.remove(k) }
-  }
+  private def spillRoot(s: SparkSession): Option[String] =
+    s.conf.getOption("spark.graft.memo.diskRoot")
+      .orElse(if (s.sparkContext.isLocal) Some(diskRoot.toString) else None)
 
-  // demotions re-check these before re-inserting (read/written under the
-  // global lock; weak keys so the map never pins a stopped session)
-  private var globalEvictEpoch: Long = 0L
-  private val ownerEpochs = new java.util.WeakHashMap[SparkSession, java.lang.Long]()
-  private def ownerEpochLocked(s: SparkSession): Long =
-    Option(ownerEpochs.get(s)).map(_.longValue).getOrElse(0L)
-
-  /** Oldest-first victims to bring the memory-tier total under budget.
-    * `keep` (the entry just admitted) is never selected — by construction
-    * it fits the budget alone, and evicting the newest view to protect
-    * older ones would invert the reuse odds. Must be called under the
-    * global lock; victims are REMOVED from the table so no caller serves
-    * them mid-transition, and the caller completes the transition with
-    * [[demoteOrDrop]] OUTSIDE the lock (a spill runs a full Spark job —
-    * the ADVICE-r11 rule that the global lock never spans a job).
-    */
-  private final case class Demotion(
-      key: (String, String), e: Entry, ownerEpoch: Long, globalEpoch: Long)
+  private final case class Demotion(key: Key, e: Frame, epoch: Long)
 
   private lazy val demotionPool = java.util.concurrent.Executors
     .newSingleThreadExecutor((r: Runnable) => {
@@ -225,50 +303,36 @@ object SessionMemo {
     }
   }
 
-  private def selectVictims(
-      s: SparkSession, keep: (String, String)): Seq[Demotion] = {
-    val budget = maxBytes(s)
-    // disk-tier entries hold no storage-region blocks; their footprint is
-    // bounded separately (one spill file per (kind, dir), deleted on
-    // replacement/evict/session stop)
-    var total = slots.valuesIterator.collect {
-      case e if e.store.isLeft => e.bytes
-    }.sum
+  /** Oldest-first in-memory frames to remove until the in-memory total
+    * fits the budget; `keep` (the frame just admitted) is never chosen.
+    * Victims leave the table here, under the lock; the caller spills
+    * them outside it.
+    */
+  private def selectVictims(s: SparkSession, keep: Key): Seq[Demotion] = {
+    val inMemory = slots.toSeq.collect {
+      case (k, f: Frame) if f.store.isLeft => (k, f)
+    }
+    var total = inMemory.map(_._2.bytes).sum
     val out = scala.collection.mutable.ArrayBuffer.empty[Demotion]
-    val victims = slots.toSeq
-      .filter { case (k, e) => k != keep && e.store.isLeft }.sortBy(_._2.seq)
-    val it = victims.iterator
-    while (total > budget && it.hasNext) {
-      val (k, e) = it.next()
+    val it = inMemory.filter(_._1 != keep).sortBy(_._2.seq).iterator
+    while (total > maxBytes(s) && it.hasNext) {
+      val (k, f) = it.next()
       slots.remove(k)
-      out += Demotion(k, e, ownerEpochLocked(e.session), globalEvictEpoch)
-      total -= e.bytes
+      out += Demotion(k, f, stateLocked(f.session).epoch)
+      total -= f.bytes
     }
     out.toSeq
   }
 
-  /** Round-15 eviction upgrade (VERDICT r13 lead 5): a memory-tier
-    * victim is DEMOTED to the disk tier instead of dropped. The scale30
-    * admission log attributed the q_c36/q_c44 10→30× knees to exactly
-    * this path — oldest-first eviction forcing full pipeline rebuilds
-    * while the (default-on, measured 5.5× faster than rebuild) disk tier
-    * sat idle for memory-tier evictees. The spill writes from the
-    * still-persisted blocks (one columnar write, no pipeline re-run),
-    * then frees them; serves are columnar scans like any disk-tier
-    * entry. Falls back to the old drop-and-rebuild when the tier is off
-    * or no shared spill root exists (non-local master without
-    * `spark.graft.memo.diskRoot`).
+  /** Move a victim to the disk tier, under its OWNING session (the
+    * admitting session may be another tenant), or drop it when no spill
+    * root exists. The result is not inserted when the slot was refilled
+    * or the owner was evicted meanwhile.
     */
   private def demoteOrDrop(d: Demotion): Unit = {
-    val Demotion(k, e, ownerEpochAtSelect, globalEpochAtSelect) = d
-    // everything here runs under the VICTIM's owning session — the
-    // admitting session that triggered the eviction may be a different
-    // tenant: the spill job, the tier/root confs, and the re-inserted
-    // entry's ownership must all stay with e.session or the true owner's
-    // next lookup fails the `session eq` check and rebuilds anyway
+    val Demotion(k, e, epochAtSelect) = d
     val owner = e.session
-    val root = if (diskTierEnabled(owner)) spillRoot(owner) else None
-    (root, e.store) match {
+    (spillRoot(owner), e.store) match {
       case (Some(r), Left(rdd)) if !owner.sparkContext.isStopped =>
         val path = s"$r/${k._1}-evict-${e.seq}"
         try {
@@ -276,243 +340,70 @@ object SessionMemo {
           // not the upstream pipeline
           e.df.write.mode("overwrite").parquet(path)
           rdd.unpersist(blocking = false)
-          val diskDf = owner.read.parquet(path)
-          val demoted = Entry(owner, e.snapshot, diskDf, Right(path), e.bytes, e.seq)
+          val demoted = e.copy(df = owner.read.parquet(path), store = Right(path))
           val inserted = synchronized {
-            // a concurrent rebuild may have won the slot, or an evict()
-            // of THIS owner (or a global evict) may have run while we
-            // spilled — either way the demotion must NOT resurrect
-            // state; release the spill instead
-            if (slots.contains(k)
-                || ownerEpochLocked(owner) != ownerEpochAtSelect
-                || globalEvictEpoch != globalEpochAtSelect) false
+            if (slots.contains(k) || stateLocked(owner).epoch != epochAtSelect) false
             else { slots(k) = demoted; true }
           }
           if (inserted) {
             System.err.println(
               s"[memo] ${k._1}: memory-tier eviction -> DEMOTED to disk tier " +
-                s"(${e.bytes} B spilled; spill-serve measured 5.5x over rebuild)")
+                s"(${e.bytes} B spilled)")
           } else {
-            unpersistEntry(demoted)
+            release(demoted)
           }
         } catch {
           case scala.util.control.NonFatal(_) =>
-            unpersistEntry(e)
-            // the partial spill may live on a REMOTE shared root
-            // (spark.graft.memo.diskRoot = hdfs/s3a)
+            release(e)
             deleteSpill(owner, path)
             System.err.println(
               s"[memo] ${k._1}: memory-tier eviction -> dropped (spill failed)")
         }
       case _ =>
-        unpersistEntry(e)
+        release(e)
         System.err.println(
           s"[memo] ${k._1}: memory-tier eviction -> dropped " +
-            "(disk tier unavailable; next access rebuilds)")
+            "(no spill root; next access rebuilds)")
     }
   }
 
-  /** Disk tier is DEFAULT-ON since round 12 (`spark.graft.memo.diskTier=
-    * false` opts out). The round-11 A/B could not certify it — disk-scan
-    * vs rebuild pass-B walls (269 vs 244 s) sat inside a 130–305 s dirty-
-    * window cold spread — but the round-12 clean-window rerun (steady
-    * probes ≤ 0.86 s both legs, post-PPJoin plans) was decisive: with the
-    * scale10 garr forced over a 64 MB budget, pass B served from the
-    * spill in 19.1 s vs 105.9 s drop-and-rebuild (5.5×), and the spill
-    * itself cost ~2 jobs inside pass A's cold-window noise (PERF.md
-    * round 12). On a non-local master without a configured shared
-    * `spark.graft.memo.diskRoot` the tier still falls back to
-    * drop-and-rebuild rather than spill to a driver-only path.
-    */
-  private def diskTierEnabled(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.memo.diskTier").forall(_.toBoolean)
-
-  /** Where disk-tier spills go. The driver-side temp directory is only a
-    * valid spill target when driver and executors share a filesystem —
-    * i.e. local mode; on a real cluster executors would commit parquet to
-    * their OWN local disks and the re-read would silently return partial
-    * data (ADVICE round 11). So: an explicitly configured
-    * `spark.graft.memo.diskRoot` (a shared filesystem — HDFS, s3a, NFS)
-    * wins; otherwise local masters get the per-JVM temp root; otherwise
-    * None — the caller falls back to drop-and-rebuild rather than serve
-    * wrong rows.
-    */
-  private def spillRoot(s: SparkSession): Option[String] =
-    s.conf.getOption("spark.graft.memo.diskRoot")
-      .orElse(if (s.sparkContext.isLocal) Some(diskRoot.toString) else None)
-
-  /** Evict eagerly when the owning session stops, so a long-lived
-    * multi-tenant process doesn't carry dead frames (or spill files)
-    * until the next call.
-    */
+  /** Evict the session's frames when its context stops. */
   private def hookEviction(s: SparkSession): Unit = synchronized {
-    if (evictionHooked.add(s)) {
+    val st = stateLocked(s)
+    if (!st.evictionHooked) {
+      st.evictionHooked = true
       s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          evict(Some(s))
+          evict(s)
       })
-    }
-  }
-
-  /** Return the memoized frame for (kind, dir) when the owning session and
-    * input snapshot still match; otherwise evict the stale entry, run
-    * `build`, persist + materialize it as an owned row RDD, measure it,
-    * and memoize it iff it fits the budget (else it is registered with
-    * [[CachedRdds]] so the harness drains it after the current query).
-    * Session match is REFERENCE equality plus liveness: a restarted
-    * identical session must rebuild, not reuse a plan bound to a stopped
-    * SparkContext. The eager materialization costs the build one extra
-    * no-op action, but the build runs once per session and the action's
-    * stages are exactly the ones the first consumer would have run.
-    */
-  // per-key build guards: the object-wide lock must NOT span a build or a
-  // disk spill (both run full Spark jobs — ADVICE round 11: any concurrent
-  // session touching the memo would block for the whole duration). The
-  // global lock only protects slot lookup/insert; concurrent builds of the
-  // SAME key serialize here, of different keys proceed in parallel.
-  private val inFlight =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Object]()
-
-  private def nextSeq(): Long = synchronized { seqCounter += 1L; seqCounter }
-
-  def getOrBuild(s: SparkSession, kind: String, dir: String, inputs: Seq[String])(
-      build: => DataFrame): DataFrame = {
-    val key = (kind, dir)
-    val snap = snapshot(s, inputs) // metadata-only FS listing; lock-free
-    def lookup(): Option[DataFrame] = synchronized {
-      slots.get(key).collect {
-        case e if (e.session eq s) && e.snapshot == snap && !s.sparkContext.isStopped =>
-          e.df
-      }
-    }
-    lookup().getOrElse {
-      val keyLock = inFlight.computeIfAbsent(key, _ => new Object)
-      keyLock.synchronized {
-        // a concurrent caller may have finished the build while we waited
-        lookup().getOrElse {
-          synchronized { slots.remove(key).foreach(unpersistEntry) }
-          val built = build
-          val rdd = built.rdd
-          rdd.persist(StorageLevel.MEMORY_AND_DISK)
-          rdd.foreach(_ => ()) // materialize now so the size is measurable
-          val bytes = s.sparkContext.getRDDStorageInfo
-            .find(_.id == rdd.id).map(i => i.memSize + i.diskSize).getOrElse(0L)
-          val df = s.createDataFrame(rdd, built.schema)
-          synchronized {
-            builds(kind) = builds.getOrElse(kind, 0L) + 1L
-            // per-key working-set update (latest size wins — a rebuild
-            // replaces, never adds); warn ONCE when the simultaneous
-            // total first crosses the budget — the operator's cue to
-            // raise spark.graft.memo.maxBytes (or the heap) to >= the
-            // working set before run-to-run victim variance does the
-            // telling
-            val perKey = Option(workingSet.get(s)).getOrElse {
-              val m = scala.collection.mutable.Map.empty[(String, String), Long]
-              workingSet.put(s, m); m
-            }
-            perKey(key) = bytes
-            val tot = perKey.values.sum
-            if (tot > maxBytes(s) && budgetWarnedSet.add(s))
-              System.err.println(
-                s"[memo] WORKING SET $tot B has crossed the budget ${maxBytes(s)} B " +
-                  "— evictions (and re-builds or disk-tier scans) ahead; size " +
-                  "spark.graft.memo.maxBytes to at least the working set " +
-                  "(per-entry sizes are in the admission lines above)")
-          }
-          val spillTo = if (bytes > maxBytes(s) && diskTierEnabled(s)) spillRoot(s) else None
-          // one admission line per build: the tier decision is the whole
-          // story when reading a bench (memo-warm vs rebuild vs disk scan)
-          System.err.println(
-            s"[memo] $kind: measured $bytes B vs budget ${maxBytes(s)} B -> " +
-              (if (bytes > maxBytes(s)) {
-                 if (!diskTierEnabled(s)) "drop (rebuild per query)"
-                 else if (spillTo.isDefined) "disk tier"
-                 else "drop (disk tier requested but no shared spill root on a non-local master; set spark.graft.memo.diskRoot)"
-               } else "memory tier"))
-          if (bytes > maxBytes(s)) {
-            spillTo match {
-              case Some(root) =>
-                // DISK TIER (round 11): the round-10 displacement A/B showed
-                // holding an over-budget frame in the storage region makes the
-                // SAME session 2.2x slower, but dropping it forces pass B to
-                // rebuild the whole upstream pipeline (scale10 garr: 62.9 s).
-                // Middle path: spill ONCE to session-local parquet from the
-                // already-materialized blocks, free the blocks immediately,
-                // and serve columnar scans of the spill on every reuse —
-                // no storage-region occupancy, no pipeline rebuild. The spill
-                // directory is keyed by the entry's unique seq counter, never
-                // a 32-bit content hash: a hash collision between two
-                // (kind, dir) slots would silently cross-link their files
-                // (admission overwriting the other's parquet, eviction
-                // deleting it — ADVICE round 11).
-                val seq = nextSeq()
-                val path = s"$root/$kind-$seq"
-                df.write.mode("overwrite").parquet(path)
-                rdd.unpersist(blocking = false)
-                val diskDf = s.read.parquet(path)
-                synchronized {
-                  slots.put(key, Entry(s, snap, diskDf, Right(path), bytes, seq))
-                    .foreach(unpersistEntry)
-                }
-                hookEviction(s)
-                diskDf
-              case None =>
-                // diagnostic fallback (A/B) AND the safe cluster-mode path
-                // when no shared spill root exists: keep it persisted for
-                // THIS query's consumers, drain it after, rebuild next query
-                CachedRdds.register(rdd)
-                df
-            }
-          } else {
-            val seq = nextSeq()
-            val victims = synchronized {
-              // put (not update) so a racing demotion's re-insert can't
-              // be silently clobbered without releasing its spill
-              slots.put(key, Entry(s, snap, df, Left(rdd), bytes, seq))
-                .foreach(unpersistEntry)
-              selectVictims(s, key)
-            }
-            // demotions run ASYNC on the single demotion thread: the
-            // admitting query (possibly a tiny frame of another tenant)
-            // must not block on a victim's whole-frame parquet write.
-            // The victim is already out of the table, so late completion
-            // is safe (the epoch/slot checks handle every interleaving);
-            // the only cost is the victim's blocks staying persisted for
-            // the spill's duration.
-            victims.foreach(enqueueDemotion)
-            hookEviction(s)
-            df
-          }
-        }
-      }
     }
   }
 
   /** Test hook: the session's simultaneous working set (Σ latest
     * admitted size per key — rebuilds of a key replace, never add). */
   private[graft] def sessionWorkingSet(s: SparkSession): Long =
-    synchronized(Option(workingSet.get(s)).map(_.values.sum).getOrElse(0L))
+    synchronized(Option(sessions.get(s)).map(_.workingSet.values.sum).getOrElse(0L))
 
   /** Test hook: whether the under-provisioning warning fired for `s`. */
   private[graft] def budgetWarned(s: SparkSession): Boolean =
-    synchronized(budgetWarnedSet.contains(s))
+    synchronized(Option(sessions.get(s)).exists(_.budgetWarned))
 
   /** Test hook: whether any entry of this kind is currently held. */
   private[graft] def occupied(kind: String): Boolean =
     synchronized(slots.keys.exists(_._1 == kind))
 
-  /** Test hook: how many times `build` has run for this kind (JVM-wide). */
+  /** Test hook: how many times a build has run for this kind (JVM-wide). */
   private[graft] def buildCount(kind: String): Long =
     synchronized(builds.getOrElse(kind, 0L))
 
-  /** Test hook: measured bytes of the held entry, if any. */
+  /** Test hook: measured bytes of the held frame, if any. */
   private[graft] def heldBytes(kind: String): Option[Long] =
-    synchronized(slots.collectFirst { case ((k, _), e) if k == kind => e.bytes })
+    synchronized(slots.collectFirst { case ((k, _), f: Frame) if k == kind => f.bytes })
 
-  /** Test hook: the disk-tier spill path of the held entry, if any. */
+  /** Test hook: the disk-tier spill path of the held frame, if any. */
   private[graft] def heldOnDisk(kind: String): Option[String] =
     synchronized(slots.collectFirst {
-      case ((k, _), e) if k == kind && e.store.isRight => e.store.toOption.get
+      case ((k, _), Frame(_, _, _, Right(path), _, _)) if k == kind => path
     })
 }

@@ -69,6 +69,20 @@ object CharBigramStats {
     */
   private def q6micros(d: Double): Long = graft.core.Decimals.micros6(d)
 
+  /** Power-of-two capacity (min 8, > 2n) of an open-addressed table for
+    * `n` bigram keys, shared with [[TokenRepStats]]. A document with 2^28
+    * or more bigrams needs a >= 16 GiB table and is outside a per-row
+    * kernel's envelope; it fails here with a clear error, before the
+    * capacity overflows Int (at n >= 2^29) and collapses the table.
+    */
+  private[graft] def tableCapacity(kernel: String, n: Int): Int = {
+    if (n >= (1 << 28)) throw new IllegalArgumentException(
+      s"$kernel: document with $n bigrams exceeds the supported " +
+        "2^28 per-document limit")
+    val capL = java.lang.Long.highestOneBit(n.toLong * 4 - 1) << 1
+    if (capL < 8) 8 else capL.toInt
+  }
+
   /** One pass over the lowered text; called from interpreted eval and
     * generated code (one monomorphic static call per row).
     */
@@ -88,17 +102,8 @@ object CharBigramStats {
       i += Character.charCount(cp)
     }
     val n = nChars - 1
-    // open-addressed long->long map; capacity > 2n keeps load factor < 0.5.
-    // Capacity math in Long: `n * 4 - 1` overflows Int at n >= 2^29, which
-    // would collapse the table to capacity 8 and turn the probe loop into
-    // an executor hang. A single document that large (>2^28 bigrams needs
-    // a >=16 GiB table) is outside this per-row kernel's envelope — fail
-    // fast with a clear error instead.
-    if (n >= (1 << 28)) throw new IllegalArgumentException(
-      s"char_bigram_stats: document with $n bigrams exceeds the supported " +
-        "2^28 per-document limit")
-    val capL = java.lang.Long.highestOneBit(n.toLong * 4 - 1) << 1
-    val cap = if (capL < 8) 8 else capL.toInt
+    // open-addressed long->long map; capacity > 2n keeps load factor < 0.5
+    val cap = tableCapacity("char_bigram_stats", n)
     val mask = cap - 1
     val keys = new Array[Long](cap)
     val cnts = new Array[Long](cap)

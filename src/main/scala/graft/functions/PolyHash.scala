@@ -74,43 +74,57 @@ object PolyHash {
 
   val P: Long = 1000000007L
 
-  /** The fold over code points. ASCII fast path: when every byte is a
-    * single-byte sequence (numBytes == numChars) the bytes ARE the code
-    * points; otherwise decode code points exactly as `split(s, '')` +
-    * `ascii` would (both operate on code points).
+  /** The fold over the characters `split(s, '')` yields, each valued
+    * as `ascii` values it (its first code point). ASCII fast path: while
+    * every byte is below 0x80 the bytes ARE the code points. Any other
+    * byte sends the string through [[computeDecoded]] — counting
+    * characters instead (numBytes == numChars) would keep malformed
+    * UTF-8 on the byte path and fold raw negative bytes.
     */
   def compute(s: UTF8String): Long = {
     val nb = s.numBytes
-    if (nb == s.numChars) {
-      var acc = 0L
-      var i = 0
-      while (i < nb) {
-        acc = (acc * 31L + s.getByte(i)) % P
-        i += 1
-      }
-      acc
-    } else {
+    var acc = 0L
+    var i = 0
+    while (i < nb) {
+      val b = s.getByte(i)
+      if (b < 0) return computeDecoded(s)
+      acc = (acc * 31L + b) % P
+      i += 1
+    }
+    acc
+  }
+
+  /** Valid UTF-8: fold the decoded code points. Malformed UTF-8: fold
+    * the split characters one by one (Spark's lead-byte lengths, each
+    * decoded on its own, so a bad byte reads as U+FFFD exactly where
+    * `ascii` of that character would).
+    */
+  private def computeDecoded(s: UTF8String): Long = {
+    var acc = 0L
+    if (s.isValid) {
       val str = s.toString
-      var acc = 0L
       var i = 0
-      val n = str.length
-      while (i < n) {
+      while (i < str.length) {
         val cp = str.codePointAt(i)
         acc = (acc * 31L + cp) % P
         i += Character.charCount(cp)
       }
-      acc
+    } else {
+      val bytes = s.getBytes
+      var i = 0
+      while (i < bytes.length) {
+        val len = math.min(UTF8String.numBytesForFirstByte(bytes(i)), bytes.length - i)
+        val cp = new String(bytes, i, len, java.nio.charset.StandardCharsets.UTF_8).codePointAt(0)
+        acc = (acc * 31L + cp) % P
+        i += len
+      }
     }
+    acc
   }
 
-  /** 31^codepoints(s) mod p — the composition weight of appending `s`. */
+  /** 31^chars(s) mod p — the composition weight of appending `s`. */
   def pow31(s: UTF8String): Long = {
-    val n =
-      if (s.numBytes == s.numChars) s.numBytes
-      else {
-        val str = s.toString
-        str.codePointCount(0, str.length)
-      }
+    val n = s.numChars
     var r = 1L
     var b = 31L
     var e = n
@@ -225,24 +239,29 @@ object GramHashes {
 }
 
 /** `sliding_min(hs, w)` — see [[PolyHash]] header. Input must be an
-  * ARRAY<BIGINT> with no NULL elements (gram_hashes output); `w` must be
-  * a foldable positive integer.
+  * ARRAY<BIGINT> whose type excludes NULL elements (gram_hashes output),
+  * or analysis fails; `w` must be a foldable positive integer. An empty
+  * input gives `[NULL]`, the HOF's `array(array_min(hs))`.
   */
 case class SlidingMin(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), IntegerType) =>
+      case (ArrayType(LongType, false), IntegerType) =>
         if (!right.foldable)
           TypeCheckResult.TypeCheckFailure("sliding_min: w must be foldable")
         else TypeCheckResult.TypeCheckSuccess
+      case (ArrayType(LongType, true), _) => TypeCheckResult.TypeCheckFailure(
+        "sliding_min requires an ARRAY<BIGINT> without NULL elements " +
+          "(containsNull = false), as gram_hashes produces")
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"sliding_min requires (ARRAY<BIGINT>, INT), got " +
           s"(${l.catalogString}, ${r.catalogString})")
     }
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  // containsNull: an empty input yields [NULL]
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
 
   override def nullSafeEval(arr: Any, w: Any): Any =
     SlidingMin.compute(arr.asInstanceOf[ArrayData], w.asInstanceOf[Int])
@@ -262,7 +281,7 @@ object SlidingMin {
     require(w > 0, "sliding_min: w must be positive")
     val n = arr.numElements()
     val xs = arr.toLongArray()
-    if (n == 0) return new GenericArrayData(Array.empty[Long])
+    if (n == 0) return new GenericArrayData(Array[Any](null))
     if (n < w) {
       // the `otherwise(array(array_min(hs)))` branch: one global min
       var mn = xs(0)

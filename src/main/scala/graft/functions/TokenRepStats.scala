@@ -102,8 +102,7 @@ object TokenRepStats {
     // (the CharBigramStats layout; ids < nTok ≤ 2^31, +1 keeps keys
     // nonzero so 0 marks an empty slot)
     val nBig = nTok - 1
-    val capL = java.lang.Long.highestOneBit(nBig.toLong * 4 - 1) << 1
-    val cap = if (capL < 8) 8 else capL.toInt
+    val cap = CharBigramStats.tableCapacity("token_rep_stats", nBig)
     val mask = cap - 1
     val keys = new Array[Long](cap)
     val cnts = new Array[Long](cap)

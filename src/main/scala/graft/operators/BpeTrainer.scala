@@ -71,27 +71,17 @@ object BpeTrainer {
       .groupBy(col("word")).agg(count(lit(1)).as("wf"))
       .select(col("wf"), expr("filter(split(word, ''), c -> c <> '')").as("syms"))
 
-  // learned merges are pure model data (a tiny Seq, not bound to any
-  // session), so q_c33/q_c34/q_c35 share one training run per
-  // (dir, nMerges) instead of each retraining identical merges; the
-  // content snapshot (metadata-only listing, the SessionMemo discipline)
-  // invalidates on regeneration. Test hook: [[clearModelCache]].
-  // BuildOnceCache holds the lock ACROSS the build so two concurrent
-  // first callers share one training run instead of duplicating it.
-  private val modelCache =
-    new graft.core.BuildOnceCache[(String, Int), Seq[Merge]]
-
-  private[graft] def clearModelCache(): Unit = modelCache.clear()
-
-  /** Learn `nMerges` merges (cached per (dir, nMerges) + content
-    * snapshot). Each round materializes one 1-row argmax on the driver;
-    * the evolving symbol table stays distributed (persisted per round,
-    * predecessor unpersisted).
+  /** Learn `nMerges` merges. The merges are pure model data, so
+    * q_c33/q_c34/q_c35 share one training run per (dir, nMerges) and
+    * corpus snapshot (a SessionMemo value of kind `bpe_merges`). Each
+    * round materializes one 1-row argmax on the driver; the evolving
+    * symbol table stays distributed (persisted per round, predecessor
+    * unpersisted).
     */
-  def train(s: SparkSession, d: String, nMerges: Int): Seq[Merge] = {
-    val snap = graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))
-    modelCache.getOrBuild((d, nMerges), snap)(trainUncached(s, d, nMerges))
-  }
+  def train(s: SparkSession, d: String, nMerges: Int): Seq[Merge] =
+    graft.core.SessionMemo.value(
+      s, "bpe_merges", (d, nMerges), Seq(s"$d/documents.parquet"))(
+      trainUncached(s, d, nMerges))
 
   private def trainUncached(s: SparkSession, d: String, nMerges: Int): Seq[Merge] = {
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]

@@ -328,15 +328,11 @@ object DedupQueries {
       .write.mode("overwrite").parquet(s"$path/sigs")
 
   /** Session-stable index location — the shared
-    * [[graft.core.StoredArtifact]] lifecycle (content-snapshot guard,
+    * SessionMemo stored-entry lifecycle (content-snapshot guard,
     * per-key build latch, deferred deletion of abandoned snapshots).
     */
-  private val minhashIdxBuilt =
-    new graft.core.StoredArtifact("graft-minhash-index")
-
   private[graft] def minhashIndex(s: SparkSession, d: String): String =
-    minhashIdxBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) {
+    graft.core.SessionMemo.stored(s, "minhash-index", d, Seq(s"$d/documents.parquet")) {
       path => buildMinhashIndex(s, d, path)
     }
 
@@ -1684,12 +1680,8 @@ object DedupQueries {
     * append scenario — same lifecycle as [[minhashIndex]], cached under
     * its own key.
     */
-  private val minhashBaseBuilt =
-    new graft.core.StoredArtifact("graft-minhash-base")
-
   private[graft] def minhashBaseIndex(s: SparkSession, d: String): String =
-    minhashBaseBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "minhash-base", d, Seq(s"$d/documents.parquet")) { path =>
       minhashSignatures(s, d)
         .filter(col("doc_id") % 10 =!= 3)
         .repartitionByRange(col("doc_id"))
@@ -1701,12 +1693,8 @@ object DedupQueries {
     * each persisted as their own doc_id-sorted segment (the bm25/phrase
     * segments pattern).
     */
-  private val minhashSegmentsBuilt =
-    new graft.core.StoredArtifact("graft-minhash-segments")
-
   private[graft] def minhashSegmentsIndex(s: SparkSession, d: String): String =
-    minhashSegmentsBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "minhash-segments", d, Seq(s"$d/documents.parquet")) { path =>
       val sigs = minhashSignatures(s, d)
       Seq(("seg0", col("doc_id") % 10 =!= 3), ("seg1", col("doc_id") % 10 === 3))
         .foreach { case (seg, pred) =>
@@ -1721,12 +1709,8 @@ object DedupQueries {
     * doc_id-range-sorted table. Keyed on the segment directory's
     * snapshot — compaction is a function of the stored segments alone.
     */
-  private val minhashCompactedBuilt =
-    new graft.core.StoredArtifact("graft-minhash-compacted")
-
   private[graft] def minhashCompactedIndex(s: SparkSession, segPath: String): String =
-    minhashCompactedBuilt.getOrBuild(
-      segPath, graft.core.SessionMemo.snapshot(s, Seq(segPath))) { path =>
+    graft.core.SessionMemo.stored(s, "minhash-compacted", segPath, Seq(segPath)) { path =>
       s.read.parquet(s"$segPath/seg0/sigs", s"$segPath/seg1/sigs")
         .repartitionByRange(col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
@@ -1739,11 +1723,8 @@ object DedupQueries {
     * artifact copy (GC is destructive by design — it never acts on
     * q_c134's shared segments store).
     */
-  private val minhashGcBuilt = new graft.core.StoredArtifact("graft-minhash-gc")
-
   private[graft] def minhashGcIndex(s: SparkSession, d: String): String =
-    minhashGcBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "minhash-gc", d, Seq(s"$d/documents.parquet")) { path =>
       val sigs = minhashSignatures(s, d)
       Seq(("seg0", col("doc_id") % 10 =!= 3), ("seg1", col("doc_id") % 10 === 3))
         .foreach { case (seg, pred) =>

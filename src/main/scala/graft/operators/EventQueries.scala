@@ -127,14 +127,6 @@ object EventQueries {
     * partitions but not decompose an ordered per-key window).
     */
   private[graft] object Dispatch {
-    // cache the MEASURED top-user share (not the decision): the threshold
-    // is session conf, and caching the boolean would leak one session's
-    // skewShare setting into another's dispatch. Keyed by (path, sample
-    // size) and guarded by the content snapshot; an empty table probes
-    // as share 0.
-    private val cache =
-      scala.collection.mutable.Map.empty[(String, Int), (String, Double)]
-
     private def conf(s: SparkSession, key: String, dflt: String): String =
       s.conf.getOption(key).getOrElse(dflt)
 
@@ -150,40 +142,38 @@ object EventQueries {
           }
       }
 
-    /** Top-user share over a bounded head sample, cached per content
-      * snapshot (metadata-only FS listing, the SessionMemo discipline).
+    /** Top-user share over a bounded head sample; an empty table probes
+      * as share 0. The MEASURED share is cached (a SessionMemo value per
+      * (path, sample size) and table snapshot), not the decision: the
+      * threshold is session conf, and caching the boolean would leak one
+      * session's skewShare setting into another's dispatch.
       */
     private def probedShare(s: SparkSession, d: String): Double = {
       val path = s"$d/events.parquet"
       val rows = conf(s, "spark.graft.events.skewSampleRows", "1000000").toInt
-      val snap = graft.core.SessionMemo.snapshot(s, Seq(path))
-      cache.synchronized(cache.get((path, rows)).filter(_._1 == snap).map(_._2))
-        .getOrElse {
-          // head sample (LocalLimit over the leading row groups) PLUS an
-          // explicit sample of the lexicographically LAST part file
-          // (round-14 lead 2): a hot key whose rows land only in later
-          // files is invisible to the head — the tail read covers the
-          // other placement extreme at the same bounded cost. Still a
-          // heuristic (a hot key purely mid-table evades both ends —
-          // `salted=on` exists for workloads that know); rows may be
-          // double-counted when the table is a single file, which only
-          // biases the share estimate of data both samples saw anyway.
-          val head = s.read.parquet(path).select(col("user_id")).limit(rows / 2)
-          val sample = lastPartFile(s, path) match {
-            case Some(last) =>
-              head.unionAll(
-                s.read.parquet(last).select(col("user_id")).limit(rows / 2))
-            case None => head
-          }
-          val agg = sample
-            .groupBy(col("user_id")).agg(count(lit(1)).as("c"))
-            .agg(max(col("c")).as("mx"), sum(col("c")).as("n")).head()
-          val share =
-            if (agg.isNullAt(0)) 0.0
-            else agg.getLong(0).toDouble / agg.getLong(1).toDouble
-          cache.synchronized { cache((path, rows)) = (snap, share) }
-          share
+      graft.core.SessionMemo.value(s, "events_top_share", (path, rows), Seq(path)) {
+        // head sample (LocalLimit over the leading row groups) PLUS an
+        // explicit sample of the lexicographically LAST part file
+        // (round-14 lead 2): a hot key whose rows land only in later
+        // files is invisible to the head — the tail read covers the
+        // other placement extreme at the same bounded cost. Still a
+        // heuristic (a hot key purely mid-table evades both ends —
+        // `salted=on` exists for workloads that know); rows may be
+        // double-counted when the table is a single file, which only
+        // biases the share estimate of data both samples saw anyway.
+        val head = s.read.parquet(path).select(col("user_id")).limit(rows / 2)
+        val sample = lastPartFile(s, path) match {
+          case Some(last) =>
+            head.unionAll(
+              s.read.parquet(last).select(col("user_id")).limit(rows / 2))
+          case None => head
         }
+        val agg = sample
+          .groupBy(col("user_id")).agg(count(lit(1)).as("c"))
+          .agg(max(col("c")).as("mx"), sum(col("c")).as("n")).head()
+        if (agg.isNullAt(0)) 0.0
+        else agg.getLong(0).toDouble / agg.getLong(1).toDouble
+      }
     }
 
     /** The lexicographically last parquet part file under `path`, when

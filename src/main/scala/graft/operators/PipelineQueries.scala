@@ -805,8 +805,8 @@ object PipelineQueries {
       import graft.functions.BloomFilterOps
       val docs = Tables.raw(s, d, "documents")
       val retained = docs.filter(col("doc_id") % 10 =!= 3).select(md5(col("text")).as("h"))
-      val snap = graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))
-      val bits = bloomBuilt.getOrBuild(d, snap)(
+      val bits = graft.core.SessionMemo.value(
+        s, "bloom_bits", d, Seq(s"$d/documents.parquet"))(
         BloomFilterOps.build(retained, BloomM, BloomK))
       val fn = BloomFilterOps.register(s, bits, BloomM, BloomK)
       val incoming = docs.filter(col("doc_id") % 2 === 1)
@@ -2882,31 +2882,22 @@ object PipelineQueries {
     * between queries, so a persisted-block serve could face an
     * unrecomputable parent on block loss — a parquet read is
     * lineage-free. The frame is O(graph nodes): tiny, bytes not
-    * corpus-sized.
+    * corpus-sized. Both edge suppliers (this one, `cc-fam`, and the
+    * winnowing twin, `wn-fam`) run through this one star-CC
+    * build-and-store.
     */
-  private val ccFamBuilt = new graft.core.StoredArtifact("graft-cc-fam")
-
-  /** ONE copy of the stored-family lifecycle (snapshot keying, parquet
-    * layout, lineage-free serve — the rationale documented above): both
-    * edge suppliers run through the identical star-CC build-and-store.
-    */
-  private def familiesShared(
-      s: SparkSession, d: String, artifact: graft.core.StoredArtifact)(
+  private def familiesShared(s: SparkSession, d: String, kind: String)(
       edges: => DataFrame): DataFrame = {
-    val path = artifact.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) {
-      p =>
-        connectedComponentsStar(s, edges)
-          .write.mode("overwrite").parquet(s"$p/fam")
+    val path = graft.core.SessionMemo.stored(
+      s, kind, d, Seq(s"$d/documents.parquet")) { p =>
+      connectedComponentsStar(s, edges)
+        .write.mode("overwrite").parquet(s"$p/fam")
     }
     s.read.parquet(s"$path/fam")
   }
 
   def ccFamiliesShared(s: SparkSession, d: String): DataFrame =
-    familiesShared(s, d, ccFamBuilt)(DedupQueries.minhashCandidatesShared(s, d))
-
-  /** Test hook (JobCountGateSpec cold-state discipline). */
-  def clearCcFamilies(): Unit = ccFamBuilt.clear()
+    familiesShared(s, d, "cc-fam")(DedupQueries.minhashCandidatesShared(s, d))
 
   /** The winnowing-fed twin of [[ccFamiliesShared]]: star-CC over
     * q_c75's fingerprint-overlap pairs, one build per corpus snapshot
@@ -2914,39 +2905,26 @@ object PipelineQueries {
     * two-pass discipline and any future winnow-family consumer serve
     * from the stored fixpoint instead of re-iterating CC).
     */
-  private val wnFamBuilt = new graft.core.StoredArtifact("graft-wn-fam")
-
   def wnFamiliesShared(s: SparkSession, d: String): DataFrame =
-    familiesShared(s, d, wnFamBuilt)(
+    familiesShared(s, d, "wn-fam")(
       DedupQueries.winnowPairs(s, d).select(col("doc_a"), col("doc_b")))
-
-  /** Test hook (JobCountGateSpec cold-state discipline). */
-  def clearWnFamilies(): Unit = wnFamBuilt.clear()
 
   /** q_c61's Bloom geometry: m = 2^20 bits (128 KiB driver/executor
     * footprint), k = 5 hashes. FP rate ~(nk/m)^k — effectively zero at
     * the harness corpus sizes; at 10^9 retained keys a deployment sizes
     * m to ~10 bits/key the same way (the bits build is corpus-size-free
-    * in memory either way). The build is content-snapshot memoized.
+    * in memory either way). The bits are a SessionMemo value of kind
+    * `bloom_bits`, built once per corpus snapshot.
     */
   private val BloomM = 1 << 20
   private val BloomK = 5
-  private val bloomBuilt = new graft.core.BuildOnceCache[String, Array[Long]]
 
-  /** Test hook (JobCountGateSpec cold-state discipline): drop the memoized
-    * Bloom summary so a gated q_c61 run pays its build jobs.
-    */
-  def clearBloomCache(): Unit = bloomBuilt.clear()
-
-  /** q_c51's session-scoped JSONL export location — the shared
-    * [[graft.core.StoredArtifact]] lifecycle: the corpus is exported
+  /** q_c51's session-scoped JSONL export location — a SessionMemo
+    * stored entry (`docs-jsonl`): the corpus is exported
     * once per corpus version and re-read by every repeat invocation.
     */
-  private val jsonlBuilt = new graft.core.StoredArtifact("graft-docs-jsonl")
-
   private def jsonlExport(s: SparkSession, d: String): String =
-    jsonlBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) {
+    graft.core.SessionMemo.stored(s, "docs-jsonl", d, Seq(s"$d/documents.parquet")) {
       path =>
         Tables(s, d, "documents")
           .write.mode("overwrite").option("compression", "gzip").json(path)
@@ -3216,7 +3194,7 @@ object PipelineQueries {
     graft.core.SessionMemo.getOrBuild(
       s, "decontam_report", d, Seq(s"$d/documents.parquet"))(decontamReportBuild(s, d))
 
-  private def decontamReportBuild(s: SparkSession, d: String): DataFrame = {
+  private[graft] def decontamReportBuild(s: SparkSession, d: String): DataFrame = {
     val n = 13
     val toks = Tables(s, d, "documents")
       .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))

@@ -53,11 +53,6 @@ object QualityClassifierTrainer {
 
   final case class Model(wBias: Double, w: Array[Double], trajectory: Seq[IterStat])
 
-  // one training run per (dir, iters) + content snapshot (the BpeTrainer
-  // model-cache discipline); the model is pure data, not session-bound
-  private val modelCache = new graft.core.BuildOnceCache[(String, Int), Model]
-  private[graft] def clearModelCache(): Unit = modelCache.clear()
-
   /** The (doc_id, y, n_tokens, cnts[D]) training frame — ONE map-side
     * projection over documents (labels from the registered rules filter,
     * features from the registered bucket hash), session-memoized so the
@@ -133,13 +128,14 @@ object QualityClassifierTrainer {
     * (measured on both driver fixtures: loss monotone at every step AND
     * positive class separation by iteration 24; η = 0.5 × 12 left the
     * sf0.01 separation at zero)
-    * (cached per (dir, iters) + snapshot). Each iteration collects ONE
-    * row; the feature frame is built once.
+    * (a SessionMemo value of kind `cls_weights` per (dir, iters) and
+    * corpus snapshot — the model is pure data, not session-bound). Each
+    * iteration collects ONE row; the feature frame is built once.
     */
-  def train(s: SparkSession, d: String, iters: Int): Model = {
-    val snap = graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))
-    modelCache.getOrBuild((d, iters), snap)(trainUncached(s, d, iters))
-  }
+  def train(s: SparkSession, d: String, iters: Int): Model =
+    graft.core.SessionMemo.value(
+      s, "cls_weights", (d, iters), Seq(s"$d/documents.parquet"))(
+      trainUncached(s, d, iters))
 
   /** The per-row scored frame at weights (wBias, w): margin, sigmoid,
     * clamp, quantized residuals and loss — ONE definition shared by the
@@ -223,9 +219,6 @@ object QualityClassifierTrainer {
                              trainCorrect: Long, valCorrect: Long,
                              trainLossMicros: Long, valLossMicros: Long)
 
-  private val splitModelCache =
-    new graft.core.BuildOnceCache[(String, Int), (Double, Array[Double], Seq[SplitStat])]
-
   /** q_c139's holdout-validated training: gradient from the q_c37 TRAIN
     * split only (the REGISTERED split rule — [[PipelineQueries
     * .splitBucket]] < 800), per-iteration loss/agreement reported for
@@ -242,9 +235,9 @@ object QualityClassifierTrainer {
     * clean-holdout discipline applied to model training).
     */
   private[graft] def trainSplit(s: SparkSession, d: String, iters: Int)
-      : (Double, Array[Double], Seq[SplitStat]) = {
-    val snap = graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))
-    splitModelCache.getOrBuild((d, iters), snap) {
+      : (Double, Array[Double], Seq[SplitStat]) =
+    graft.core.SessionMemo.value(
+      s, "cls_split_weights", (d, iters), Seq(s"$d/documents.parquet")) {
       val f = featureFrame(s, d)
         .withColumn("tr", (PipelineQueries.splitBucket < 800).cast("boolean"))
         .withColumn("va", (PipelineQueries.splitBucket >= 800
@@ -285,11 +278,10 @@ object QualityClassifierTrainer {
       }
       (wBias, w, traj.toSeq)
     }
-  }
 
   /** The trained model persisted as an ENGINE-NEUTRAL parquet artifact —
     * the same stored-index discipline as the BM25/MinHash/IVF/phrase
-    * families ([[graft.core.StoredArtifact]] lifecycle): `weights/`
+    * families (the SessionMemo stored-entry lifecycle): `weights/`
     * holds one (bucket, weight) row per feature and `meta/` one row of
     * (w_bias, eta, iters, d, n_docs) hyperparameters, so ANY parquet
     * reader can score the corpus from the artifact alone — no session
@@ -299,12 +291,8 @@ object QualityClassifierTrainer {
     * inputs give equal bits). 65 doubles: the artifact is O(model),
     * never O(corpus).
     */
-  private val modelArtifactBuilt = new graft.core.StoredArtifact("graft-cls-model")
-
   private[graft] def modelArtifact(s: SparkSession, d: String, iters: Int = 24): String =
-    modelArtifactBuilt.getOrBuild(
-      s"$d#$iters",
-      graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "cls-model", s"$d#$iters", Seq(s"$d/documents.parquet")) { path =>
       writeModelArtifact(s, path, train(s, d, iters), iters,
         scoresDf(s, d, iters))
     }
@@ -388,13 +376,9 @@ object QualityClassifierTrainer {
     * refreshed model actually saw. O(model) artifact; the retrain costs
     * `iters` aggregation-only scans of the union feature frame.
     */
-  private val retrainedBuilt = new graft.core.StoredArtifact("graft-cls-retrained")
-
   private[graft] def retrainedArtifact(
       s: SparkSession, d: String, iters: Int = 24): String =
-    retrainedBuilt.getOrBuild(
-      s"$d#$iters",
-      graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "cls-retrained", s"$d#$iters", Seq(s"$d/documents.parquet")) { path =>
       val batch = driftBatch(s, modelArtifact(s, d, iters))
       val f = featureFrame(s, d).unionByName(featurize(batch))
       val m = trainOnFrame(f, iters)

@@ -938,7 +938,7 @@ object SimilarityQueries {
   }
 
   /** BASE-corpus (vec_id % 10 <> 3) stored int8-IVF index for q_c71's
-    * append scenario — the shared [[graft.core.StoredArtifact]]
+    * append scenario — the shared SessionMemo stored-entry
     * lifecycle. Unlike the MinHash/BM25 base indexes, this one persists
     * its MODEL with its codes: the Lloyd-trained centroid matrix (`cents`)
     * and the (dim, nprobe, k) triple (`model`), so a warm serve — or the
@@ -946,11 +946,8 @@ object SimilarityQueries {
     * without retraining. k·dim doubles ≤ 50 MB by the trainIvf cap: model
     * parameters, not data.
     */
-  private val int8BaseBuilt = new graft.core.StoredArtifact("graft-int8-base")
-
   private[graft] def int8BaseIndex(s: SparkSession, d: String): String =
-    int8BaseBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/embeddings.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "int8-base", d, Seq(s"$d/embeddings.parquet")) { path =>
       val eb = graft.core.CachedRdds.registerDf(
         embDouble(s, d).filter(col("vec_id") % 10 =!= 3)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -992,12 +989,8 @@ object SimilarityQueries {
     * coded under the FROZEN quantizer (q_c71's append discipline — the
     * base floats are never re-read).
     */
-  private val int8SegmentsBuilt =
-    new graft.core.StoredArtifact("graft-int8-segments")
-
   private[graft] def int8SegmentsIndex(s: SparkSession, d: String): String =
-    int8SegmentsBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/embeddings.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "int8-segments", d, Seq(s"$d/embeddings.parquet")) { path =>
       val base = int8BaseIndex(s, d)
       val (fn, _, _) = frozenQuantizer(s, base)
       graft.functions.Int8Ops.register(s)
@@ -1019,12 +1012,8 @@ object SimilarityQueries {
     * stored segments alone (Int8CompactSpec deletes the corpus copy
     * before compacting to prove it).
     */
-  private val int8CompactedBuilt =
-    new graft.core.StoredArtifact("graft-int8-compacted")
-
   private[graft] def int8CompactedIndex(s: SparkSession, segPath: String): String =
-    int8CompactedBuilt.getOrBuild(
-      segPath, graft.core.SessionMemo.snapshot(s, Seq(segPath))) { path =>
+    graft.core.SessionMemo.stored(s, "int8-compacted", segPath, Seq(segPath)) { path =>
       Seq("model", "cents").foreach { t =>
         s.read.parquet(s"$segPath/$t").coalesce(1)
           .write.mode("overwrite").parquet(s"$path/$t")
@@ -1042,11 +1031,8 @@ object SimilarityQueries {
     * destructive by design — it never acts on q_c135's shared
     * segments store).
     */
-  private val int8GcBuilt = new graft.core.StoredArtifact("graft-int8-gc")
-
   private[graft] def int8GcIndex(s: SparkSession, d: String): String =
-    int8GcBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/embeddings.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "int8-gc", d, Seq(s"$d/embeddings.parquet")) { path =>
       val base = int8BaseIndex(s, d)
       val (fn, _, _) = frozenQuantizer(s, base)
       graft.functions.Int8Ops.register(s)

@@ -2848,29 +2848,23 @@ object TextQueries {
   }
 
   /** Session-stable index location for a corpus dir — the shared
-    * [[graft.core.StoredArtifact]] lifecycle (content-snapshot guard,
+    * SessionMemo stored-entry lifecycle (content-snapshot guard,
     * per-key build latch, deferred deletion of abandoned snapshots): a
     * warm session reuses the on-disk index across queries — the whole
     * point of the stored form.
     */
-  private val postingsBuilt = new graft.core.StoredArtifact("graft-bm25-index")
-
   private[graft] def postingsIndex(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    postingsBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) {
+    graft.core.SessionMemo.stored(s, "bm25-index", d, Seq(s"$d/documents.parquet")) {
       path => buildPostingsIndex(s, d, path)
     }
 
   /** The BASE-corpus (doc_id % 10 <> 3) postings index for q_c70's
     * append scenario — same lifecycle, its own cache key.
     */
-  private val postingsBaseBuilt = new graft.core.StoredArtifact("graft-bm25-base")
-
   private[graft] def postingsBaseIndex(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    postingsBaseBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "bm25-base", d, Seq(s"$d/documents.parquet")) { path =>
       val (post, stats) = postingsOf(
         Tables(s, d, "documents").filter(col("doc_id") % 10 =!= 3))
       post
@@ -2917,12 +2911,9 @@ object TextQueries {
     * additive (n_docs, tot) stats. Building a segment costs one
     * tokenize of THAT slice only.
     */
-  private val bm25SegmentsBuilt = new graft.core.StoredArtifact("graft-bm25-segments")
-
   private[graft] def bm25SegmentsIndex(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    bm25SegmentsBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "bm25-segments", d, Seq(s"$d/documents.parquet")) { path =>
       writeBm25Segment(Tables(s, d, "documents")
         .filter(col("doc_id") % 10 =!= 3), s"$path/seg0")
       writeBm25Segment(Tables(s, d, "documents")
@@ -2945,12 +2936,9 @@ object TextQueries {
     * the stored segments alone (it never reads the corpus), and the key
     * says so.
     */
-  private val bm25CompactedBuilt = new graft.core.StoredArtifact("graft-bm25-compacted")
-
   private[graft] def bm25CompactedIndex(
       s: org.apache.spark.sql.SparkSession, segPath: String): String =
-    bm25CompactedBuilt.getOrBuild(
-      segPath, graft.core.SessionMemo.snapshot(s, Seq(segPath))) { path =>
+    graft.core.SessionMemo.stored(s, "bm25-compacted", segPath, Seq(segPath)) { path =>
       s.read.parquet(s"$segPath/seg0/postings", s"$segPath/seg1/postings")
         .repartitionByRange(col("term"))
         .sortWithinPartitions(col("term"), col("doc_id"))
@@ -3057,12 +3045,9 @@ object TextQueries {
     * intact for q_c133's replay — GC is destructive by design, so it
     * never acts on another query's store).
     */
-  private val bm25GcBuilt = new graft.core.StoredArtifact("graft-bm25-gc")
-
   private[graft] def bm25GcIndex(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    bm25GcBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "bm25-gc", d, Seq(s"$d/documents.parquet")) { path =>
       writeBm25Segment(Tables(s, d, "documents")
         .filter(col("doc_id") % 10 =!= 3), s"$path/segments/seg0")
       writeBm25Segment(Tables(s, d, "documents")
@@ -3196,16 +3181,13 @@ object TextQueries {
     }
   }
 
-  private val phraseBuilt = new graft.core.StoredArtifact("graft-phrase-index")
-
   /** Session-stable phrase-index location for a corpus dir — the shared
-    * [[graft.core.StoredArtifact]] lifecycle (content-snapshot guard,
+    * SessionMemo stored-entry lifecycle (content-snapshot guard,
     * per-key build latch, deferred deletion), exactly [[postingsIndex]].
     */
   private[graft] def phraseIndex(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    phraseBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) {
+    graft.core.SessionMemo.stored(s, "phrase-index", d, Seq(s"$d/documents.parquet")) {
       path => buildPhraseIndex(s, Tables(s, d, "documents"), path)
     }
 
@@ -3213,12 +3195,9 @@ object TextQueries {
     * scenario — same lifecycle and the same [[buildPhraseIndex]] recipe,
     * its own cache key (the postingsBaseIndex pattern).
     */
-  private val phraseBaseBuilt = new graft.core.StoredArtifact("graft-phrase-base")
-
   private[graft] def phraseBaseIndex(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    phraseBaseBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "phrase-base", d, Seq(s"$d/documents.parquet")) { path =>
       buildPhraseIndex(s,
         Tables(s, d, "documents").filter(col("doc_id") % 10 =!= 3), path)
     }
@@ -3228,12 +3207,9 @@ object TextQueries {
     * doc_id % 10 <> 3 base, seg1 = the arriving batch), the bm25
     * segments pattern.
     */
-  private val phraseSegmentsBuilt = new graft.core.StoredArtifact("graft-phrase-segments")
-
   private[graft] def phraseSegmentsIndex(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    phraseSegmentsBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "phrase-segments", d, Seq(s"$d/documents.parquet")) { path =>
       buildPhraseIndex(s,
         Tables(s, d, "documents").filter(col("doc_id") % 10 =!= 3), s"$path/seg0")
       buildPhraseIndex(s,
@@ -3245,12 +3221,9 @@ object TextQueries {
     * segment directory's snapshot — compaction is a function of the
     * stored segments alone.
     */
-  private val phraseCompactedBuilt = new graft.core.StoredArtifact("graft-phrase-compacted")
-
   private[graft] def phraseCompactedIndex(
       s: org.apache.spark.sql.SparkSession, segPath: String): String =
-    phraseCompactedBuilt.getOrBuild(
-      segPath, graft.core.SessionMemo.snapshot(s, Seq(segPath))) { path =>
+    graft.core.SessionMemo.stored(s, "phrase-compacted", segPath, Seq(segPath)) { path =>
       s.read.parquet(s"$segPath/seg0/postings", s"$segPath/seg1/postings")
         .repartitionByRange(col("term"))
         .sortWithinPartitions(col("term"), col("doc_id"), col("pos"))
@@ -3267,12 +3240,9 @@ object TextQueries {
     * journal written; its OWN artifact copy (GC is destructive by
     * design — it never acts on q_c136's shared segments store).
     */
-  private val phraseGcBuilt = new graft.core.StoredArtifact("graft-phrase-gc")
-
   private[graft] def phraseGcIndex(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    phraseGcBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
+    graft.core.SessionMemo.stored(s, "phrase-gc", d, Seq(s"$d/documents.parquet")) { path =>
       buildPhraseIndex(s,
         Tables(s, d, "documents").filter(col("doc_id") % 10 =!= 3),
         s"$path/segments/seg0")

@@ -61,21 +61,12 @@ object UnigramTrainer {
     UnigramModel(rows.map(_.piece).toArray, rows.map(_.logpMicros).toArray)
 
   // learned vocab is pure model data — shared across q_c39/q_c40 per
-  // (dir, params) under a content snapshot, the BpeTrainer discipline
-  // lock spans the build (BuildOnceCache): concurrent first callers
-  // share one EM run. Test hook: [[clearModelCache]].
-  private val modelCache =
-    new graft.core.BuildOnceCache[(String, (Int, Int, Int, Int)), Seq[PieceRow]]
-
-  private[graft] def clearModelCache(): Unit = modelCache.clear()
-
+  // (dir, params) and corpus snapshot (SessionMemo value `unigram_vocab`)
   def train(s: SparkSession, d: String, maxLen: Int = 4, seedMulti: Int = 150,
-      emRounds: Int = 3, multiKeep: Int = 60): Seq[PieceRow] = {
-    val key = (d, (maxLen, seedMulti, emRounds, multiKeep))
-    val snap = graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))
-    modelCache.getOrBuild(key, snap)(
+      emRounds: Int = 3, multiKeep: Int = 60): Seq[PieceRow] =
+    graft.core.SessionMemo.value(s, "unigram_vocab",
+      (d, (maxLen, seedMulti, emRounds, multiKeep)), Seq(s"$d/documents.parquet"))(
       trainUncached(s, d, maxLen, seedMulti, emRounds, multiKeep))
-  }
 
   private def trainUncached(s: SparkSession, d: String, maxLen: Int,
       seedMulti: Int, emRounds: Int, multiKeep: Int): Seq[PieceRow] = {

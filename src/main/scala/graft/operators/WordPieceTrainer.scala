@@ -34,13 +34,6 @@ object WordPieceTrainer {
   final case class WpMerge(rank: Int, left: String, right: String,
                            merged: String, score: Double)
 
-  // lock spans the build (BuildOnceCache): concurrent first callers
-  // share one training run. Test hook: [[clearModelCache]].
-  private val modelCache =
-    new graft.core.BuildOnceCache[(String, Int), (Seq[WpMerge], Seq[String])]
-
-  private[graft] def clearModelCache(): Unit = modelCache.clear()
-
   /** Word symbols with the ## continuation convention: first char plain,
     * every later char `##`-prefixed.
     */
@@ -48,13 +41,14 @@ object WordPieceTrainer {
     "transform(sequence(1, length(word)), i -> " +
       "IF(i = 1, substring(word, 1, 1), concat('##', substring(word, i, 1))))"
 
-  /** Learn `nMerges` merges + the initial alphabet (cached per
-    * (dir, nMerges) + content snapshot). Returns (merges, alphabet).
+  /** Learn `nMerges` merges + the initial alphabet (a SessionMemo value
+    * of kind `wordpiece_vocab` per (dir, nMerges) and corpus snapshot).
+    * Returns (merges, alphabet).
     */
-  def train(s: SparkSession, d: String, nMerges: Int): (Seq[WpMerge], Seq[String]) = {
-    val snap = graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))
-    modelCache.getOrBuild((d, nMerges), snap)(trainUncached(s, d, nMerges))
-  }
+  def train(s: SparkSession, d: String, nMerges: Int): (Seq[WpMerge], Seq[String]) =
+    graft.core.SessionMemo.value(
+      s, "wordpiece_vocab", (d, nMerges), Seq(s"$d/documents.parquet"))(
+      trainUncached(s, d, nMerges))
 
   private def trainUncached(s: SparkSession, d: String,
       nMerges: Int): (Seq[WpMerge], Seq[String]) = {

@@ -7,16 +7,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{BuildOnceCache, ContentId}
+import graft.core.{ContentId, SessionMemo}
 
 /** Regression coverage for the round-13 advisor findings: the
-  * build-once cache latch (duplicate concurrent trainings), the 64-bit
-  * model-bound function names (silent 31-bit collision rebinding), and
-  * the q_c50 OLS degenerate-corpus guard (0/0 fit on <= 1 distinct
-  * term). The CharBigramStats capacity guard is document-size-bounded
-  * (2^28 bigrams) and cannot be exercised with a practical fixture; the
-  * Long-math capacity computation it protects is asserted indirectly by
-  * CharBigramEntropySpec's functional coverage.
+  * build-once latch of [[SessionMemo]] (duplicate concurrent trainings),
+  * the 64-bit model-bound function names (silent 31-bit collision
+  * rebinding), and the q_c50 OLS degenerate-corpus guard (0/0 fit on
+  * <= 1 distinct term). The bigram-table capacity guard is pinned through
+  * its helper in TokenRepStatsSpec.
   */
 class AdviceFixesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -35,18 +33,29 @@ class AdviceFixesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  test("BuildOnceCache: concurrent first callers share ONE build") {
-    val cache = new BuildOnceCache[String, Int]
+  /** A one-file memo input; rewriting it with new content changes its
+    * content snapshot.
+    */
+  private def memoInput(content: String): String = {
+    val f = java.nio.file.Files.createTempFile("graft-memo-input", ".txt")
+    java.nio.file.Files.writeString(f, content)
+    f.toFile.deleteOnExit()
+    f.toString
+  }
+
+  test("SessionMemo.value: concurrent first callers share ONE build") {
+    val in = memoInput("v1")
     val builds = new AtomicInteger(0)
     val start = new CountDownLatch(1)
     val results = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    def get(): Int = SessionMemo.value(spark, "advice_once", "k", Seq(in)) {
+      Thread.sleep(50) // widen the race window
+      builds.incrementAndGet()
+    }
     val threads = (1 to 4).map { _ =>
       new Thread(() => {
         start.await()
-        results.add(cache.getOrBuild("k", "snap1") {
-          Thread.sleep(50) // widen the race window
-          builds.incrementAndGet()
-        })
+        results.add(get())
       })
     }
     threads.foreach(_.start())
@@ -55,8 +64,10 @@ class AdviceFixesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(builds.get() === 1, "concurrent first callers must share one build")
     assert(results.size === 4 && results.stream().allMatch(_ == 1))
     // a snapshot change rebuilds exactly once more
-    assert(cache.getOrBuild("k", "snap2")(builds.incrementAndGet()) === 2)
-    assert(cache.getOrBuild("k", "snap2")(builds.incrementAndGet()) === 2)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(in), "version 2")
+    assert(get() === 2)
+    assert(get() === 2)
+    SessionMemo.evict(spark, "advice_once")
   }
 
   test("model-bound function names are 64-bit (seed high bits distinguish)") {
@@ -94,29 +105,33 @@ class AdviceFixesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- round-14 advisor findings ------------------------------------------
 
-  private def inFlightSize(owner: AnyRef): Int = {
-    val f = owner.getClass.getDeclaredField("inFlight")
+  private def inFlightSize(): Int = {
+    val f = SessionMemo.getClass.getDeclaredField("inFlight")
     f.setAccessible(true)
-    f.get(owner).asInstanceOf[java.util.concurrent.ConcurrentHashMap[_, _]].size
+    f.get(SessionMemo).asInstanceOf[java.util.concurrent.ConcurrentHashMap[_, _]].size
   }
 
   test("build-once latches are pruned after the build settles (no per-key growth)") {
-    val cache = new BuildOnceCache[String, Int]
-    (1 to 100).foreach(i => cache.getOrBuild(s"k$i", "snap")(i))
-    assert(inFlightSize(cache) === 0,
-      "BuildOnceCache.inFlight must not retain one latch per historical key")
-    val art = new graft.core.StoredArtifact("graft-latch-test")
-    (1 to 5).foreach(i => art.getOrBuild(s"k$i", "snap")(_ => ()))
-    assert(inFlightSize(art) === 0,
-      "StoredArtifact.inFlight must not retain one latch per historical key")
-    art.clear()
+    val in = memoInput("latch")
+    (1 to 100).foreach(i => SessionMemo.value(spark, "latch_value", s"k$i", Seq(in))(i))
+    assert(inFlightSize() === 0,
+      "value keys must not retain one latch per historical key")
+    (1 to 5).foreach(i => SessionMemo.stored(spark, "latch-stored", s"k$i", Seq(in))(_ => ()))
+    assert(inFlightSize() === 0,
+      "stored keys must not retain one latch per historical key")
+    (1 to 3).foreach { i =>
+      SessionMemo.getOrBuild(spark, "latch_frame", s"k$i", Seq(in))(spark.range(i).toDF("id"))
+    }
+    assert(inFlightSize() === 0,
+      "frame keys must not retain one latch per historical key")
+    SessionMemo.evict(spark, "latch_value", "latch-stored")
   }
 
-  test("StoredArtifact: a failed build defers cleanup of its partial directory") {
-    val art = new graft.core.StoredArtifact("graft-failbuild-test")
+  test("SessionMemo.stored: a failed build defers deleting its dir") {
+    val in = memoInput("fail")
     var failedPath: String = null
     val e = intercept[RuntimeException] {
-      art.getOrBuild("k", "snap") { p =>
+      SessionMemo.stored(spark, "failbuild-test", "k", Seq(in)) { p =>
         failedPath = p
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(p, "partial.bin"), "half-written")
@@ -132,13 +147,13 @@ class AdviceFixesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(deferred.synchronized(deferred.contains(failedPath)),
       "partial build directory must be scheduled for deletion")
     // and the failure is not cached: a retry re-runs the build
-    val ok = art.getOrBuild("k", "snap")(_ => ())
+    val ok = SessionMemo.stored(spark, "failbuild-test", "k", Seq(in))(_ => ())
     assert(ok !== failedPath, "retry must build into a fresh directory")
-    art.clear()
+    SessionMemo.evict(spark, "failbuild-test")
   }
 
   test("awaitDemotions fails with a diagnostic instead of hanging") {
-    val memo = graft.core.SessionMemo
+    val memo = SessionMemo
     val f = memo.getClass.getDeclaredField("pendingDemotions")
     f.setAccessible(true)
     val pending = f.get(memo).asInstanceOf[java.util.concurrent.atomic.AtomicInteger]

@@ -96,7 +96,7 @@ class ClassifierTrainerSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.toSeq
 
   test("engine trajectory == independent reference fold, exactly") {
-    QualityClassifierTrainer.clearModelCache()
+    graft.core.SessionMemo.evict(spark, "cls_weights")
     val docs = collectDocs()
     val (_, _, refTraj) = refTrain(docs)
     val eng = SparkEntry.queries("q_c137_classifier_train")(spark, sf)

@@ -50,7 +50,7 @@ class DedupThresholdCurveSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def evict(): Unit = {
-    graft.core.SessionMemo.evict(Some(spark))
+    graft.core.SessionMemo.evict(spark)
     graft.core.CachedRdds.drain()
   }
 

@@ -63,7 +63,7 @@ class DoremiWeightsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def evict(): Unit = {
-    graft.core.SessionMemo.evict(Some(spark))
+    graft.core.SessionMemo.evict(spark)
     graft.core.CachedRdds.drain()
   }
 

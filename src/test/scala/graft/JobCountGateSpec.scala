@@ -109,6 +109,13 @@ class JobCountGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     "q_c126_ingest_quality_gate" -> 9 // measured 7 cold (one rules scan + 2-row agg + stack)
   )
 
+  /** The JVM-wide memo kinds a cold run must rebuild: the BPE, Unigram and
+    * WordPiece models, the q_c61 Bloom bits and the CC/winnow families.
+    * (The session's frames are evicted along with them.)
+    */
+  private val coldKinds = Seq(
+    "bpe_merges", "unigram_vocab", "wordpiece_vocab", "bloom_bits", "cc-fam", "wn-fam")
+
   test("cold job counts for the heavy set stay under their ceilings") {
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -121,16 +128,10 @@ class JobCountGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val measured = for ((name, ceiling) <- ceilings) yield {
         // cold state: no memo hits, no cached vocab RDDs from a prior
-        // query, no cached BPE model (its training jobs are part of the
-        // gated plan shape)
-        graft.core.SessionMemo.evict(Some(spark))
+        // query, no cached trained model (its training jobs are part of
+        // the gated plan shape)
+        graft.core.SessionMemo.evict(spark, coldKinds: _*)
         graft.core.CachedRdds.drain()
-        graft.operators.BpeTrainer.clearModelCache()
-        graft.operators.UnigramTrainer.clearModelCache()
-        graft.operators.WordPieceTrainer.clearModelCache()
-        graft.operators.PipelineQueries.clearBloomCache()
-        graft.operators.PipelineQueries.clearCcFamilies()
-        graft.operators.PipelineQueries.clearWnFamilies()
         // deterministic drain of the async listener bus: a fixed sleep can
         // leak a prior query's job-start events into this window
         org.apache.spark.GraftSparkTestAccess.drainListenerBus(spark.sparkContext)
@@ -143,6 +144,10 @@ class JobCountGateSpec extends AnyFunSuite with BeforeAndAfterAll {
         (name, jobs, ceiling)
       }
       graft.core.CachedRdds.drain()
+      // every evicted kind was rebuilt by some gated query, so none of the
+      // names above is stale (a stale name would silently warm the runs)
+      val unbuilt = coldKinds.filter(k => graft.core.SessionMemo.buildCount(k) == 0L)
+      assert(unbuilt.isEmpty, s"cold-reset kinds never built: ${unbuilt.mkString(", ")}")
       val over = measured.filter { case (_, jobs, ceiling) => jobs > ceiling }
       assert(over.isEmpty,
         s"job-count regressions: ${over.map(t => s"${t._1}=${t._2}>${t._3}").mkString(", ")}")

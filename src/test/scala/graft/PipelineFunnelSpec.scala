@@ -197,6 +197,6 @@ class PipelineFunnelSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(driftPm == -rawPm, s"$src: drift stays defined")
     }
     graft.core.CachedRdds.drain()
-    graft.core.SessionMemo.evict(Some(spark))
+    graft.core.SessionMemo.evict(spark)
   }
 }

@@ -62,8 +62,10 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("hyperplanesignature"), "signature projection missing entirely")
   }
 
-  private def executed(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, dir)
+  private def executed(name: String): String =
+    executedPlan(SparkEntry.queries(name)(spark, dir))
+
+  private def executedPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.write.format("noop").mode("overwrite").save() // settle AQE final plan
     val p = df.queryExecution.executedPlan.toString
     graft.core.CachedRdds.drain()
@@ -71,7 +73,10 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q_c24 benchmark n-gram join is broadcast (corpus never shuffles on ng)") {
-    val plan = executed("q_c24_decontaminate")
+    // q_c24 serves the decontam_report memo (a cached scan that hides the
+    // join), so pin the plan of the report's own build
+    val plan = executedPlan(
+      graft.operators.PipelineQueries.decontamReportBuild(spark, dir))
     assert(plan.contains("BroadcastHashJoin"),
       s"benchmark set must broadcast:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
@@ -195,7 +200,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = df.queryExecution.executedPlan.toString
     val rddScans = plan.linesIterator.count(_.contains("Scan ExistingRDD"))
     val fileScans = plan.linesIterator.count(_.contains("Scan parquet"))
-    graft.core.SessionMemo.evict(Some(spark))
+    graft.core.SessionMemo.evict(spark)
     graft.core.CachedRdds.drain()
     assert(rddScans >= 3,
       s"expected >= 3 ExistingRDD readers of the memoized tf, got $rddScans:\n$plan")
@@ -221,7 +226,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(panelHints(plan1) == 0,
         s"ceiling 0: no declared panel broadcast may remain:\n$plan1")
     } finally spark.conf.unset("spark.graft.broadcastBytes")
-    graft.core.SessionMemo.evict(Some(spark))
+    graft.core.SessionMemo.evict(spark)
   }
 
   test("q_c55 has exactly one Generate (the gram explode)") {

@@ -67,7 +67,7 @@ class PolyHashSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val df = strings.toDF("s")
       .select(col("s"), expr("poly_hash(s)").as("fast"), expr(hofHash).as("slow"))
-    val bad = df.filter(col("fast") =!= col("slow")).collect()
+    val bad = df.filter(not(col("fast") <=> col("slow"))).collect()
     assert(bad.isEmpty, s"poly_hash diverged on: ${bad.take(5).mkString(", ")}")
   }
 
@@ -102,7 +102,7 @@ class PolyHashSpec extends AnyFunSuite with BeforeAndAfterAll {
           "transform(sequence(0, size(ts) - 3), i -> " +
             "aggregate(split(concat_ws(' ', ts[i], ts[i+1], ts[i+2]), ''), 0L," +
             " (acc, ch) -> (acc * 31 + ascii(ch)) % 1000000007L))").as("slow"))
-    val bad = df.filter(col("fast") =!= col("slow")).collect()
+    val bad = df.filter(not(col("fast") <=> col("slow"))).collect()
     assert(bad.isEmpty, s"gram_hashes diverged on: ${bad.take(5).mkString(", ")}")
   }
 
@@ -123,7 +123,7 @@ class PolyHashSpec extends AnyFunSuite with BeforeAndAfterAll {
           when(size(col("hs")) >= w, expr(
             s"transform(sequence(0, size(hs) - $w), p -> array_min(slice(hs, p + 1, $w)))"))
             .otherwise(array(array_min(col("hs")))).as("slow"))
-      val bad = df.filter(col("fast") =!= col("slow")).collect()
+      val bad = df.filter(not(col("fast") <=> col("slow"))).collect()
       assert(bad.isEmpty, s"sliding_min(w=$w) diverged: ${bad.take(5).mkString(", ")}")
     }
   }
@@ -147,5 +147,41 @@ class PolyHashSpec extends AnyFunSuite with BeforeAndAfterAll {
       .groupBy().agg(min(expr("(487198041 * th + 259200101) % 1000000007")))
       .collect().head.getLong(0)
     assert(multiset == distinctSet)
+  }
+
+  test("poly_hash takes the decode path on malformed UTF-8 (matches the HOF)") {
+    // lone continuation/invalid lead bytes: every byte counts as one
+    // character, so numBytes == numChars, yet the bytes are not code points
+    val hexes = Seq("618062", "80", "FF", "61FE62FF63", "C0AF", "68E9C3A9", "F09F")
+    val s = spark
+    import s.implicits._
+    val df = hexes.toDF("hx")
+      .select(col("hx"), expr("CAST(unhex(hx) AS STRING)").as("s"))
+      .select(col("hx"), expr("poly_hash(s)").as("fast"), expr(hofHash).as("slow"))
+    val bad = df.filter(not(col("fast") <=> col("slow"))).collect()
+    assert(bad.isEmpty, s"poly_hash diverged on malformed UTF-8: ${bad.mkString(", ")}")
+  }
+
+  test("sliding_min: empty input gives the HOF's [NULL]; NULL-element input is rejected") {
+    val s = spark
+    import s.implicits._
+    for (w <- Seq(1, 3)) {
+      val df = Seq(Seq.empty[Long], Seq(4L, 2L)).toDF("hs")
+        .select(
+          size(col("hs")).as("n"),
+          expr(s"sliding_min(hs, $w)").as("fast"),
+          when(size(col("hs")) >= w, expr(
+            s"transform(sequence(0, size(hs) - $w), p -> array_min(slice(hs, p + 1, $w)))"))
+            .otherwise(array(array_min(col("hs")))).as("slow"))
+      val bad = df.filter(not(col("fast") <=> col("slow"))).collect()
+      assert(bad.isEmpty, s"sliding_min(w=$w) diverged: ${bad.mkString(", ")}")
+      val empty = df.filter(col("n") === 0).select(col("fast")).head().getSeq[Any](0)
+      assert(empty == Seq(null), s"empty input must give [NULL], got $empty")
+    }
+    assert(spark.sql("SELECT sliding_min(array(1L, 2L), 1)").schema.head.dataType ===
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = true))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT sliding_min(array(1L, CAST(NULL AS BIGINT)), 2)"))
+    assert(e.getMessage.contains("without NULL elements"), e.getMessage)
   }
 }

@@ -36,7 +36,7 @@ class ScoreCalibrationSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def evict(): Unit = {
-    graft.core.SessionMemo.evict(Some(spark))
+    graft.core.SessionMemo.evict(spark)
     graft.core.CachedRdds.drain()
   }
 

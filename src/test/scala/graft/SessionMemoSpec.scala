@@ -17,7 +17,9 @@ import graft.core.SessionMemo
   *  - rewriting the documents fixture AT THE SAME PATH must invalidate the
   *    entry (mtime/length snapshot) and rebuild with results reflecting
   *    the new data — the round-8 stale-memo watch item;
-  *  - the MinHash candidate memo shares the same snapshot guard.
+  *  - the MinHash candidate memo shares the same snapshot guard;
+  *  - value and stored entries are JVM-wide: they survive a frame
+  *    owner's eviction but not a snapshot change.
   */
 class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -110,9 +112,8 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       // ~3 MB of rows vs a 64 KB budget: the frame must NOT hold storage
       // blocks (the q_c3 scale10 displacement, PERF.md r10) but must
       // still be reusable without rebuilding — served from a parquet
-      // spill under the memo's session-local disk root (opt-in tier)
+      // spill under the memo's session-local disk root
       spark.conf.set("spark.graft.memo.maxBytes", (64 * 1024).toString)
-      spark.conf.set("spark.graft.memo.diskTier", "true")
       val big = SessionMemo.getOrBuild(spark, "budget_big", dir, Seq(s"$dir/documents.parquet")) {
         spark.range(100000).select(col("id"), concat_ws("-", lit("x" * 24), col("id")).as("t"))
       }
@@ -133,7 +134,7 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(SessionMemo.buildCount("budget_big") == 1L,
         "disk-tier hit must not rebuild the pipeline")
       // eviction deletes the spill file
-      SessionMemo.evict(Some(spark))
+      SessionMemo.evict(spark)
       assert(!new java.io.File(spill.get).exists(),
         "evicting a disk-tier entry must delete its spill")
 
@@ -146,20 +147,18 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(SessionMemo.heldOnDisk("budget_small").isEmpty)
       assert(SessionMemo.heldBytes("budget_small").exists(b => b > 0L && b <= 64 * 1024))
     } finally {
-      spark.conf.unset("spark.graft.memo.diskTier")
       spark.conf.unset("spark.graft.memo.maxBytes")
       graft.core.CachedRdds.drain()
-      SessionMemo.evict(Some(spark))
+      SessionMemo.evict(spark)
     }
   }
 
-  test("disk tier: snapshot mismatch rebuilds and replaces the spill; on by default, opt-out drops") {
+  test("disk tier (default): a stale spill is rebuilt and replaced") {
     val sp = spark
     import sp.implicits._
     writeDocs(baseDocs)
     try {
       spark.conf.set("spark.graft.memo.maxBytes", (64 * 1024).toString)
-      spark.conf.set("spark.graft.memo.diskTier", "true")
       SessionMemo.getOrBuild(spark, "disk_inval", dir, Seq(s"$dir/documents.parquet")) {
         spark.range(100000).select(col("id"), concat_ws("-", lit("a" * 24), col("id")).as("t"))
       }.count()
@@ -175,32 +174,18 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!new java.io.File(spill0).exists(),
         "stale spill must be deleted on invalidation")
 
-      // DEFAULT (tier unset): since round 12 the disk tier is ON by
-      // default — the clean-window scale10 A/B measured spill-serve
-      // pass B 5.5x faster than drop-and-rebuild (PERF.md round 12)
-      spark.conf.unset("spark.graft.memo.diskTier")
+      // DEFAULT: the disk tier needs no option on a local master — the
+      // clean-window scale10 A/B measured spill-serve pass B 5.5x faster
+      // than drop-and-rebuild (PERF.md round 12)
       SessionMemo.getOrBuild(spark, "disk_default", dir, Seq(s"$dir/documents.parquet")) {
         spark.range(100000).select(col("id"), concat_ws("-", lit("c" * 24), col("id")).as("t"))
       }.count()
       assert(SessionMemo.heldOnDisk("disk_default").isDefined,
         "default: an over-budget frame must be memoized on the disk tier")
-      // explicit opt-OUT restores the drop-and-rebuild diagnostic path
-      spark.conf.set("spark.graft.memo.diskTier", "false")
-      SessionMemo.evict(Some(spark))
-      SessionMemo.getOrBuild(spark, "disk_optout", dir, Seq(s"$dir/documents.parquet")) {
-        spark.range(100000).select(col("id"), concat_ws("-", lit("c" * 24), col("id")).as("t"))
-      }.count()
-      assert(!SessionMemo.occupied("disk_optout"),
-        "with the tier off, an over-budget frame must not be memoized")
-      SessionMemo.getOrBuild(spark, "disk_optout", dir, Seq(s"$dir/documents.parquet")) {
-        spark.range(10).toDF("id")
-      }
-      assert(SessionMemo.buildCount("disk_optout") == 2L)
     } finally {
-      spark.conf.unset("spark.graft.memo.diskTier")
       spark.conf.unset("spark.graft.memo.maxBytes")
       graft.core.CachedRdds.drain()
-      SessionMemo.evict(Some(spark))
+      SessionMemo.evict(spark)
     }
   }
 
@@ -239,33 +224,48 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally {
       spark.conf.unset("spark.graft.memo.maxBytes")
       graft.core.CachedRdds.drain()
-      SessionMemo.evict(Some(spark))
+      SessionMemo.evict(spark)
     }
   }
 
-  test("size budget with disk tier OFF: eviction drops and the next access rebuilds") {
-    val sp = spark
-    import sp.implicits._
+  test("value and stored entries outlive their frame owner's eviction and rebuild on a snapshot change") {
     writeDocs(baseDocs)
+    val inputs = Seq(s"$dir/documents.parquet")
+    var valueBuilds = 0
+    var storedBuilds = 0
+    def value(s: SparkSession): Int =
+      SessionMemo.value(s, "spec_value", dir, inputs) { valueBuilds += 1; valueBuilds }
+    def stored(s: SparkSession): String =
+      SessionMemo.stored(s, "spec-stored", dir, inputs) { p =>
+        storedBuilds += 1
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(p, "part"), "x")
+      }
+    val other = spark.newSession()
     try {
-      spark.conf.set("spark.graft.memo.diskTier", "false")
-      SessionMemo.getOrBuild(spark, "nodisk_a", dir, Seq(s"$dir/documents.parquet")) {
-        spark.range(2000).select(col("id"), concat_ws("-", lit("y" * 16), col("id")).as("t"))
-      }.count()
-      val one = SessionMemo.heldBytes("nodisk_a").get
-      spark.conf.set("spark.graft.memo.maxBytes", (one + one / 2).toString)
-      SessionMemo.getOrBuild(spark, "nodisk_b", dir, Seq(s"$dir/documents.parquet")) {
-        spark.range(2000).select(col("id"), concat_ws("-", lit("z" * 16), col("id")).as("t"))
-      }.count()
-      SessionMemo.awaitDemotions() // the async path also carries drops
-      assert(SessionMemo.occupied("nodisk_b"), "the newest entry must be kept")
-      assert(!SessionMemo.occupied("nodisk_a"),
-        "with the tier opted out, eviction keeps the old drop-and-rebuild contract")
+      SessionMemo.getOrBuild(spark, "spec_frame", dir, inputs)(spark.range(10).toDF("id")).count()
+      val v1 = value(spark)
+      val p1 = stored(spark)
+      // the frame goes with its owner; values and stored paths are
+      // JVM-wide, so they survive it and serve any session
+      SessionMemo.evict(spark)
+      assert(!SessionMemo.occupied("spec_frame"), "evict must drop the owner's frame")
+      assert(value(spark) == v1 && value(other) == v1 && valueBuilds == 1,
+        "a value must survive its builder session's eviction")
+      assert(stored(spark) == p1 && stored(other) == p1 && storedBuilds == 1,
+        "a stored path must survive its builder session's eviction")
+      assert(new java.io.File(p1, "part").exists())
+      // a rewrite of the input changes the snapshot: both rebuild once
+      writeDocs(baseDocs.map { case (id, src, t) => (id, src, t + " rewritten") })
+      assert(value(other) == 2 && value(spark) == 2 && valueBuilds == 2,
+        "a snapshot change must rebuild the value exactly once")
+      val p2 = stored(other)
+      assert(p2 != p1 && stored(spark) == p2 && storedBuilds == 2,
+        "a snapshot change must rebuild the stored entry exactly once")
+      // naming a kind in evict drops it JVM-wide
+      SessionMemo.evict(other, "spec_value", "spec-stored")
+      assert(value(spark) == 3 && stored(spark) != p2 && storedBuilds == 3)
     } finally {
-      spark.conf.unset("spark.graft.memo.maxBytes")
-      spark.conf.unset("spark.graft.memo.diskTier")
-      graft.core.CachedRdds.drain()
-      SessionMemo.evict(Some(spark))
+      SessionMemo.evict(spark, "spec_value", "spec-stored")
     }
   }
   test("working-set warning fires once when cumulative admissions cross the budget, never under it") {
@@ -309,7 +309,7 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       // not add to it — the counter reports the simultaneous set, not
       // cumulative admissions across a long multi-rebuild session
       val before = SessionMemo.sessionWorkingSet(tight)
-      SessionMemo.evict(Some(tight))
+      SessionMemo.evict(tight)
       SessionMemo.getOrBuild(tight, "ws_t1", dir, Seq(s"$dir/documents.parquet")) {
         tight.range(1000).toDF("id")
       }.count()
@@ -319,8 +319,8 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally {
       graft.core.CachedRdds.drain()
       SessionMemo.awaitDemotions()
-      SessionMemo.evict(Some(roomy))
-      SessionMemo.evict(Some(tight))
+      SessionMemo.evict(roomy)
+      SessionMemo.evict(tight)
     }
   }
 

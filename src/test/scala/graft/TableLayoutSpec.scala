@@ -54,7 +54,7 @@ class TableLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def runQ(name: String, dir: String): Seq[String] = {
     val out = canonRows(SparkEntry.queries(name)(spark, dir).collect().toSeq)
-    graft.core.SessionMemo.evict(Some(spark))
+    graft.core.SessionMemo.evict(spark)
     graft.core.CachedRdds.drain()
     out
   }

@@ -97,4 +97,18 @@ class TokenRepStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(st3.getLong(0) == 2L && st3.getLong(1) == 1L && st3.getLong(2) == 2L
       && st3.getLong(3) == 1L && st3.getLong(4) == 1L)
   }
+
+  test("bigram table capacity fails with a clear error before it overflows Int") {
+    // both per-row kernels size their open-addressed table through this
+    // helper; 2^29 bigrams would overflow `capL.toInt` to a negative size
+    import graft.functions.CharBigramStats.tableCapacity
+    assert(tableCapacity("token_rep_stats", 1) === 8)
+    assert(tableCapacity("token_rep_stats", 3) === 16)
+    assert(tableCapacity("token_rep_stats", (1 << 28) - 1) === (1 << 30))
+    for (kernel <- Seq("token_rep_stats", "char_bigram_stats"); n <- Seq(1 << 28, 1 << 29, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](tableCapacity(kernel, n))
+      assert(e.getMessage.startsWith(s"$kernel: document with $n bigrams exceeds"),
+        e.getMessage)
+    }
+  }
 }

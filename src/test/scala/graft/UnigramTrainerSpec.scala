@@ -145,7 +145,7 @@ class UnigramTrainerSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("q_c39: trained model identical to the independent reference") {
     val docs = corpus()
     val ref = refTrain(docs.map(_._2))
-    graft.operators.UnigramTrainer.clearModelCache()
+    graft.core.SessionMemo.evict(spark, "unigram_vocab")
     val got = SparkEntry.queries("q_c39_unigram_train")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     assert(got.length == ref.length, s"vocab size ${got.length} vs ref ${ref.length}")

@@ -121,7 +121,7 @@ class WordPieceTrainerSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("q_c42: merge trajectory identical to the independent reference") {
     val docs = corpus()
     val (ref, _) = refTrain(docs.map(_._2))
-    graft.operators.WordPieceTrainer.clearModelCache()
+    graft.core.SessionMemo.evict(spark, "wordpiece_vocab")
     val got = SparkEntry.queries("q_c42_wordpiece_train")(spark, sf).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getDouble(4)))
     assert(got.length == ref.length, s"${got.length} merges vs ref ${ref.length}")
