@@ -67,7 +67,6 @@ object ImsToZarrJob {
           case "--partition-mode" => s = s.copy(partitionMode = argv(i + 1)); i += 2
           case "--s3-location"    => s = s.copy(s3Location = Some(argv(i + 1))); i += 2
           case "--no-translate"   => s = s.copy(translateImarisPyramid = false); i += 1
-          case "--no-fuse"        => s = s.copy(fuseDownsample = false); i += 1
           case "--single-tile"    => s = s.copy(singleTileUpload = true); i += 1
           case other              => sys.error(s"unknown arg: $other")
         }
@@ -116,7 +115,6 @@ object ImsToZarrJob {
       zarrFormat = a.zarrFormat, bloscCname = a.bloscCname,
       bloscShuffle = JobSettings.resolveShuffle(a.bloscShuffle),
       v2Separator = a.v2Separator,
-      fuseDownsample = a.fuseDownsample,
       voxelSizeOverrideUm = voxelOverride,
       originOverrideUm = manifest.flatMap(m =>
         Manifest.tileTranslationUm(m, stack.split('/').last)))

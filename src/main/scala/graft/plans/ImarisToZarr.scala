@@ -1,12 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.Geometry
+import graft.core.{Geometry, Voxels}
 import graft.core.Geometry.{Shape3, ShardTask, TrueShape}
 import graft.meta.OmeNgff
-import graft.sinks.ZarrV3
+import graft.sinks.{ZarrV2, ZarrV3}
 import graft.sources.{Hdf5Reader, Imaris}
 
 /** IMS → OME-NGFF 0.5 Zarr v3 conversion as one Spark pipeline
@@ -21,10 +21,16 @@ import graft.sources.{Hdf5Reader, Imaris}
   *    created by the DRIVER before the job launches — the reference's
   *    idempotent-create race workaround (W7, `imaris_to_zarr.py:1759-1831`)
   *    disappears because only one process initializes;
-  *  - voxel work is a single `Dataset[ShardTask].mapPartitions` action:
-  *    each task reads its input region (chunk-aligned, X1), encodes and
-  *    writes exactly one shard file (W4/X3) and emits a stats row (A5);
-  *  - pyramid levels are sequential Spark jobs (A3 — inter-level barrier
+  *  - voxel work runs in waves of `ShardTask`s, one Spark job each, all
+  *    through ONE runner ([[runWave]]). A task gets its output region
+  *    from one of three sources: its region of the Imaris dataset (level
+  *    0, and every level of a translated pyramid), the partials the
+  *    previous wave reduced from the regions it held (fused), or the
+  *    previous level's store read at ×factor and reduced. It then writes
+  *    exactly one v3 shard or one shard-aligned set of v2 chunks
+  *    (W4/X3), emits the next level's partial when that level is fused,
+  *    and returns a stats row (A5);
+  *  - pyramid levels are sequential waves (A3 — the inter-level barrier
   *    is inherent: level l+1 reads level l).
   *
   * Scale posture: tasks are ~256 MB of voxels at the reference's default
@@ -59,26 +65,21 @@ object ImarisToZarr {
       // whole-file granularity, realized as a degenerate one-shard-per-
       // level grid (shard = chunk-aligned cover of the data)
       partitionMode: String = "shard",
-      // read-wave task order across files: contiguous (default; reader-
-      // cache-friendly) | interleave (reference D1 round-robin)
-      taskOrder: String = "contiguous",
       // voxel-size precedence chain (imaris_job.py:362-403): manifest
       // value if present, else per-file Imaris metadata
       voxelSizeOverrideUm: Option[(Double, Double, Double)] = None,
       // tile translation from acquisition.json (imaris_job.py:256-307);
       // absent → Imaris ExtMin origin
       originOverrideUm: Option[(Double, Double, Double)] = None,
-      // Fuse each level's reduction into the wave that already holds its
-      // source in memory: the L0 read task emits its L1 partial for free,
-      // and (round 9, recursively) each compute task emits the NEXT
-      // level's partial from its reduced output — so every computed level
-      // assembles partials (1/∏factor of the bytes, no chunk decode)
-      // instead of re-reading the previous level's store. Requires the
-      // source task shard to be factor-aligned (shard % scaleFactor == 0
-      // per dim) so no output window crosses a source-task border; the
-      // per-level gate auto-disables at any level whose clamped shard
-      // breaks alignment. Pure plan substitution — output stores are
-      // byte-identical (spec-asserted).
+      // Fuse each computed level's reduction into the wave that already
+      // holds its source in memory: every task emits the next level's
+      // partial (1/∏factor of its bytes), and the next wave assembles
+      // partials instead of decoding the previous level's store.
+      // Requires the source task shard to be factor-aligned (shard %
+      // scaleFactor == 0 per dim) so no output window crosses a source-
+      // task border; a level whose clamped shard breaks alignment falls
+      // back to the store read. Output stores are byte-identical either
+      // way (spec-asserted); false selects the store read everywhere.
       fuseDownsample: Boolean = true
   )
 
@@ -100,27 +101,29 @@ object ImarisToZarr {
       spark.sparkContext.longAccumulator("graft.bytes.written"))
   }
 
-  /** Per-(source, level) write parameters an executor task resolves from
-    * its ShardTask key — the pooled-wave analog of the per-level closure
-    * captures in the old per-file loop.
+  /** Where a task's output region comes from. */
+  private sealed trait Source extends Serializable
+  /** The task's region of the Imaris dataset at its level. */
+  private case object FromHdf5 extends Source
+  /** Assembled from the previous wave's partials under `dir`: partial
+    * (gz, gy, gx) covers tile (gz, gy, gx) of this level's `tile` grid,
+    * clipped to `levelShape`.
+    */
+  private final case class FromPartials(dir: String, tile: Shape3, levelShape: Shape3) extends Source
+  /** The ×factor region of the previous level's store, read and reduced. */
+  private final case class FromStore(
+      levelDir: String, shape: Shape3, shard: Shape3, chunk: Shape3) extends Source
+
+  /** Per-(file, level) parameters an executor task resolves from its
+    * ShardTask key.
     */
   private final case class TaskIo(
-      origFile: String, store: String, chunk: Shape3, shard: Shape3,
-      zstdLevel: Int, codec: String,
-      zarrFormat: Int = 3, cname: String = "zstd", shuffle: Int = 1,
-      separator: String = ".",
-      // compute-wave extras (downsample source geometry)
-      srcShape: Shape3 = Shape3(0, 0, 0), srcChunk: Shape3 = Shape3(0, 0, 0),
-      srcShard: Shape3 = Shape3(0, 0, 0), factor: Shape3 = Shape3(1, 1, 1),
-      mode: String = "mean",
-      // fusion: non-empty → emit a partial reduction of the region this
-      // task already holds (read wave: the L0 region; compute wave: its
-      // reduced output) to `$partialDir/<sz>_<sy>_<sx>` for the NEXT
-      // level's assembly (uses factor/mode)
-      partialDir: String = "",
-      // compute-wave: non-empty → assemble from the previous wave's
-      // partials under this dir instead of decoding that level's store
-      partialSrcDir: String = "")
+      store: String, chunk: Shape3, shard: Shape3, zstdLevel: Int, codec: String,
+      zarrFormat: Int, cname: String, shuffle: Int, separator: String,
+      factor: Shape3, mode: String, source: Source,
+      // non-empty → emit the next level's partial of this task's region
+      // to `$partialDir/<sz>_<sy>_<sx>`
+      partialDir: String)
 
   /** Deterministic discovery: recursive *.ims listing, *.h5 fallback,
     * lexicographic order, optional first-only (reference S1–S3,
@@ -209,8 +212,6 @@ object ImarisToZarr {
       }
       require(settings.zarrFormat == 2 || settings.zarrFormat == 3,
         s"zarr format must be 2|3, got: ${settings.zarrFormat}")
-      require(settings.taskOrder == "contiguous" || settings.taskOrder == "interleave",
-        s"task_order must be contiguous|interleave, got: ${settings.taskOrder}")
       if (settings.zarrFormat == 2)
         require(settings.zstdLevel >= 0 && settings.zstdLevel <= 9,
           s"blosc clevel must be in [0,9] for zarr v2, got: ${settings.zstdLevel}")
@@ -262,13 +263,9 @@ object ImarisToZarr {
     // level-(l+1) fusion precondition (see Settings.fuseDownsample): the
     // level-l TASK grid must be factor-aligned so no level-(l+1) output
     // window crosses a source-task border (file-mode's chunk-aligned
-    // cover isn't; skip fusion there). l = 0 is the read wave; l ≥ 1 are
-    // compute waves, which hold their reduced output in memory and emit
-    // the NEXT level's partial for free — so every computed level
-    // assembles partials instead of re-reading the previous level's
-    // store (round 9 recursive fusion; the per-level gate lets a deep
-    // level whose clamped shard breaks alignment fall back to the store
-    // read without affecting other levels).
+    // cover isn't; skip fusion there). The gate is per level, so a deep
+    // level whose clamped shard breaks alignment falls back to the store
+    // read without affecting other levels.
     def fusesLevel(p: FilePlan, srcLevel: Int): Boolean = {
       val f = p.settings.scaleFactor
       val shardL = p.specs(srcLevel)._2
@@ -282,82 +279,43 @@ object ImarisToZarr {
     // cleanup must not depend on the current run's fusion decisions
     def allPartialDirs(p: FilePlan): Seq[String] =
       (1 until math.max(2, p.settings.computeLevels)).map(partialDir(p, _))
-
-    // wave A: every (file, level) that reads from IMS, pooled
-    val readIo: Map[(String, Int), TaskIo] = plans.flatMap { p =>
-      val readLevels =
-        if (p.settings.translatePyramid) p.trueShapes.indices else Seq(0)
-      readLevels.map { l =>
+    def source(p: FilePlan, level: Int): Source =
+      if (p.settings.translatePyramid || level == 0) FromHdf5
+      else {
+        val f = p.settings.scaleFactor
+        val (srcChunk, srcShard) = p.specs(level - 1)
+        if (fusesLevel(p, level - 1))
+          FromPartials(partialDir(p, level),
+            Shape3(srcShard.z / f.z, srcShard.y / f.y, srcShard.x / f.x), p.trueShapes(level))
+        else FromStore(s"${p.store}/${level - 1}", p.trueShapes(level - 1), srcShard, srcChunk)
+      }
+    val io: Map[(String, Int), TaskIo] = plans.flatMap { p =>
+      p.trueShapes.indices.map { l =>
         val (chunkL, shardL) = p.specs(l)
-        (p.file, l) -> TaskIo(p.file, p.store, chunkL, shardL,
+        (p.file, l) -> TaskIo(p.store, chunkL, shardL,
           p.settings.zstdLevel, p.settings.codecName,
           p.settings.zarrFormat, p.settings.bloscCname, p.settings.bloscShuffle,
-          p.settings.v2Separator,
-          factor = p.settings.scaleFactor, mode = p.settings.downsampleMode,
-          partialDir = if (l == 0 && fusesLevel(p, 0)) partialDir(p, 1) else "")
+          p.settings.v2Separator, p.settings.scaleFactor, p.settings.downsampleMode,
+          source(p, l),
+          partialDir = if (fusesLevel(p, l)) partialDir(p, l + 1) else "")
       }
     }.toMap
-    val readTasksContiguous: Seq[ShardTask] = plans.flatMap { p =>
-      val readLevels =
-        if (p.settings.translatePyramid) p.trueShapes.indices else Seq(0)
-      readLevels.flatMap(l =>
-        Geometry.shardTasks(p.file, l, TrueShape(p.trueShapes(l)), p.specs(l)._2))
-    }
-    // Task order across files (reference D1 round-robins; we default to
-    // contiguous). A wave has ONE order: interleave wins when ANY plan
-    // requests it (per-file mixing is not meaningful for a pooled list). Contiguous keeps a file's tasks in few partitions —
-    // per-partition reader/chunk-index caches hit and each file's open
-    // stream count stays low. Interleave spreads every file across all
-    // partitions. Measured on 3x 1.28 GB files at local[32] (4 runs
-    // each, PERF round 6): the two are statistically indistinguishable
-    // under this sandbox's run-to-run variance (contiguous 28.8-57.8s,
-    // interleave 28.7-35.0s, overlapping ranges); default stays
-    // contiguous for the cache locality, the knob stays for
-    // skewed-file-size workloads where round-robin balances tails.
-    val readTasks: Seq[ShardTask] =
-      if (plans.exists(_.settings.taskOrder == "interleave")) {
-        val byFile = readTasksContiguous.groupBy(_.file).values.map(_.iterator).toSeq
-        val out = Seq.newBuilder[ShardTask]
-        var remaining = byFile
-        while (remaining.nonEmpty) {
-          remaining.foreach(it => if (it.hasNext) out += it.next())
-          remaining = remaining.filter(_.hasNext)
-        }
-        out.result()
-      } else readTasksContiguous
-    // waves B..: one per computed pyramid level, pooled across files;
-    // tasks are keyed by their SOURCE level directory (unique per store)
-    val maxCompute = (1 +: plans.map(p =>
-      if (p.settings.translatePyramid) 1 else p.settings.computeLevels)).max
-    val computeWaves: Seq[(Seq[ShardTask], Map[(String, Int), TaskIo])] =
-      (1 until maxCompute).map { level =>
-        val wave = plans.filter(p =>
-          !p.settings.translatePyramid && level < p.settings.computeLevels)
-        val io = wave.map { p =>
-          val (chunkL, shardL) = p.specs(level)
-          val (srcChunk, srcShard) = p.specs(level - 1)
-          (s"${p.store}/${level - 1}", level) -> TaskIo(
-            p.file, p.store, chunkL, shardL,
-            p.settings.zstdLevel, p.settings.codecName,
-            p.settings.zarrFormat, p.settings.bloscCname, p.settings.bloscShuffle,
-            p.settings.v2Separator,
-            srcShape = p.trueShapes(level - 1), srcChunk = srcChunk,
-            srcShard = srcShard, factor = p.settings.scaleFactor,
-            mode = p.settings.downsampleMode,
-            // consume partials iff the wave that produced level-1 emitted
-            // them; emit partials for level+1 iff THIS wave's task grid
-            // is aligned and a next computed level exists
-            partialDir = if (fusesLevel(p, level)) partialDir(p, level + 1) else "",
-            partialSrcDir = if (fusesLevel(p, level - 1)) partialDir(p, level) else "")
-        }.toMap
-        val tasks = wave.flatMap(p => Geometry.shardTasks(
-          s"${p.store}/${level - 1}", level,
-          TrueShape(p.trueShapes(level)), p.specs(level)._2))
-        (tasks, io)
+    // wave 0 holds every level read from an Imaris file; wave l ≥ 1 the
+    // computed level l of every file, pooled across files. A file's tasks
+    // stay contiguous, so most partitions touch few files and the
+    // per-partition reader cache hits.
+    def wave(p: FilePlan, level: Int): Int = if (p.settings.translatePyramid) 0 else level
+    val waves: Seq[Seq[ShardTask]] =
+      (0 until plans.map(_.trueShapes.length).maxOption.getOrElse(0)).map { w =>
+        for {
+          p <- plans
+          l <- p.trueShapes.indices if wave(p, l) == w
+          t <- Geometry.shardTasks(p.file, l, TrueShape(p.trueShapes(l)), p.specs(l)._2)
+        } yield t
       }
 
     // ---- live progress: log as shard completions stream in (A5) ----
-    val totalTasks = readTasks.size + computeWaves.map(_._1.size).sum
+    val totalTasks = waves.map(_.size).sum
     val listener = progress.map { p =>
       val logEvery = math.max(1L, totalTasks / 10L)
       val lastLogged = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -389,11 +347,7 @@ object ImarisToZarr {
     }
 
     try {
-      val allStats = scala.collection.mutable.ArrayBuffer.empty[ShardStats]
-      allStats ++= runReadWave(spark, readTasks, readIo, serConf, progress)
-      for ((tasks, io) <- computeWaves)
-        allStats ++= runComputeWave(spark, tasks, io, serConf, progress)
-      allStats.toSeq
+      waves.flatMap(runWave(spark, _, io, serConf, progress))
     } finally {
       listener.foreach(spark.sparkContext.removeSparkListener)
       // fused-reduction scratch is consumed by the next level's wave;
@@ -432,26 +386,33 @@ object ImarisToZarr {
     math.max(1, math.min(nTasks, math.min(slots, cap)))
   }
 
-  /** One pooled Spark job over every read-from-IMS task (all files, all
-    * translated levels).
+  /** One pooled Spark job over the tasks of one wave: each task gets its
+    * region from its [[Source]], writes it, emits the next level's
+    * partial if that level is fused, and returns its stats row.
     */
-  private def runReadWave(
+  private def runWave(
       spark: SparkSession, tasks: Seq[ShardTask], io: Map[(String, Int), TaskIo],
       serConf: SerializableConfiguration,
       progress: Option[Progress]): Seq[ShardStats] = {
     if (tasks.isEmpty) return Seq.empty
     import spark.implicits._
-    // region bytes (uint16) + ~2× decode/encode scratch
-    val maxTaskBytes = tasks.map(t =>
-      (t.z1 - t.z0) * (t.y1 - t.y0) * (t.x1 - t.x0) * 2L).max * 3
-    val parallelism = memoryCappedParallelism(spark, tasks.size, maxTaskBytes)
+    // live bytes per task: the uint16 region plus the source it holds
+    // beside it (one partial, or the ×factor source region), ×3 for
+    // decode/encode scratch
+    val maxTaskBytes = tasks.map { t =>
+      val spec = io((t.file, t.level))
+      val region = (t.z1 - t.z0) * (t.y1 - t.y0) * (t.x1 - t.x0)
+      spec.source match {
+        case FromHdf5 => region * 2L
+        case FromPartials(_, tile, _) => (region + tile.voxels) * 2L
+        case _: FromStore => region * spec.factor.voxels * 2L
+      }
+    }.max * 3
     // parallelize slices the task list directly — repartition() would
     // add the conversion path's ONLY shuffle for nothing (and local-mode
-    // shuffle RPC stalls for minutes under gVisor on multi-GB runs).
-    // flatMap order groups a file's tasks contiguously, so most
-    // partitions touch few files and the per-partition reader cache hits.
-    val taskDs: Dataset[ShardTask] =
-      spark.createDataset(spark.sparkContext.parallelize(tasks, parallelism))
+    // shuffle RPC stalls for minutes under gVisor on multi-GB runs)
+    val taskDs = spark.createDataset(spark.sparkContext.parallelize(
+      tasks, memoryCappedParallelism(spark, tasks.size, maxTaskBytes)))
     taskDs.mapPartitions { it =>
       // one reader per (partition, file): the reference holds one HDF5
       // handle per worker-file (D5, `imaris_job.py:601-609`); the chunk
@@ -463,208 +424,88 @@ object ImarisToZarr {
       // mid-partition would otherwise leak the open input streams
       Option(org.apache.spark.TaskContext.get()).foreach(
         _.addTaskCompletionListener[Unit](_ => readers.values.foreach(_.close())))
-      // ONE region buffer per partition, reused across its tasks: a fresh
-      // 268 MB humongous array per 512³ task was the pipeline's dominant
-      // allocation (and concurrent humongous allocation is pathologically
-      // slow under syscall-intercepting sandboxes)
-      var regionBuf: Array[Short] = Array.emptyShortArray
-      var partialBuf: Array[Short] = Array.emptyShortArray
+      // ONE buffer of each kind per partition, reused across its tasks: a
+      // fresh 268 MB humongous array per 512³ task was the pipeline's
+      // dominant allocation (and concurrent humongous allocation is
+      // pathologically slow under syscall-intercepting sandboxes)
+      var regionBuf: Array[Short] = Array.emptyShortArray  // the task's region
+      var srcBuf: Array[Short] = Array.emptyShortArray     // a partial or the ×factor source
+      var partialBuf: Array[Short] = Array.emptyShortArray // the next level's partial
       lazy val partialScratch = new PartialStore.Scratch
+      def grown(buf: Array[Short], n: Long): Array[Short] =
+        if (buf.length >= n) buf else new Array[Short](n.toInt)
       it.map { t =>
         val spec = io((t.file, t.level))
-        val r = readers.getOrElseUpdate(t.file, new Hdf5Reader(t.file, serConf.value))
-        val ds = datasets.getOrElseUpdate((t.file, t.level),
-          r.openDataset(Imaris.dataPath(t.level)))
-        val nVox = ((t.z1 - t.z0) * (t.y1 - t.y0) * (t.x1 - t.x0)).toInt
-        if (regionBuf.length < nVox) regionBuf = new Array[Short](nVox)
-        val data = r.readRegionInto(ds, t.z0, t.z1, t.y0, t.y1, t.x0, t.x1, regionBuf)
-        val dataShape = Shape3(t.z1 - t.z0, t.y1 - t.y0, t.x1 - t.x0)
+        val f = spec.factor
+        val origin = Shape3(t.z0, t.y0, t.x0)
+        val end = Shape3(t.z1, t.y1, t.x1)
+        val shape = Shape3(t.z1 - t.z0, t.y1 - t.y0, t.x1 - t.x0)
+        regionBuf = grown(regionBuf, shape.voxels)
+        spec.source match {
+          case FromHdf5 =>
+            val r = readers.getOrElseUpdate(t.file, new Hdf5Reader(t.file, serConf.value))
+            val ds = datasets.getOrElseUpdate((t.file, t.level),
+              r.openDataset(Imaris.dataPath(t.level)))
+            r.readRegionInto(ds, t.z0, t.z1, t.y0, t.y1, t.x0, t.x1, regionBuf)
+          case FromPartials(dir, tile, levelShape) =>
+            // a plain region copy over 1/∏factor of the source bytes; the
+            // partials tile the level, so every region voxel is written
+            Voxels.forEachTile(origin, end, tile, levelShape) { p =>
+              srcBuf = grown(srcBuf, p.shape.voxels)
+              PartialStore.readInto(serConf.value, s"$dir/${p.gz}_${p.gy}_${p.gx}",
+                p.shape, srcBuf, partialScratch)
+              Voxels.copyBox(srcBuf, p.shape, p.origin, regionBuf, shape, origin, p.lo, p.extent)
+            }
+          case FromStore(levelDir, src, srcShard, srcChunk) =>
+            val lo = Shape3(t.z0 * f.z, t.y0 * f.y, t.x0 * f.x)
+            val hi = Shape3(math.min(t.z1 * f.z, src.z), math.min(t.y1 * f.y, src.y),
+              math.min(t.x1 * f.x, src.x))
+            val srcShape = Shape3(hi.z - lo.z, hi.y - lo.y, hi.x - lo.x)
+            srcBuf = grown(srcBuf, srcShape.voxels)
+            if (spec.zarrFormat == 2)
+              ZarrV2.readRegionInto(serConf.value, levelDir, src, srcChunk,
+                lo.z, hi.z, lo.y, hi.y, lo.x, hi.x, srcBuf, spec.separator)
+            else ZarrRegion.readInto(serConf.value, levelDir, src, srcShard, srcChunk,
+              lo.z, hi.z, lo.y, hi.y, lo.x, hi.x, srcBuf)
+            Downsample.reduceInto(srcBuf, srcShape, shape, f, spec.mode, regionBuf)
+        }
         // streaming encode+write: peak task state is the voxel region +
-        // one chunk, not an extra fully-assembled shard buffer — wide
-        // executors stay far from the GC wall
+        // one chunk, not an extra fully-assembled shard buffer
         val (key, written) =
-          if (spec.zarrFormat == 2) {
-            val w = graft.sinks.ZarrV2.writeRegionChunks(
-              serConf.value, s"${spec.store}/${t.level}", data, dataShape,
-              Shape3(t.z0, t.y0, t.x0), spec.chunk,
-              spec.cname, spec.zstdLevel, spec.shuffle, spec.separator)
-            (graft.sinks.ZarrV2.chunkKey(t.sz, t.sy, t.sx, spec.separator), w)
-          } else {
+          if (spec.zarrFormat == 2)
+            (ZarrV2.chunkKey(t.sz, t.sy, t.sx, spec.separator),
+              ZarrV2.writeRegionChunks(serConf.value, s"${spec.store}/${t.level}", regionBuf,
+                shape, origin, spec.chunk, spec.cname, spec.zstdLevel, spec.shuffle, spec.separator))
+          else {
             val k = ZarrV3.shardKey(t.sz, t.sy, t.sx)
-            val w = ZarrV3.writeShard(serConf.value, s"${spec.store}/${t.level}/$k",
-              data, dataShape, spec.shard, spec.chunk, spec.zstdLevel, spec.codec)
-            (k, w)
+            (k, ZarrV3.writeShard(serConf.value, s"${spec.store}/${t.level}/$k",
+              regionBuf, shape, spec.shard, spec.chunk, spec.zstdLevel, spec.codec))
           }
-        // fused level-1 partial: reduce the region we already hold and
-        // stash it for the level-1 assembly wave (Settings.fuseDownsample).
-        // Task borders are factor-aligned (planner precondition), so every
-        // output window is wholly local and the partial is exact.
+        // task borders are factor-aligned (planner precondition), so every
+        // next-level output window is wholly local and the partial is exact
         if (spec.partialDir.nonEmpty) {
-          val f = spec.factor
           val pShape = Shape3(
             Geometry.ceilDiv(t.z1, f.z) - t.z0 / f.z,
             Geometry.ceilDiv(t.y1, f.y) - t.y0 / f.y,
             Geometry.ceilDiv(t.x1, f.x) - t.x0 / f.x)
-          if (partialBuf.length < pShape.voxels)
-            partialBuf = new Array[Short](pShape.voxels.toInt)
-          Downsample.reduceInto(data, dataShape, pShape, f, spec.mode, partialBuf)
+          partialBuf = grown(partialBuf, pShape.voxels)
+          Downsample.reduceInto(regionBuf, shape, pShape, f, spec.mode, partialBuf)
           PartialStore.write(serConf.value,
             s"${spec.partialDir}/${t.sz}_${t.sy}_${t.sx}", partialBuf, pShape,
             partialScratch)
         }
         progress.foreach { p => p.shards.add(1L); p.bytes.add(written) }
-        ShardStats(t.file, t.level, key, written, dataShape.voxels)
-      }
-    }.collect().toSeq
-  }
-
-  /** One pooled Spark job downsampling level l−1 → l across all files. */
-  private def runComputeWave(
-      spark: SparkSession, tasks: Seq[ShardTask], io: Map[(String, Int), TaskIo],
-      serConf: SerializableConfiguration,
-      progress: Option[Progress]): Seq[ShardStats] = {
-    if (tasks.isEmpty) return Seq.empty
-    import spark.implicits._
-    // the downsample task holds the ×factor SOURCE region + the output —
-    // unless it assembles read-wave partials, which needs only the output
-    // region plus one already-reduced partial as scratch
-    val maxTaskBytes = tasks.map { t =>
-      val spec = io((t.file, t.level))
-      val f = spec.factor
-      if (spec.partialSrcDir.nonEmpty) {
-        val partialVox = spec.srcShard.voxels / math.max(1L, f.z * f.y * f.x)
-        ((t.z1 - t.z0) * (t.y1 - t.y0) * (t.x1 - t.x0) + partialVox) * 2L
-      } else
-        (t.z1 - t.z0) * f.z * (t.y1 - t.y0) * f.y * (t.x1 - t.x0) * f.x * 2L
-    }.max * 3
-    val taskDs = spark.createDataset(spark.sparkContext.parallelize(
-      tasks, memoryCappedParallelism(spark, tasks.size, maxTaskBytes)))
-    taskDs.mapPartitions { it =>
-      // per-partition source/output buffers reused across the partition's
-      // tasks — the same humongous-allocation avoidance as the read wave
-      // (round 5), applied to the downsample wave: a 512³ compute task
-      // otherwise allocates a fresh ×8 source region per task
-      var srcBuf: Array[Short] = Array.emptyShortArray
-      lazy val partialScratch = new PartialStore.Scratch
-      var dstBuf: Array[Short] = Array.emptyShortArray
-      var partialBuf: Array[Short] = Array.emptyShortArray
-      it.map { t =>
-      val spec = io((t.file, t.level))
-      val f = spec.factor
-      val src = spec.srcShape
-      val dataShape = Shape3(t.z1 - t.z0, t.y1 - t.y0, t.x1 - t.x0)
-      if (dstBuf.length < dataShape.voxels) dstBuf = new Array[Short](dataShape.voxels.toInt)
-      val reduced = if (spec.partialSrcDir.nonEmpty) {
-        // FUSED path: the read wave already reduced each L0 task's region;
-        // assemble this task's output from the overlapping partials — a
-        // plain region copy over 1/∏factor of the source bytes, with no
-        // L0 chunk decode. Partial (gz,gy,gx) covers the L1 region that is
-        // the image of L0 task [g·shard, (g+1)·shard) under ÷factor.
-        val g = spec.srcShard
-        var gz = t.z0 * f.z / g.z
-        while (gz * g.z < t.z1 * f.z && gz * g.z < src.z) {
-          var gy = t.y0 * f.y / g.y
-          while (gy * g.y < t.y1 * f.y && gy * g.y < src.y) {
-            var gx = t.x0 * f.x / g.x
-            while (gx * g.x < t.x1 * f.x && gx * g.x < src.x) {
-              val pz0 = gz * g.z / f.z
-              val pz1 = Geometry.ceilDiv(math.min((gz + 1) * g.z, src.z), f.z)
-              val py0 = gy * g.y / f.y
-              val py1 = Geometry.ceilDiv(math.min((gy + 1) * g.y, src.y), f.y)
-              val px0 = gx * g.x / f.x
-              val px1 = Geometry.ceilDiv(math.min((gx + 1) * g.x, src.x), f.x)
-              val pShape = Shape3(pz1 - pz0, py1 - py0, px1 - px0)
-              if (srcBuf.length < pShape.voxels)
-                srcBuf = new Array[Short](pShape.voxels.toInt)
-              PartialStore.readInto(serConf.value,
-                s"${spec.partialSrcDir}/${gz}_${gy}_$gx", pShape, srcBuf,
-                partialScratch)
-              // copy the intersection of the partial with this task's region
-              val izLo = math.max(t.z0, pz0); val izHi = math.min(t.z1, pz1)
-              val iyLo = math.max(t.y0, py0); val iyHi = math.min(t.y1, py1)
-              val ixLo = math.max(t.x0, px0); val ixHi = math.min(t.x1, px1)
-              var z = izLo
-              while (z < izHi) {
-                var y = iyLo
-                while (y < iyHi) {
-                  val sBase = (((z - pz0) * pShape.y + (y - py0)) * pShape.x + (ixLo - px0)).toInt
-                  val dBase = (((z - t.z0) * dataShape.y + (y - t.y0)) * dataShape.x + (ixLo - t.x0)).toInt
-                  val run = (ixHi - ixLo).toInt
-                  var i = 0
-                  while (i < run) { dstBuf(dBase + i) = srcBuf(sBase + i); i += 1 }
-                  y += 1
-                }
-                z += 1
-              }
-              gx += 1
-            }
-            gy += 1
-          }
-          gz += 1
-        }
-        dstBuf
-      } else {
-        // read the ×factor source region from level l-1's shards
-        val sz0 = t.z0 * f.z; val sz1 = math.min(t.z1 * f.z, src.z)
-        val sy0 = t.y0 * f.y; val sy1 = math.min(t.y1 * f.y, src.y)
-        val sx0 = t.x0 * f.x; val sx1 = math.min(t.x1 * f.x, src.x)
-        val nSrc = ((sz1 - sz0) * (sy1 - sy0) * (sx1 - sx0)).toInt
-        if (srcBuf.length < nSrc) srcBuf = new Array[Short](nSrc)
-        val srcData =
-          if (spec.zarrFormat == 2)
-            graft.sinks.ZarrV2.readRegionInto(
-              serConf.value, t.file, src, spec.srcChunk,
-              sz0, sz1, sy0, sy1, sx0, sx1, srcBuf, spec.separator)
-          else ZarrRegion.readInto(
-            serConf.value, t.file, src, spec.srcShard, spec.srcChunk,
-            sz0, sz1, sy0, sy1, sx0, sx1, srcBuf)
-        Downsample.reduceInto(
-          srcData, Shape3(sz1 - sz0, sy1 - sy0, sx1 - sx0), dataShape, f, spec.mode, dstBuf)
-      }
-      val (key, written) =
-        if (spec.zarrFormat == 2) {
-          val w = graft.sinks.ZarrV2.writeRegionChunks(
-            serConf.value, s"${spec.store}/${t.level}", reduced, dataShape,
-            Shape3(t.z0, t.y0, t.x0), spec.chunk,
-            spec.cname, spec.zstdLevel, spec.shuffle, spec.separator)
-          (graft.sinks.ZarrV2.chunkKey(t.sz, t.sy, t.sx, spec.separator), w)
-        } else {
-          val k = ZarrV3.shardKey(t.sz, t.sy, t.sx)
-          val w = ZarrV3.writeShard(serConf.value, s"${spec.store}/${t.level}/$k",
-            reduced, dataShape, spec.shard, spec.chunk, spec.zstdLevel, spec.codec)
-          (k, w)
-        }
-      // recursive fusion (round 9): this task already holds its reduced
-      // level-l output, so emit the level-(l+1) partial the same way the
-      // read wave does for level 1 — task borders are factor-aligned
-      // (planner precondition), so every next-level output window is
-      // wholly local and the partial is exact. The next wave then
-      // assembles partials instead of re-reading THIS level's store.
-      if (spec.partialDir.nonEmpty) {
-        val pShape = Shape3(
-          Geometry.ceilDiv(t.z1, f.z) - t.z0 / f.z,
-          Geometry.ceilDiv(t.y1, f.y) - t.y0 / f.y,
-          Geometry.ceilDiv(t.x1, f.x) - t.x0 / f.x)
-        if (partialBuf.length < pShape.voxels)
-          partialBuf = new Array[Short](pShape.voxels.toInt)
-        Downsample.reduceInto(reduced, dataShape, pShape, f, spec.mode, partialBuf)
-        PartialStore.write(serConf.value,
-          s"${spec.partialDir}/${t.sz}_${t.sy}_${t.sx}", partialBuf, pShape,
-          partialScratch)
-      }
-      progress.foreach { p => p.shards.add(1L); p.bytes.add(written) }
-      // stats are keyed by the ORIGINAL ims path (not the source level
-      // dir) so callers can aggregate per input file across waves
-      ShardStats(spec.origFile, t.level, key, written, dataShape.voxels)
+        ShardStats(t.file, t.level, key, written, shape.voxels)
       }
     }.collect().toSeq
   }
 }
 
-/** Scratch store for fused level-1 partial reductions (one blob per L0
-  * read task): 12-byte header of int32-BE dims, then a zstd-1 compressed
-  * little-endian int16 payload. Lives at `<store>/1/.partial/` between the
-  * read wave and the level-1 assembly wave, deleted by the driver after.
+/** Scratch store for fused partial reductions (one blob per task of the
+  * level below): 12-byte header of int32-BE dims, then a zstd-1 compressed
+  * little-endian int16 payload. Lives at `<store>/<level>/.partial/`
+  * between the wave that writes it and the wave that assembles it,
+  * deleted by the driver after.
   * zstd level 1 (not the store's clevel): this data is written once, read
   * once, and deleted — cheap-to-encode beats small-on-disk.
   */
@@ -692,20 +533,13 @@ object PartialStore {
     val n = shape.voxels.toInt
     val bound = Zstd.compressBound(n.toLong * 2).toInt
     scratch.ensure(n * 2, bound)
-    val raw = scratch.raw
-    var i = 0
-    while (i < n) {
-      val v = data(i)
-      raw(2 * i) = (v & 0xff).toByte
-      raw(2 * i + 1) = ((v >> 8) & 0xff).toByte
-      i += 1
-    }
+    Voxels.toLE(data, n, scratch.raw)
     // header + payload share one reused buffer: int32-BE dims at [0,12),
     // zstd-1 stream compressed directly at offset 12 — zero extra copies
     val dst = scratch.packed
     val bb = java.nio.ByteBuffer.wrap(dst, 0, 12)
     bb.putInt(shape.z.toInt).putInt(shape.y.toInt).putInt(shape.x.toInt)
-    val m = Zstd.compressByteArray(dst, 12, dst.length - 12, raw, 0, n * 2, 1).toInt
+    val m = Zstd.compressByteArray(dst, 12, dst.length - 12, scratch.raw, 0, n * 2, 1).toInt
     graft.sinks.ZarrV3.write(conf, path, dst, 12 + m)
   }
 
@@ -721,14 +555,9 @@ object PartialStore {
     val n = got.voxels.toInt
     require(out.length >= n, s"partial buffer ${out.length} < $n")
     scratch.ensure(n * 2, 0)
-    val raw = scratch.raw
-    val m = Zstd.decompressByteArray(raw, 0, n * 2, bytes, 12, bytes.length - 12)
+    val m = Zstd.decompressByteArray(scratch.raw, 0, n * 2, bytes, 12, bytes.length - 12)
     require(m == n * 2, s"partial $path expanded to $m, want ${n * 2}")
-    var i = 0
-    while (i < n) {
-      out(i) = ((raw(2 * i) & 0xff) | (raw(2 * i + 1) << 8)).toShort
-      i += 1
-    }
+    Voxels.fromLE(scratch.raw, 0, out, n)
     out
   }
 }
@@ -753,45 +582,15 @@ object ZarrRegion {
                levelDir: String, shape: Shape3, shard: Shape3, chunk: Shape3,
                z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long,
                out: Array[Short]): Array[Short] = {
-    val nz = (z1 - z0).toInt; val ny = (y1 - y0).toInt; val nx = (x1 - x0).toInt
-    require(out.length >= nz.toLong * ny * nx,
-      s"region buffer ${out.length} < ${nz.toLong * ny * nx}")
+    val region = Shape3(z1 - z0, y1 - y0, x1 - x0)
+    require(out.length >= region.voxels, s"region buffer ${out.length} < ${region.voxels}")
+    val lo = Shape3(z0, y0, x0)
     var shardBuf: Array[Short] = Array.emptyShortArray
-    var gz = z0 / shard.z
-    while (gz * shard.z < z1) {
-      var gy = y0 / shard.y
-      while (gy * shard.y < y1) {
-        var gx = x0 / shard.x
-        while (gx * shard.x < x1) {
-          val s0z = gz * shard.z; val s0y = gy * shard.y; val s0x = gx * shard.x
-          val dShape = Shape3(
-            math.min(shard.z, shape.z - s0z),
-            math.min(shard.y, shape.y - s0y),
-            math.min(shard.x, shape.x - s0x))
-          val path = s"$levelDir/${ZarrV3.shardKey(gz, gy, gx)}"
-          if (shardBuf.length < dShape.voxels) shardBuf = new Array[Short](dShape.voxels.toInt)
-          val data = ZarrV3.decodeShardInto(ZarrV3.read(conf, path), dShape, shard, chunk, shardBuf)
-          val izLo = math.max(z0, s0z); val izHi = math.min(z1, s0z + dShape.z)
-          val iyLo = math.max(y0, s0y); val iyHi = math.min(y1, s0y + dShape.y)
-          val ixLo = math.max(x0, s0x); val ixHi = math.min(x1, s0x + dShape.x)
-          var z = izLo
-          while (z < izHi) {
-            var y = iyLo
-            while (y < iyHi) {
-              val srcBase = (((z - s0z) * dShape.y + (y - s0y)) * dShape.x + (ixLo - s0x)).toInt
-              val dstBase = (((z - z0) * ny + (y - y0)) * nx + (ixLo - x0)).toInt
-              var i = 0
-              val run = (ixHi - ixLo).toInt
-              while (i < run) { out(dstBase + i) = data(srcBase + i); i += 1 }
-              y += 1
-            }
-            z += 1
-          }
-          gx += 1
-        }
-        gy += 1
-      }
-      gz += 1
+    Voxels.forEachTile(lo, Shape3(z1, y1, x1), shard, shape) { t =>
+      val path = s"$levelDir/${ZarrV3.shardKey(t.gz, t.gy, t.gx)}"
+      if (shardBuf.length < t.shape.voxels) shardBuf = new Array[Short](t.shape.voxels.toInt)
+      ZarrV3.decodeShardInto(ZarrV3.read(conf, path), t.shape, shard, chunk, shardBuf, path)
+      Voxels.copyBox(shardBuf, t.shape, t.origin, out, region, lo, t.lo, t.extent)
     }
     out
   }

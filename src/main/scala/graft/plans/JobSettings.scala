@@ -51,11 +51,7 @@ final case class JobSettings(
     bloscShuffle: String = "shuffle",
     // v2 chunk-key layout: "." flat (zarr-python + reference default),
     // "/" nested directory store (not a reference knob — ecosystem interop)
-    v2Separator: String = ".",
-    // fuse the level-1 reduction into the L0 read wave when the task grid
-    // is factor-aligned (see ImarisToZarr.Settings.fuseDownsample); off
-    // switch kept for A/B measurement — outputs are identical either way
-    fuseDownsample: Boolean = true) {
+    v2Separator: String = ".") {
 
   def validated: JobSettings = {
     require(inputSource.nonEmpty, "input_source is required")
@@ -90,14 +86,14 @@ object JobSettings {
 
   /** Keys we parse. `use_tensorstore` (the reference's v2-vs-v3 writer
     * switch, models.py:91-98) and `compressor_kwargs` (cname/clevel/
-    * shuffle, with P8's shuffle-name map) are honored since round 6.
+    * shuffle, with P8's shuffle-name map) are honored.
     */
   private val Known = Set(
     "input_source", "output_directory", "s3_location", "shard_size",
     "chunk_size", "scale_factor", "downsample_levels", "downsample_mode",
     "translate_imaris_pyramid", "partition_mode", "single_tile_upload",
     "zstd_level", "codec", "zarr_format", "use_tensorstore",
-    "compressor_kwargs", "dimension_separator", "fuse_downsample")
+    "compressor_kwargs", "dimension_separator")
 
   /** Reference keys accepted for config compatibility but meaningless on
     * Spark (see class scaladoc).
@@ -170,8 +166,7 @@ object JobSettings {
       zarrFormat = fmt,
       bloscCname = kwargsCname.getOrElse("zstd"),
       bloscShuffle = kwargsShuffle.getOrElse("shuffle"),
-      v2Separator = str("dimension_separator").getOrElse("."),
-      fuseDownsample = bool("fuse_downsample", d = true)
+      v2Separator = str("dimension_separator").getOrElse(".")
     ).validated
   }
 
@@ -218,8 +213,7 @@ object JobSettings {
       zarrFormat = v("zarr_format").map(_.toInt).getOrElse(3),
       bloscCname = v("blosc_cname").getOrElse("zstd"),
       bloscShuffle = v("blosc_shuffle").getOrElse("shuffle"),
-      v2Separator = v("dimension_separator").getOrElse("."),
-      fuseDownsample = v("fuse_downsample").forall(_.toBoolean)
+      v2Separator = v("dimension_separator").getOrElse(".")
     ).validated
   }
 }

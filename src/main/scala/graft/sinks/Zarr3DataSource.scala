@@ -12,6 +12,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.core.Geometry.Shape3
+import graft.core.Voxels
 
 /** DataSource V2 `zarr3` sink (SURVEY §2.3's "zarr_write" item): writes
   * shard-region rows into one Zarr v3 sharded level.
@@ -149,9 +150,7 @@ final class Zarr3WriterFactory(
         val payload = row.getBinary(idx("data"))
         val dataShape = Shape3(l("z1") - l("z0"), l("y1") - l("y0"), l("x1") - l("x0"))
         val voxels = new Array[Short](payload.length / 2)
-        val bb = java.nio.ByteBuffer.wrap(payload).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        var i = 0
-        while (i < voxels.length) { voxels(i) = bb.getShort(2 * i); i += 1 }
+        Voxels.fromLE(payload, 0, voxels, voxels.length)
         val written = ZarrV3.writeShard(
           conf, s"$path/${ZarrV3.shardKey(l("sz"), l("sy"), l("sx"))}",
           voxels, dataShape, shard, chunk, zstdLevel, codec)

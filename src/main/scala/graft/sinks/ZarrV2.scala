@@ -1,11 +1,9 @@
 package graft.sinks
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 import org.apache.hadoop.conf.Configuration
 
 import graft.core.Geometry.Shape3
-import graft.core.Json
+import graft.core.{Json, Voxels}
 import graft.core.Json._
 
 /** Zarr v2 store writer — the reference's legacy output path (W1,
@@ -61,8 +59,8 @@ object ZarrV2 {
   /** Write every chunk file of a shard-aligned region. `regionData` holds
     * the region voxels in C order (possibly in an oversized reused
     * buffer); `origin` is the region's global voxel origin (a multiple of
-    * `chunk` by construction — shard % chunk == 0); `arrayShape` bounds
-    * edge clipping. Returns bytes written.
+    * `chunk` by construction — shard % chunk == 0); chunks are clipped
+    * to the region. Returns bytes written.
     */
   def writeRegionChunks(
       fsConf: Configuration,
@@ -82,46 +80,21 @@ object ZarrV2 {
     require(origin.z % chunk.z == 0 && origin.y % chunk.y == 0 && origin.x % chunk.x == 0,
       s"region origin $origin not chunk-aligned to $chunk")
     val chunkVox = chunk.voxels.toInt
-    val buf = ByteBuffer.allocate(chunkVox * 2).order(ByteOrder.LITTLE_ENDIAN)
+    val staged = new Array[Short](chunkVox)
+    val raw = new Array[Byte](chunkVox * 2)
+    val end = Shape3(origin.z + dataShape.z, origin.y + dataShape.y, origin.x + dataShape.x)
     var written = 0L
-    var z0 = 0L
-    while (z0 < dataShape.z) {
-      var y0 = 0L
-      while (y0 < dataShape.y) {
-        var x0 = 0L
-        while (x0 < dataShape.x) {
-          buf.clear()
-          val zHi = math.min(chunk.z, dataShape.z - z0)
-          val yHi = math.min(chunk.y, dataShape.y - y0)
-          val xHi = math.min(chunk.x, dataShape.x - x0)
-          var z = 0L
-          while (z < chunk.z) {
-            var y = 0L
-            while (y < chunk.y) {
-              var x = 0L
-              if (z < zHi && y < yHi) {
-                val srcBase = (((z0 + z) * dataShape.y + (y0 + y)) * dataShape.x + x0).toInt
-                while (x < xHi) { buf.putShort(regionData(srcBase + x.toInt)); x += 1 }
-              }
-              while (x < chunk.x) { buf.putShort(Fill); x += 1 }
-              y += 1
-            }
-            z += 1
-          }
-          val comp = Blosc.compress(buf.array(), typesize = 2, cname = cname,
-            clevel = clevel, shuffle = shuffle)
-          // "/" yields zarr-python's nested store layout (subdirectories);
-          // the FS create makes parents, so both layouts share this path
-          val key = chunkKey(
-            (origin.z + z0) / chunk.z, (origin.y + y0) / chunk.y,
-            (origin.x + x0) / chunk.x, separator)
-          ZarrV3.write(fsConf, s"$levelDir/$key", comp)
-          written += comp.length
-          x0 += chunk.x
-        }
-        y0 += chunk.y
-      }
-      z0 += chunk.z
+    Voxels.forEachTile(origin, end, chunk, end) { t =>
+      // chunks are always stored full-size, fill-padded at the region edge
+      if (t.extent != chunk) java.util.Arrays.fill(staged, Fill)
+      Voxels.copyBox(regionData, dataShape, origin, staged, chunk, t.origin, t.lo, t.extent)
+      Voxels.toLE(staged, chunkVox, raw)
+      val comp = Blosc.compress(raw, typesize = 2, cname = cname,
+        clevel = clevel, shuffle = shuffle)
+      // "/" yields zarr-python's nested store layout (subdirectories);
+      // the FS create makes parents, so both layouts share this path
+      ZarrV3.write(fsConf, s"$levelDir/${chunkKey(t.gz, t.gy, t.gx, separator)}", comp)
+      written += comp.length
     }
     written
   }
@@ -163,54 +136,25 @@ object ZarrV2 {
       out: Array[Short],
       separator: String = ".",
       allowMissing: Boolean = false): Array[Short] = {
-    val nz = (z1 - z0).toInt; val ny = (y1 - y0).toInt; val nx = (x1 - x0).toInt
-    require(out.length >= nz.toLong * ny * nx,
-      s"region buffer ${out.length} < ${nz.toLong * ny * nx}")
-    var gz = z0 / chunk.z
-    while (gz * chunk.z < z1) {
-      var gy = y0 / chunk.y
-      while (gy * chunk.y < y1) {
-        var gx = x0 / chunk.x
-        while (gx * chunk.x < x1) {
-          val c0z = gz * chunk.z; val c0y = gy * chunk.y; val c0x = gx * chunk.x
-          val key = Seq(gz, gy, gx).mkString(separator)
-          val raw =
-            try Blosc.decompress(ZarrV3.read(conf, s"$levelDir/$key"))
-            catch {
-              case _: java.io.FileNotFoundException if allowMissing => null
-            }
-          if (raw != null)
-            require(raw.length == chunk.voxels * 2,
-              s"chunk $key: ${raw.length} bytes, want ${chunk.voxels * 2}")
-          val cb =
-            if (raw == null) null
-            else ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-          val izLo = math.max(z0, c0z); val izHi = math.min(z1, math.min(c0z + chunk.z, shape.z))
-          val iyLo = math.max(y0, c0y); val iyHi = math.min(y1, math.min(c0y + chunk.y, shape.y))
-          val ixLo = math.max(x0, c0x); val ixHi = math.min(x1, math.min(c0x + chunk.x, shape.x))
-          var z = izLo
-          while (z < izHi) {
-            var y = iyLo
-            while (y < iyHi) {
-              val srcBase = (((z - c0z) * chunk.y + (y - c0y)) * chunk.x + (ixLo - c0x)).toInt
-              val dstBase = (((z - z0) * ny + (y - y0)) * nx + (ixLo - x0)).toInt
-              var i = 0
-              val run = (ixHi - ixLo).toInt
-              if (cb == null) {
-                // `out` is a reused buffer: the hole must be written, not skipped
-                while (i < run) { out(dstBase + i) = Fill; i += 1 }
-              } else {
-                while (i < run) { out(dstBase + i) = cb.getShort(2 * (srcBase + i)); i += 1 }
-              }
-              y += 1
-            }
-            z += 1
-          }
-          gx += 1
+    val region = Shape3(z1 - z0, y1 - y0, x1 - x0)
+    require(out.length >= region.voxels, s"region buffer ${out.length} < ${region.voxels}")
+    // `out` may be a reused buffer: a missing chunk's hole must be written
+    if (allowMissing) java.util.Arrays.fill(out, 0, region.voxels.toInt, Fill)
+    val lo = Shape3(z0, y0, x0)
+    val chunkVox = chunk.voxels.toInt
+    val decoded = new Array[Short](chunkVox)
+    Voxels.forEachTile(lo, Shape3(z1, y1, x1), chunk, shape) { t =>
+      val key = chunkKey(t.gz, t.gy, t.gx, separator)
+      val raw =
+        try Blosc.decompress(ZarrV3.read(conf, s"$levelDir/$key"))
+        catch {
+          case _: java.io.FileNotFoundException if allowMissing => null
         }
-        gy += 1
+      if (raw != null) {
+        require(raw.length == chunkVox * 2, s"chunk $key: ${raw.length} bytes, want ${chunkVox * 2}")
+        Voxels.fromLE(raw, 0, decoded, chunkVox)
+        Voxels.copyBox(decoded, chunk, t.origin, out, region, lo, t.lo, t.extent)
       }
-      gz += 1
     }
     out
   }

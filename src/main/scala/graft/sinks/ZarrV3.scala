@@ -8,7 +8,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import graft.core.Geometry.Shape3
-import graft.core.Json
+import graft.core.{Json, Voxels}
 import graft.core.Json._
 
 /** Zarr v3 sharded-store writer (reference W2: `create_scale_spec`,
@@ -32,6 +32,8 @@ object ZarrV3 {
 
   /** uint16 fill value used for padding partial edge chunks. */
   val Fill: Short = 0
+
+  private val Origin = Shape3(0, 0, 0)
 
   // ---- shard encoding -----------------------------------------------------
 
@@ -97,70 +99,46 @@ object ZarrV3 {
       level: Int,
       codec: String): Long = {
     // >= not ==: callers may pass a REUSED oversized region buffer (the
-    // per-partition scratch in ImarisToZarr waves); indexing below is
-    // purely coordinate-based over dataShape, so extra tail bytes are
-    // never touched
+    // per-partition scratch in ImarisToZarr waves)
     require(shardData.length >= dataShape.voxels,
       s"shard payload ${shardData.length} < ${dataShape.voxels}")
-    require(shardShape.z % chunkShape.z == 0 && shardShape.y % chunkShape.y == 0
-      && shardShape.x % chunkShape.x == 0, s"shard $shardShape not a multiple of chunk $chunkShape")
-    val grid = Shape3(shardShape.z / chunkShape.z, shardShape.y / chunkShape.y,
-      shardShape.x / chunkShape.x)
+    val grid = chunkGrid(shardShape, chunkShape)
     val nChunks = grid.voxels.toInt
     val chunkVox = chunkShape.voxels.toInt
     val index = ByteBuffer.allocate(nChunks * 16 + 4).order(ByteOrder.LITTLE_ENDIAN)
-    // ONE staging buffer reused across chunks; compressed chunks are
+    // every entry starts as missing (-1, -1): chunks wholly outside the
+    // data are elided
+    java.util.Arrays.fill(index.array(), 0, nChunks * 16, 0xff.toByte)
+    // ONE staging chunk reused across chunks; compressed chunks are
     // written as produced — peak state is O(chunk), never O(shard), and
     // shard files are no longer capped at a 2 GiB in-memory buffer
-    val buf = ByteBuffer.allocate(chunkVox * 2).order(ByteOrder.LITTLE_ENDIAN)
+    val chunk = new Array[Short](chunkVox)
+    val raw = new Array[Byte](chunkVox * 2)
     var off = 0L
-
-    var cz = 0L
-    while (cz < grid.z) {
-      var cy = 0L
-      while (cy < grid.y) {
-        var cx = 0L
-        while (cx < grid.x) {
-          val z0 = cz * chunkShape.z; val y0 = cy * chunkShape.y; val x0 = cx * chunkShape.x
-          if (z0 < dataShape.z && y0 < dataShape.y && x0 < dataShape.x) {
-            // materialize the full-size chunk, fill-padded at data edge
-            buf.clear()
-            val zHi = math.min(chunkShape.z, dataShape.z - z0)
-            val yHi = math.min(chunkShape.y, dataShape.y - y0)
-            val xHi = math.min(chunkShape.x, dataShape.x - x0)
-            var z = 0L
-            while (z < chunkShape.z) {
-              var y = 0L
-              while (y < chunkShape.y) {
-                var x = 0L
-                if (z < zHi && y < yHi) {
-                  val srcBase = (((z0 + z) * dataShape.y + (y0 + y)) * dataShape.x + x0).toInt
-                  while (x < xHi) { buf.putShort(shardData(srcBase + x.toInt)); x += 1 }
-                }
-                while (x < chunkShape.x) { buf.putShort(Fill); x += 1 }
-                y += 1
-              }
-              z += 1
-            }
-            val comp = compress(buf.array(), level, codec)
-            out.write(comp)
-            index.putLong(off); index.putLong(comp.length.toLong)
-            off += comp.length
-          } else {
-            index.putLong(-1L); index.putLong(-1L)
-          }
-          cx += 1
-        }
-        cy += 1
-      }
-      cz += 1
+    // data beyond the shard is not stored
+    Voxels.forEachTile(Origin, dataShape, chunkShape, shardShape) { t =>
+      // chunks are always stored full-size, fill-padded at the data edge
+      if (t.extent != chunkShape) java.util.Arrays.fill(chunk, Fill)
+      Voxels.copyBox(shardData, dataShape, Origin, chunk, chunkShape, t.origin, t.lo, t.extent)
+      Voxels.toLE(chunk, chunkVox, raw)
+      val comp = compress(raw, level, codec)
+      out.write(comp)
+      val ci = ((t.gz * grid.y + t.gy) * grid.x + t.gx).toInt
+      index.putLong(ci * 16, off).putLong(ci * 16 + 8, comp.length.toLong)
+      off += comp.length
     }
-
     val crc = new CRC32C()
     crc.update(index.array(), 0, nChunks * 16)
-    index.putInt(crc.getValue.toInt)
+    index.putInt(nChunks * 16, crc.getValue.toInt)
     out.write(index.array())
     off + nChunks * 16 + 4
+  }
+
+  /** The shard's inner-chunk grid. */
+  private def chunkGrid(shardShape: Shape3, chunkShape: Shape3): Shape3 = {
+    require(shardShape.z % chunkShape.z == 0 && shardShape.y % chunkShape.y == 0
+      && shardShape.x % chunkShape.x == 0, s"shard $shardShape not a multiple of chunk $chunkShape")
+    Shape3(shardShape.z / chunkShape.z, shardShape.y / chunkShape.y, shardShape.x / chunkShape.x)
   }
 
   /** Decode one shard file back to (Z,Y,X) voxels of `dataShape` — the
@@ -184,62 +162,59 @@ object ZarrV3 {
       dataShape: Shape3,
       shardShape: Shape3,
       chunkShape: Shape3,
-      out: Array[Short]): Array[Short] = {
+      out: Array[Short]): Array[Short] =
+    decodeShardInto(bytes, dataShape, shardShape, chunkShape, out, "shard")
+
+  /** [[decodeShardInto]] naming the shard (its path) in errors. The index
+    * is checked before any chunk is read: a file shorter than its index,
+    * a CRC32C mismatch or an entry outside the payload is an
+    * `IllegalArgumentException`.
+    */
+  def decodeShardInto(
+      bytes: Array[Byte],
+      dataShape: Shape3,
+      shardShape: Shape3,
+      chunkShape: Shape3,
+      out: Array[Short],
+      name: String): Array[Short] = {
     require(out.length >= dataShape.voxels,
       s"decode buffer ${out.length} < ${dataShape.voxels}")
-    java.util.Arrays.fill(out, 0, dataShape.voxels.toInt, Fill)
-    val grid = Shape3(shardShape.z / chunkShape.z, shardShape.y / chunkShape.y,
-      shardShape.x / chunkShape.x)
+    val grid = chunkGrid(shardShape, chunkShape)
     val nChunks = grid.voxels.toInt
     val indexLen = nChunks * 16
     val idxStart = bytes.length - indexLen - 4
+    require(idxStart >= 0,
+      s"$name: ${bytes.length} bytes, shorter than its ${indexLen + 4}-byte index")
     // NOTE: ByteBuffer.wrap(a, off, len) still indexes absolute gets from
     // a[0]; keep one whole-array buffer and offset explicitly.
     val whole = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    def idxLong(i: Int): Long = whole.getLong(idxStart + i * 8)
-    val crcStored = whole.getInt(idxStart + indexLen)
+    def entry(ci: Int, field: Int): Long = whole.getLong(idxStart + ci * 16 + field * 8)
     val crc = new CRC32C()
     crc.update(bytes, idxStart, indexLen)
-    require(crc.getValue.toInt == crcStored, "shard index CRC32C mismatch")
+    require(crc.getValue.toInt == whole.getInt(idxStart + indexLen),
+      s"$name: shard index CRC32C mismatch")
+    var ci = 0
+    while (ci < nChunks) {
+      val off = entry(ci, 0); val len = entry(ci, 1)
+      require(off == -1L || (off >= 0 && len >= 0 && len <= idxStart - off),
+        s"$name: index entry $ci ($off, $len) lies outside the payload [0, $idxStart)")
+      ci += 1
+    }
 
+    java.util.Arrays.fill(out, 0, dataShape.voxels.toInt, Fill)
     val chunkVox = chunkShape.voxels.toInt
     // one decode buffer reused across chunks (same GC-wall avoidance as
     // the encode side; a 512³ shard otherwise churns ~500 MB per read)
     val raw = new Array[Byte](chunkVox * 2)
-    var ci = 0
-    var cz = 0L
-    while (cz < grid.z) {
-      var cy = 0L
-      while (cy < grid.y) {
-        var cx = 0L
-        while (cx < grid.x) {
-          val off = idxLong(ci * 2)
-          val len = idxLong(ci * 2 + 1)
-          if (off != -1L) {
-            decompressInto(bytes, off.toInt, len.toInt, raw)
-            val cb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-            val z0 = cz * chunkShape.z; val y0 = cy * chunkShape.y; val x0 = cx * chunkShape.x
-            val zHi = math.min(chunkShape.z, dataShape.z - z0)
-            val yHi = math.min(chunkShape.y, dataShape.y - y0)
-            val xHi = math.min(chunkShape.x, dataShape.x - x0)
-            var z = 0L
-            while (z < zHi) {
-              var y = 0L
-              while (y < yHi) {
-                val srcBase = ((z * chunkShape.y + y) * chunkShape.x).toInt
-                val dstBase = (((z0 + z) * dataShape.y + (y0 + y)) * dataShape.x + x0).toInt
-                var x = 0
-                while (x < xHi) { out(dstBase + x) = cb.getShort(2 * (srcBase + x)); x += 1 }
-                y += 1
-              }
-              z += 1
-            }
-          }
-          ci += 1; cx += 1
-        }
-        cy += 1
+    val chunk = new Array[Short](chunkVox)
+    Voxels.forEachTile(Origin, dataShape, chunkShape, shardShape) { t =>
+      val ci = ((t.gz * grid.y + t.gy) * grid.x + t.gx).toInt
+      val off = entry(ci, 0)
+      if (off != -1L) {
+        decompressInto(bytes, off.toInt, entry(ci, 1).toInt, raw)
+        Voxels.fromLE(raw, 0, chunk, chunkVox)
+        Voxels.copyBox(chunk, chunkShape, t.origin, out, dataShape, Origin, t.lo, t.extent)
       }
-      cz += 1
     }
     out
   }

@@ -8,6 +8,9 @@ import scala.collection.mutable
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
 
+import graft.core.Geometry.Shape3
+import graft.core.Voxels
+
 /** Minimal HDF5 reader for the Imaris subset (SURVEY §7.4).
   *
   * Scope — what Imaris/.ims files written by libhdf5 use (reference
@@ -915,6 +918,7 @@ final class Hdf5Reader(val path: String, conf: Configuration) extends Closeable 
   private var inflateScratch: Array[Byte] = Array.emptyByteArray
   private var shuffleScratch: Array[Byte] = Array.emptyByteArray
   private var lz4Scratch: Array[Byte] = Array.emptyByteArray
+  private var voxelScratch: Array[Short] = Array.emptyShortArray
   private def grown(buf: Array[Byte], n: Int): Array[Byte] =
     if (buf.length >= n) buf else new Array[Byte](n)
 
@@ -1017,46 +1021,23 @@ final class Hdf5Reader(val path: String, conf: Configuration) extends Closeable 
                      z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long,
                      out: Array[Short]): Array[Short] = {
     require(ds.elemSize == 2, s"$path: only uint16/int16 payloads supported, got ${ds.elemSize} bytes")
-    val nz = (z1 - z0).toInt; val ny = (y1 - y0).toInt; val nx = (x1 - x0).toInt
-    require(out.length >= nz * ny * nx, s"$path: region buffer too small")
+    val region = Shape3(z1 - z0, y1 - y0, x1 - x0)
+    require(out.length >= region.voxels, s"$path: region buffer too small")
     // missing chunks mean fill-value voxels — zero the used prefix (a
     // fresh array arrives pre-zeroed; a reused scratch does not)
-    java.util.Arrays.fill(out, 0, nz * ny * nx, 0.toShort)
-    val (cz, cy, cx) = (ds.chunk(0), ds.chunk(1), ds.chunk(2))
-    var gz = z0 / cz
-    while (gz * cz < z1) {
-      var gy = y0 / cy
-      while (gy * cy < y1) {
-        var gx = x0 / cx
-        while (gx * cx < x1) {
-          ds.chunkIndex.get((gz * cz, gy * cy, gx * cx)).foreach { case (addr, len) =>
-            val chunkBytes = decodeChunk(ds, addr, len)
-            val cb = ByteBuffer.wrap(chunkBytes).order(ByteOrder.LITTLE_ENDIAN)
-            val izLo = math.max(z0, gz * cz); val izHi = math.min(z1, gz * cz + cz)
-            val iyLo = math.max(y0, gy * cy); val iyHi = math.min(y1, gy * cy + cy)
-            val ixLo = math.max(x0, gx * cx); val ixHi = math.min(x1, gx * cx + cx)
-            var z = izLo
-            while (z < izHi) {
-              var y = iyLo
-              while (y < iyHi) {
-                val srcBase = (((z - gz * cz) * cy + (y - gy * cy)) * cx + (ixLo - gx * cx)).toInt
-                val dstBase = (((z - z0) * ny + (y - y0)) * nx + (ixLo - x0)).toInt
-                var i = 0
-                val run = (ixHi - ixLo).toInt
-                while (i < run) {
-                  out(dstBase + i) = cb.getShort(2 * (srcBase + i))
-                  i += 1
-                }
-                y += 1
-              }
-              z += 1
-            }
-          }
-          gx += 1
-        }
-        gy += 1
+    java.util.Arrays.fill(out, 0, region.voxels.toInt, 0.toShort)
+    val chunk = Shape3(ds.chunk(0), ds.chunk(1), ds.chunk(2))
+    val chunkVox = chunk.voxels.toInt
+    val lo = Shape3(z0, y0, x0)
+    val hi = Shape3(z1, y1, x1)
+    // stored chunks are full-size, so tiles are clipped to the region only
+    Voxels.forEachTile(lo, hi, chunk, hi) { t =>
+      ds.chunkIndex.get((t.origin.z, t.origin.y, t.origin.x)).foreach { case (addr, len) =>
+        val chunkBytes = decodeChunk(ds, addr, len)
+        if (voxelScratch.length < chunkVox) voxelScratch = new Array[Short](chunkVox)
+        Voxels.fromLE(chunkBytes, 0, voxelScratch, chunkVox)
+        Voxels.copyBox(voxelScratch, chunk, t.origin, out, region, lo, t.lo, t.extent)
       }
-      gz += 1
     }
     out
   }

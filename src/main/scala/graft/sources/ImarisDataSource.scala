@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.Geometry
+import graft.core.{Geometry, Voxels}
 import graft.core.Geometry.{Shape3, TrueShape}
 
 /** DataSource V2 `imaris` source (SURVEY §2.3 polish item): exposes an
@@ -206,8 +206,7 @@ final class ImarisReaderFactory(
             val ds = r.openDataset(Imaris.dataPath(task.level))
             val voxels = r.readRegion(ds, task.z0, task.z1, task.y0, task.y1, task.x0, task.x1)
             val bytes = new Array[Byte](voxels.length * 2)
-            val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            voxels.foreach(bb.putShort)
+            Voxels.toLE(voxels, voxels.length, bytes)
             bytes
           case other => sys.error(s"unknown column $other")
         }

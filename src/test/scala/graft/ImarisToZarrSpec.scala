@@ -197,20 +197,6 @@ class ImarisToZarrSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(d((z * 128 + y) * 128 + x) == v(z, y, x, 0))
   }
 
-  test("taskOrder=interleave produces identical stats to contiguous") {
-    val files = Seq("ims_64.ims", "ims_sbv1.ims").map(f => s"${Fixtures.dir}/$f")
-    def run(order: String): Set[(String, Int, String, Long, Long)] = {
-      val out = Files.createTempDirectory(s"zarrord_$order").toString
-      ImarisToZarr.convertAll(spark, files, out,
-        _ => ImarisToZarr.Settings(
-          shard = Shape3(32, 32, 32), chunk = Shape3(16, 16, 16),
-          translatePyramid = true, taskOrder = order))
-        .map(s => (s.file.split('/').last, s.level, s.key, s.bytesWritten, s.voxels))
-        .toSet
-    }
-    assert(run("interleave") == run("contiguous"))
-  }
-
   test("convertAll pools files into one job per level-wave; progress totals match") {
     import java.util.concurrent.atomic.AtomicInteger
     val out = Files.createTempDirectory("zarrpool").toString

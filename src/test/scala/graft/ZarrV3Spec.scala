@@ -35,6 +35,42 @@ class ZarrV3Spec extends AnyFunSuite {
     }
   }
 
+  test("hostile shard bytes: a truncated file or an entry outside the payload is rejected by name") {
+    val ds = Shape3(8, 8, 8)
+    val (shard, chunk) = (Shape3(8, 8, 8), Shape3(4, 4, 4))
+    val bytes = ZarrV3.encodeShard(Array.tabulate(512)(i => i.toShort), ds, shard, chunk)
+    val indexLen = 8 * 16
+    val idxStart = bytes.length - indexLen - 4
+    val dir = java.nio.file.Files.createTempDirectory("zarrv3hostile").toString
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val path = s"$dir/${ZarrV3.shardKey(0, 0, 0)}"
+    def readByPath(b: Array[Byte]): IllegalArgumentException = {
+      ZarrV3.write(conf, path, b)
+      intercept[IllegalArgumentException](
+        graft.plans.ZarrRegion.read(conf, dir, ds, shard, chunk, 0, 8, 0, 8, 0, 8))
+    }
+    // shorter than its index (and shorter than the 4-byte CRC alone)
+    for (n <- Seq(indexLen + 3, 2)) {
+      val e = readByPath(bytes.take(n))
+      assert(e.getMessage.contains(path) && e.getMessage.contains("index"), e.getMessage)
+      intercept[IllegalArgumentException](ZarrV3.decodeShard(bytes.take(n), ds, shard, chunk))
+    }
+    // entries pointing past the payload (into the index, past the file,
+    // negative) with the index CRC32C recomputed so only the bounds check
+    // can catch them
+    for ((off, len) <- Seq((idxStart - 2L, 100L), (0L, Int.MaxValue.toLong + 1), (-5L, 10L))) {
+      val bad = bytes.clone()
+      val bb = java.nio.ByteBuffer.wrap(bad).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.putLong(idxStart + 3 * 16, off).putLong(idxStart + 3 * 16 + 8, len)
+      val crc = new java.util.zip.CRC32C()
+      crc.update(bad, idxStart, indexLen)
+      bb.putInt(idxStart + indexLen, crc.getValue.toInt)
+      val e = readByPath(bad)
+      assert(e.getMessage.contains(path) && e.getMessage.contains("outside the payload"),
+        e.getMessage)
+    }
+  }
+
   test("all-fill inner chunks are elided as missing entries") {
     val ds = Shape3(16, 16, 16)
     val data = new Array[Short](ds.voxels.toInt) // all zeros = fill
