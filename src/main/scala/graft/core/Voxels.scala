@@ -22,7 +22,10 @@ object Voxels {
     * shares with the walked region. The box is never empty.
     */
   final case class Tile(gz: Long, gy: Long, gx: Long,
-                        origin: Shape3, shape: Shape3, lo: Shape3, extent: Shape3)
+                        origin: Shape3, shape: Shape3, lo: Shape3, extent: Shape3) {
+    /** The shared box's exclusive end, `lo + extent`. */
+    def hi: Shape3 = Shape3(lo.z + extent.z, lo.y + extent.y, lo.x + extent.x)
+  }
 
   /** Visit, in C order, every tile of the regular `tile`-shaped grid
     * that overlaps the half-open region [`lo`, `hi`), with tiles clipped

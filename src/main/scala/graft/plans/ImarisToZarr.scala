@@ -575,8 +575,8 @@ object ZarrRegion {
       new Array[Short](((z1 - z0) * (y1 - y0) * (x1 - x0)).toInt))
 
   /** [[read]] into a caller-owned (possibly oversized, REUSED) region
-    * buffer; one shard-decode scratch is also reused across the region's
-    * shards. Returns `out`.
+    * buffer; only the inner chunks the region overlaps are decoded.
+    * Returns `out`.
     */
   def readInto(conf: org.apache.hadoop.conf.Configuration,
                levelDir: String, shape: Shape3, shard: Shape3, chunk: Shape3,
@@ -585,12 +585,10 @@ object ZarrRegion {
     val region = Shape3(z1 - z0, y1 - y0, x1 - x0)
     require(out.length >= region.voxels, s"region buffer ${out.length} < ${region.voxels}")
     val lo = Shape3(z0, y0, x0)
-    var shardBuf: Array[Short] = Array.emptyShortArray
     Voxels.forEachTile(lo, Shape3(z1, y1, x1), shard, shape) { t =>
       val path = s"$levelDir/${ZarrV3.shardKey(t.gz, t.gy, t.gx)}"
-      if (shardBuf.length < t.shape.voxels) shardBuf = new Array[Short](t.shape.voxels.toInt)
-      ZarrV3.decodeShardInto(ZarrV3.read(conf, path), t.shape, shard, chunk, shardBuf, path)
-      Voxels.copyBox(shardBuf, t.shape, t.origin, out, region, lo, t.lo, t.extent)
+      ZarrV3.openShard(ZarrV3.read(conf, path), shard, chunk, path)
+        .copyBoxInto(t.origin, t.lo, t.hi, out, region, lo)
     }
     out
   }

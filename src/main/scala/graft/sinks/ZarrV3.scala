@@ -153,9 +153,9 @@ object ZarrV3 {
       new Array[Short](dataShape.voxels.toInt))
 
   /** [[decodeShard]] into a caller-owned (possibly oversized, REUSED)
-    * buffer: the dataShape extent is explicitly reset to Fill first, so
-    * elided all-fill chunks decode correctly even over stale bytes from
-    * a previous shard. Returns `out`.
+    * buffer: every voxel of the dataShape extent is written (elided
+    * chunks as Fill), so stale bytes from a previous shard never leak.
+    * Returns `out`.
     */
   def decodeShardInto(
       bytes: Array[Byte],
@@ -165,10 +165,8 @@ object ZarrV3 {
       out: Array[Short]): Array[Short] =
     decodeShardInto(bytes, dataShape, shardShape, chunkShape, out, "shard")
 
-  /** [[decodeShardInto]] naming the shard (its path) in errors. The index
-    * is checked before any chunk is read: a file shorter than its index,
-    * a CRC32C mismatch or an entry outside the payload is an
-    * `IllegalArgumentException`.
+  /** [[decodeShardInto]] naming the shard (its path) in errors; see
+    * [[openShard]] for the checks.
     */
   def decodeShardInto(
       bytes: Array[Byte],
@@ -179,44 +177,81 @@ object ZarrV3 {
       name: String): Array[Short] = {
     require(out.length >= dataShape.voxels,
       s"decode buffer ${out.length} < ${dataShape.voxels}")
+    openShard(bytes, shardShape, chunkShape, name)
+      .copyBoxInto(Origin, Origin, dataShape, out, dataShape, Origin)
+    out
+  }
+
+  /** Parse and check a shard file's index. Nothing is decoded yet: a file
+    * shorter than its index, a CRC32C mismatch or an entry outside the
+    * payload is an `IllegalArgumentException` naming `name` (the shard
+    * path).
+    */
+  def openShard(bytes: Array[Byte], shardShape: Shape3, chunkShape: Shape3, name: String): Shard = {
     val grid = chunkGrid(shardShape, chunkShape)
-    val nChunks = grid.voxels.toInt
-    val indexLen = nChunks * 16
+    val indexLen = grid.voxels.toInt * 16
     val idxStart = bytes.length - indexLen - 4
     require(idxStart >= 0,
       s"$name: ${bytes.length} bytes, shorter than its ${indexLen + 4}-byte index")
-    // NOTE: ByteBuffer.wrap(a, off, len) still indexes absolute gets from
-    // a[0]; keep one whole-array buffer and offset explicitly.
-    val whole = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    def entry(ci: Int, field: Int): Long = whole.getLong(idxStart + ci * 16 + field * 8)
+    val shard = new Shard(bytes, grid, chunkShape, idxStart)
     val crc = new CRC32C()
     crc.update(bytes, idxStart, indexLen)
-    require(crc.getValue.toInt == whole.getInt(idxStart + indexLen),
+    require(crc.getValue.toInt == shard.whole.getInt(idxStart + indexLen),
       s"$name: shard index CRC32C mismatch")
     var ci = 0
-    while (ci < nChunks) {
-      val off = entry(ci, 0); val len = entry(ci, 1)
+    while (ci < grid.voxels) {
+      val off = shard.offset(ci); val len = shard.nbytes(ci)
       require(off == -1L || (off >= 0 && len >= 0 && len <= idxStart - off),
         s"$name: index entry $ci ($off, $len) lies outside the payload [0, $idxStart)")
       ci += 1
     }
+    shard
+  }
 
-    java.util.Arrays.fill(out, 0, dataShape.voxels.toInt, Fill)
-    val chunkVox = chunkShape.voxels.toInt
-    // one decode buffer reused across chunks (same GC-wall avoidance as
-    // the encode side; a 512³ shard otherwise churns ~500 MB per read)
-    val raw = new Array[Byte](chunkVox * 2)
-    val chunk = new Array[Short](chunkVox)
-    Voxels.forEachTile(Origin, dataShape, chunkShape, shardShape) { t =>
-      val ci = ((t.gz * grid.y + t.gy) * grid.x + t.gx).toInt
-      val off = entry(ci, 0)
-      if (off != -1L) {
-        decompressInto(bytes, off.toInt, entry(ci, 1).toInt, raw)
-        Voxels.fromLE(raw, 0, chunk, chunkVox)
-        Voxels.copyBox(chunk, chunkShape, t.origin, out, dataShape, Origin, t.lo, t.extent)
+  /** A shard file whose index [[openShard]] has checked. Inner chunks are
+    * decoded one at a time through one reused byte buffer, so peak state
+    * is the file plus one chunk.
+    */
+  final class Shard private[ZarrV3] (
+      bytes: Array[Byte], grid: Shape3, chunkShape: Shape3, idxStart: Int) {
+    // NOTE: ByteBuffer.wrap(a, off, len) still indexes absolute gets from
+    // a[0]; keep one whole-array buffer and offset explicitly.
+    private[ZarrV3] val whole = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    private val chunkVox = chunkShape.voxels.toInt
+    private val raw = new Array[Byte](chunkVox * 2)
+
+    private[ZarrV3] def offset(ci: Int): Long = whole.getLong(idxStart + ci * 16)
+    private[ZarrV3] def nbytes(ci: Int): Long = whole.getLong(idxStart + ci * 16 + 8)
+
+    /** Decode inner chunk (`gz`, `gy`, `gx`) of the shard's own chunk
+      * grid into the first `chunkShape.voxels` elements of `out` (C order,
+      * full chunk shape); an elided chunk reads as Fill.
+      */
+    def decodeChunkInto(gz: Long, gy: Long, gx: Long, out: Array[Short]): Unit = {
+      require(out.length >= chunkVox, s"chunk buffer ${out.length} < $chunkVox")
+      val ci = ((gz * grid.y + gy) * grid.x + gx).toInt
+      val off = offset(ci)
+      if (off == -1L) java.util.Arrays.fill(out, 0, chunkVox, Fill)
+      else {
+        decompressInto(bytes, off.toInt, nbytes(ci).toInt, raw)
+        Voxels.fromLE(raw, 0, out, chunkVox)
       }
     }
-    out
+
+    /** Decode only the inner chunks overlapping the box [`lo`, `hi`) and
+      * copy that box into `out` (shape `outShape`, origin `outOrigin`).
+      * Coordinates are global: the shard starts at `origin`, and the box
+      * lies inside its data.
+      */
+    def copyBoxInto(origin: Shape3, lo: Shape3, hi: Shape3,
+                    out: Array[Short], outShape: Shape3, outOrigin: Shape3): Unit = {
+      val chunk = new Array[Short](chunkVox)
+      Voxels.forEachTile(lo, hi, chunkShape, hi) { t =>
+        decodeChunkInto(t.gz - origin.z / chunkShape.z, t.gy - origin.y / chunkShape.y,
+          t.gx - origin.x / chunkShape.x, chunk)
+        Voxels.copyBox(chunk, chunkShape, t.origin, out, outShape, outOrigin, t.lo, t.extent)
+      }
+    }
   }
 
   // ---- codecs -------------------------------------------------------------
