@@ -127,14 +127,17 @@ object ImsToZarrJob {
         s"levels ${st.map(_.level).distinct.sorted.mkString(",")}")
     }
     val totalBytes = stats.map(_.bytesWritten).sum
+    val rawBytes = stats.map(_.voxels * 2L).sum // uint16
     // reference W10: optional post-conversion sync of the local store to S3
     a.s3Location.foreach { dst =>
       println(s"[ims-to-zarr] syncing ${a.outputDirectory} -> $dst")
       DirSync.sync(hconf, a.outputDirectory, dst)
     }
     val secs = (System.nanoTime() - t0) / 1e9
-    // reference job response: status 200 + wall-time message (O4)
-    println(f"[ims-to-zarr] DONE ${stacks.length} stacks, $totalBytes bytes in $secs%.1fs")
+    // reference job response: status 200 + wall-time message (O4), with
+    // the raw (uncompressed voxel) and file throughput over that wall
+    println(f"[ims-to-zarr] DONE ${stacks.length} stacks, $totalBytes bytes in $secs%.1fs, " +
+      f"raw $rawBytes bytes, raw ${rawBytes / 1e6 / secs}%.1f MB/s, file ${totalBytes / 1e6 / secs}%.1f MB/s")
     spark.stop()
   }
 }

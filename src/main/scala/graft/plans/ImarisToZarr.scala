@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
@@ -21,8 +22,10 @@ import graft.sources.{Hdf5Reader, Imaris}
   *    created by the DRIVER before the job launches — the reference's
   *    idempotent-create race workaround (W7, `imaris_to_zarr.py:1759-1831`)
   *    disappears because only one process initializes;
-  *  - voxel work runs in waves of `ShardTask`s, one Spark job each, all
-  *    through ONE runner ([[runWave]]). A task gets its output region
+  *  - voxel work runs in waves of `ShardTask`s, one plain RDD job each
+  *    (`parallelize` + `mapPartitions` + `collect`: no SQL, so no Catalyst
+  *    analysis, planning or encoder codegen per wave), all through ONE
+  *    runner ([[runWave]]). A task gets its output region
   *    from one of three sources: its region of the Imaris dataset (level
   *    0, and every level of a translated pyramid), the partials the
   *    previous wave reduced from the regions it held (fused), or the
@@ -31,7 +34,16 @@ import graft.sources.{Hdf5Reader, Imaris}
   *    (W4/X3), emits the next level's partial when that level is fused,
   *    and returns a stats row (A5);
   *  - pyramid levels are sequential waves (A3 — the inter-level barrier
-  *    is inherent: level l+1 reads level l).
+  *    is inherent: level l+1 reads level l);
+  *  - a wave with fewer partitions than slots (the top levels of a
+  *    pyramid are often one shard) encodes each shard's inner chunks on
+  *    the slots it leaves idle: `slots / partitions` chunks at once
+  *    ([[encodeThreads]], `ZarrV3.writeShard`), written in C order so the
+  *    store is byte-identical; a wave that fills its slots encodes on the
+  *    task thread alone;
+  *  - the driver rejects a plan whose task buffers (region, source,
+  *    partial) exceed one JVM array before it writes any metadata
+  *    ([[checkTaskBuffers]]).
   *
   * Scale posture: tasks are ~256 MB of voxels at the reference's default
   * shard (512³ uint16); 100 TB ⇒ ~400k tasks, far beyond any driver
@@ -102,16 +114,16 @@ object ImarisToZarr {
   }
 
   /** Where a task's output region comes from. */
-  private sealed trait Source extends Serializable
+  private[plans] sealed trait Source extends Serializable
   /** The task's region of the Imaris dataset at its level. */
-  private case object FromHdf5 extends Source
+  private[plans] case object FromHdf5 extends Source
   /** Assembled from the previous wave's partials under `dir`: partial
     * (gz, gy, gx) covers tile (gz, gy, gx) of this level's `tile` grid,
     * clipped to `levelShape`.
     */
-  private final case class FromPartials(dir: String, tile: Shape3, levelShape: Shape3) extends Source
+  private[plans] final case class FromPartials(dir: String, tile: Shape3, levelShape: Shape3) extends Source
   /** The ×factor region of the previous level's store, read and reduced. */
-  private final case class FromStore(
+  private[plans] final case class FromStore(
       levelDir: String, shape: Shape3, shard: Shape3, chunk: Shape3) extends Source
 
   /** Per-(file, level) parameters an executor task resolves from its
@@ -171,7 +183,10 @@ object ImarisToZarr {
                  settingsFor: String => Settings,
                  progress: Option[Progress] = None): Seq[ShardStats] = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val serConf = new SerializableConfiguration(hconf)
+    // ONE broadcast of the Hadoop conf (~100 KB serialized) for every
+    // wave: captured in each wave's closure, it would be serialized per
+    // job and deserialized per task, on the critical path of every wave
+    val serConf = spark.sparkContext.broadcast(new SerializableConfiguration(hconf))
 
     // Fail before ANY metadata is written: Settings built directly via the
     // API bypass JobSettings.validated, and a bad separator caught only at
@@ -183,9 +198,12 @@ object ImarisToZarr {
         s"dimension_separator must be '.' or '/', got: $sep (input $p)")
     }
 
-    // ---- driver-side planning + store init, metadata-only (W7→driver, W9, X9) ----
+    // ---- driver-side planning, metadata-only (W7→driver, W9, X9) ----
+    // `metadata` holds every store document as (path, JSON); the driver
+    // writes them once every plan has passed its checks
     final case class FilePlan(file: String, settings: Settings, store: String,
-                              trueShapes: Seq[Shape3], specs: Seq[(Shape3, Shape3)])
+                              trueShapes: Seq[Shape3], specs: Seq[(Shape3, Shape3)],
+                              metadata: Seq[(String, String)])
     val plans = imsPaths.map { imsPath =>
       val settings = settingsFor(imsPath)
       val stem = imsPath.split('/').last.stripSuffix(".ims").stripSuffix(".h5")
@@ -215,32 +233,29 @@ object ImarisToZarr {
       if (settings.zarrFormat == 2)
         require(settings.zstdLevel >= 0 && settings.zstdLevel <= 9,
           s"blosc clevel must be in [0,9] for zarr v2, got: ${settings.zstdLevel}")
-      trueShapes.zipWithIndex.foreach { case (ts, l) =>
+      val levelDocs = trueShapes.zipWithIndex.map { case (ts, l) =>
         val (chunk, shard) = perLevelSpecs(l)
         if (settings.zarrFormat == 2)
           // v2 levels are 3-D (Z,Y,X) blosc-chunked arrays (reference
           // `create_dataset`, `imaris_to_zarr.py:948-967`); the shard is
           // only the TASK granularity, not part of the format
-          ZarrV3.writeString(hconf, s"$store/$l/.zarray",
-            graft.sinks.ZarrV2.arrayMetadata(
-              Seq(ts.z, ts.y, ts.x), Seq(chunk.z, chunk.y, chunk.x),
-              settings.bloscCname, settings.zstdLevel, settings.bloscShuffle,
-              settings.v2Separator).render)
+          s"$store/$l/.zarray" -> graft.sinks.ZarrV2.arrayMetadata(
+            Seq(ts.z, ts.y, ts.x), Seq(chunk.z, chunk.y, chunk.x),
+            settings.bloscCname, settings.zstdLevel, settings.bloscShuffle,
+            settings.v2Separator).render
         else
-          ZarrV3.writeString(hconf, s"$store/$l/zarr.json",
-            ZarrV3.arrayMetadata(
-              Seq(1L, 1L, ts.z, ts.y, ts.x),
-              Seq(1L, 1L, shard.z, shard.y, shard.x),
-              Seq(1L, 1L, chunk.z, chunk.y, chunk.x),
-              settings.zstdLevel, settings.codecName).render)
+          s"$store/$l/zarr.json" -> ZarrV3.arrayMetadata(
+            Seq(1L, 1L, ts.z, ts.y, ts.x),
+            Seq(1L, 1L, shard.z, shard.y, shard.x),
+            Seq(1L, 1L, chunk.z, chunk.y, chunk.x),
+            settings.zstdLevel, settings.codecName).render
       }
       val repFactor = Geometry.representativeFactor(
         if (settings.translatePyramid) meta.storedShapes else trueShapes)
       val voxel = settings.voxelSizeOverrideUm.getOrElse(meta.voxelSizeUm)
       val origin = Some(settings.originOverrideUm.getOrElse(meta.originUm))
-      if (settings.zarrFormat == 2) {
-        ZarrV3.writeString(hconf, s"$store/.zgroup",
-          graft.sinks.ZarrV2.groupMetadata.render)
+      val rootDocs = if (settings.zarrFormat == 2) Seq(
+        s"$store/.zgroup" -> graft.sinks.ZarrV2.groupMetadata.render,
         // INTENTIONAL divergence from the reference's v2 path: it dumps the
         // full v3-shaped group dict (zarr_format:3, node_type,
         // attributes:{ome:...}) into .zattrs verbatim; we write only the
@@ -249,14 +264,11 @@ object ImarisToZarr {
         // expect. Byte-level .zattrs parity with reference v2 output is
         // NOT a goal; semantic parity of the ome block is spec-tested, and
         // ZarrMigrate lifts either flavor (it copies .zattrs verbatim).
-        ZarrV3.writeString(hconf, s"$store/.zattrs",
-          OmeNgff.omeAttributes(stem, nLevels,
-            (repFactor.z, repFactor.y, repFactor.x), voxel, origin).render)
-      } else
-        ZarrV3.writeString(hconf, s"$store/zarr.json",
-          OmeNgff.rootMetadata(stem, nLevels,
-            (repFactor.z, repFactor.y, repFactor.x), voxel, origin).render)
-      FilePlan(imsPath, settings, store, trueShapes, perLevelSpecs)
+        s"$store/.zattrs" -> OmeNgff.omeAttributes(stem, nLevels,
+          (repFactor.z, repFactor.y, repFactor.x), voxel, origin).render)
+      else Seq(s"$store/zarr.json" -> OmeNgff.rootMetadata(stem, nLevels,
+        (repFactor.z, repFactor.y, repFactor.x), voxel, origin).render)
+      FilePlan(imsPath, settings, store, trueShapes, perLevelSpecs, levelDocs ++ rootDocs)
     }
 
     // ---- global task lists, planned up front (pure geometry) ----
@@ -314,6 +326,16 @@ object ImarisToZarr {
         } yield t
       }
 
+    // a task buffer past one JVM array would fail on an executor after
+    // the store was initialised: reject the plan before any metadata
+    val partitionMode = plans.map(p => p.file -> p.settings.partitionMode).toMap
+    waves.foreach(_.foreach { t =>
+      val spec = io((t.file, t.level))
+      checkTaskBuffers(t, spec.source, spec.factor, spec.partialDir.nonEmpty,
+        partitionMode(t.file))
+    })
+    plans.foreach(_.metadata.foreach { case (path, doc) => ZarrV3.writeString(hconf, path, doc) })
+
     // ---- live progress: log as shard completions stream in (A5) ----
     val totalTasks = waves.map(_.size).sum
     val listener = progress.map { p =>
@@ -349,6 +371,7 @@ object ImarisToZarr {
     try {
       waves.flatMap(runWave(spark, _, io, serConf, progress))
     } finally {
+      serConf.destroy()
       listener.foreach(spark.sparkContext.removeSparkListener)
       // fused-reduction scratch is consumed by the next level's wave;
       // remove every level's dir even on failure so a partially written
@@ -386,34 +409,83 @@ object ImarisToZarr {
     math.max(1, math.min(nTasks, math.min(slots, cap)))
   }
 
-  /** One pooled Spark job over the tasks of one wave: each task gets its
+  /** Encode threads per task in a wave of `partitions` partitions: the
+    * slots the wave leaves idle, shared among its tasks. A wave that
+    * fills its slots encodes on the task thread alone (1); a single-task
+    * wave on 4 slots encodes 4 chunks at once.
+    */
+  private[plans] def encodeThreads(spark: SparkSession, partitions: Int): Int =
+    math.max(1, spark.sparkContext.defaultParallelism / partitions)
+
+  /** The ×factor source box [lo, hi) of task `t` in a previous level of
+    * shape `src`, clipped to that level.
+    */
+  private def storeBox(t: ShardTask, f: Shape3, src: Shape3): (Shape3, Shape3) =
+    (Shape3(t.z0 * f.z, t.y0 * f.y, t.x0 * f.x),
+      Shape3(math.min(t.z1 * f.z, src.z), math.min(t.y1 * f.y, src.y), math.min(t.x1 * f.x, src.x)))
+
+  /** The next level's partial of task `t`: its region reduced by `f`.
+    * Task borders are factor-aligned (planner precondition), so every
+    * output window is wholly local and the partial is exact.
+    */
+  private def partialShape(t: ShardTask, f: Shape3): Shape3 = Shape3(
+    Geometry.ceilDiv(t.z1, f.z) - t.z0 / f.z,
+    Geometry.ceilDiv(t.y1, f.y) - t.y0 / f.y,
+    Geometry.ceilDiv(t.x1, f.x) - t.x0 / f.x)
+
+  /** Reject task `t` when its region, the source it reads beside it (a
+    * partial, or the ×factor store region) or the partial it emits
+    * (`fused`) holds more voxels than one JVM array. The driver runs this
+    * for every task before it writes any metadata; the message names the
+    * file, the level, the voxel count and the setting to change.
+    */
+  private[plans] def checkTaskBuffers(t: ShardTask, source: Source, factor: Shape3,
+                                      fused: Boolean, partitionMode: String): Unit = {
+    val read = source match {
+      case FromHdf5 => None
+      case FromPartials(_, tile, _) => Some("partial read" -> tile.voxels)
+      case FromStore(_, src, _, _) =>
+        val (lo, hi) = storeBox(t, factor, src)
+        Some("×factor store source region" -> Shape3(hi.z - lo.z, hi.y - lo.y, hi.x - lo.x).voxels)
+    }
+    val emitted = if (fused) Some("next-level partial" -> partialShape(t, factor).voxels) else None
+    (Seq("region" -> t.region.voxels) ++ read ++ emitted).foreach { case (what, n) =>
+      if (n > Int.MaxValue) throw new IllegalArgumentException(
+        s"${t.file} level ${t.level}: a task's $what is $n voxels, more than the " +
+          s"${Int.MaxValue} one array holds; " +
+          (if (partitionMode == "file") "use partitionMode \"shard\""
+           else "lower the shard size"))
+    }
+  }
+
+  /** One pooled RDD job over the tasks of one wave: each task gets its
     * region from its [[Source]], writes it, emits the next level's
     * partial if that level is fused, and returns its stats row.
     */
   private def runWave(
       spark: SparkSession, tasks: Seq[ShardTask], io: Map[(String, Int), TaskIo],
-      serConf: SerializableConfiguration,
+      serConf: Broadcast[SerializableConfiguration],
       progress: Option[Progress]): Seq[ShardStats] = {
     if (tasks.isEmpty) return Seq.empty
-    import spark.implicits._
     // live bytes per task: the uint16 region plus the source it holds
     // beside it (one partial, or the ×factor source region), ×3 for
     // decode/encode scratch
     val maxTaskBytes = tasks.map { t =>
       val spec = io((t.file, t.level))
-      val region = (t.z1 - t.z0) * (t.y1 - t.y0) * (t.x1 - t.x0)
+      val region = t.region.voxels
       spec.source match {
         case FromHdf5 => region * 2L
         case FromPartials(_, tile, _) => (region + tile.voxels) * 2L
         case _: FromStore => region * spec.factor.voxels * 2L
       }
     }.max * 3
+    val partitions = memoryCappedParallelism(spark, tasks.size, maxTaskBytes)
+    val threads = encodeThreads(spark, partitions)
     // parallelize slices the task list directly — repartition() would
     // add the conversion path's ONLY shuffle for nothing (and local-mode
     // shuffle RPC stalls for minutes under gVisor on multi-GB runs)
-    val taskDs = spark.createDataset(spark.sparkContext.parallelize(
-      tasks, memoryCappedParallelism(spark, tasks.size, maxTaskBytes)))
-    taskDs.mapPartitions { it =>
+    spark.sparkContext.parallelize(tasks, partitions).mapPartitions { it =>
+      val conf = serConf.value.value
       // one reader per (partition, file): the reference holds one HDF5
       // handle per worker-file (D5, `imaris_job.py:601-609`); the chunk
       // index is cached per (file, level) — re-walking the B-tree per
@@ -428,6 +500,7 @@ object ImarisToZarr {
       // fresh 268 MB humongous array per 512³ task was the pipeline's
       // dominant allocation (and concurrent humongous allocation is
       // pathologically slow under syscall-intercepting sandboxes)
+      // checkTaskBuffers keeps every size below 2³¹ (planning time)
       var regionBuf: Array[Short] = Array.emptyShortArray  // the task's region
       var srcBuf: Array[Short] = Array.emptyShortArray     // a partial or the ×factor source
       var partialBuf: Array[Short] = Array.emptyShortArray // the next level's partial
@@ -439,11 +512,11 @@ object ImarisToZarr {
         val f = spec.factor
         val origin = Shape3(t.z0, t.y0, t.x0)
         val end = Shape3(t.z1, t.y1, t.x1)
-        val shape = Shape3(t.z1 - t.z0, t.y1 - t.y0, t.x1 - t.x0)
+        val shape = t.region.shape
         regionBuf = grown(regionBuf, shape.voxels)
         spec.source match {
           case FromHdf5 =>
-            val r = readers.getOrElseUpdate(t.file, new Hdf5Reader(t.file, serConf.value))
+            val r = readers.getOrElseUpdate(t.file, new Hdf5Reader(t.file, conf))
             val ds = datasets.getOrElseUpdate((t.file, t.level),
               r.openDataset(Imaris.dataPath(t.level)))
             r.readRegionInto(ds, t.z0, t.z1, t.y0, t.y1, t.x0, t.x1, regionBuf)
@@ -452,45 +525,38 @@ object ImarisToZarr {
             // partials tile the level, so every region voxel is written
             Voxels.forEachTile(origin, end, tile, levelShape) { p =>
               srcBuf = grown(srcBuf, p.shape.voxels)
-              PartialStore.readInto(serConf.value, s"$dir/${p.gz}_${p.gy}_${p.gx}",
+              PartialStore.readInto(conf, s"$dir/${p.gz}_${p.gy}_${p.gx}",
                 p.shape, srcBuf, partialScratch)
               Voxels.copyBox(srcBuf, p.shape, p.origin, regionBuf, shape, origin, p.lo, p.extent)
             }
           case FromStore(levelDir, src, srcShard, srcChunk) =>
-            val lo = Shape3(t.z0 * f.z, t.y0 * f.y, t.x0 * f.x)
-            val hi = Shape3(math.min(t.z1 * f.z, src.z), math.min(t.y1 * f.y, src.y),
-              math.min(t.x1 * f.x, src.x))
+            val (lo, hi) = storeBox(t, f, src)
             val srcShape = Shape3(hi.z - lo.z, hi.y - lo.y, hi.x - lo.x)
             srcBuf = grown(srcBuf, srcShape.voxels)
             if (spec.zarrFormat == 2)
-              ZarrV2.readRegionInto(serConf.value, levelDir, src, srcChunk,
+              ZarrV2.readRegionInto(conf, levelDir, src, srcChunk,
                 lo.z, hi.z, lo.y, hi.y, lo.x, hi.x, srcBuf, spec.separator)
-            else ZarrRegion.readInto(serConf.value, levelDir, src, srcShard, srcChunk,
+            else ZarrRegion.readInto(conf, levelDir, src, srcShard, srcChunk,
               lo.z, hi.z, lo.y, hi.y, lo.x, hi.x, srcBuf)
             Downsample.reduceInto(srcBuf, srcShape, shape, f, spec.mode, regionBuf)
         }
         // streaming encode+write: peak task state is the voxel region +
-        // one chunk, not an extra fully-assembled shard buffer
+        // one chunk per encode thread, not an extra fully-assembled shard
         val (key, written) =
           if (spec.zarrFormat == 2)
             (ZarrV2.chunkKey(t.sz, t.sy, t.sx, spec.separator),
-              ZarrV2.writeRegionChunks(serConf.value, s"${spec.store}/${t.level}", regionBuf,
+              ZarrV2.writeRegionChunks(conf, s"${spec.store}/${t.level}", regionBuf,
                 shape, origin, spec.chunk, spec.cname, spec.zstdLevel, spec.shuffle, spec.separator))
           else {
             val k = ZarrV3.shardKey(t.sz, t.sy, t.sx)
-            (k, ZarrV3.writeShard(serConf.value, s"${spec.store}/${t.level}/$k",
-              regionBuf, shape, spec.shard, spec.chunk, spec.zstdLevel, spec.codec))
+            (k, ZarrV3.writeShard(conf, s"${spec.store}/${t.level}/$k",
+              regionBuf, shape, spec.shard, spec.chunk, spec.zstdLevel, spec.codec, threads))
           }
-        // task borders are factor-aligned (planner precondition), so every
-        // next-level output window is wholly local and the partial is exact
         if (spec.partialDir.nonEmpty) {
-          val pShape = Shape3(
-            Geometry.ceilDiv(t.z1, f.z) - t.z0 / f.z,
-            Geometry.ceilDiv(t.y1, f.y) - t.y0 / f.y,
-            Geometry.ceilDiv(t.x1, f.x) - t.x0 / f.x)
+          val pShape = partialShape(t, f)
           partialBuf = grown(partialBuf, pShape.voxels)
           Downsample.reduceInto(regionBuf, shape, pShape, f, spec.mode, partialBuf)
-          PartialStore.write(serConf.value,
+          PartialStore.write(conf,
             s"${spec.partialDir}/${t.sz}_${t.sy}_${t.sx}", partialBuf, pShape,
             partialScratch)
         }
@@ -612,29 +678,121 @@ object Downsample {
 
   /** [[reduce]] into a caller-owned (possibly oversized, REUSED) output
     * buffer; every dstShape cell is written, so stale tail bytes beyond
-    * the extent are never read downstream. Returns `out`.
+    * the extent are never read downstream. `dstShape` may be smaller than
+    * ceil(srcShape / f), never larger. Returns `out`.
     */
   def reduceInto(src: Array[Short], srcShape: Shape3, dstShape: Shape3,
                  f: Shape3, mode: String, out: Array[Short]): Array[Short] = {
     require(out.length >= dstShape.voxels,
       s"reduce buffer ${out.length} < ${dstShape.voxels}")
+    require(dstShape.z <= Geometry.ceilDiv(srcShape.z, f.z) &&
+      dstShape.y <= Geometry.ceilDiv(srcShape.y, f.y) &&
+      dstShape.x <= Geometry.ceilDiv(srcShape.x, f.x),
+      s"reduce extent $dstShape exceeds ceil($srcShape / $f)")
+    mode match {
+      case "stride" => fold(src, srcShape, dstShape, f, Stride, out)
+      case "mean" => fold(src, srcShape, dstShape, f, Mean, out)
+      case "min" => fold(src, srcShape, dstShape, f, Min, out)
+      case "max" => fold(src, srcShape, dstShape, f, Max, out)
+      case "median" | "mode" => sortedWindows(src, srcShape, dstShape, f, mode == "median", out)
+      case other => sys.error(s"unknown downsample mode: $other")
+    }
+    out
+  }
+
+  private final val Stride = 0
+  private final val Mean = 1
+  private final val Min = 2
+  private final val Max = 3
+
+  /** stride/mean/min/max: each source row of an output row's windows is
+    * folded into one per-output-row accumulator, x with a stride of f.x
+    * over the full windows plus the clipped tail window when there is
+    * one. Windows clipped at the source edge count only their voxels;
+    * the mean truncates.
+    */
+  private def fold(src: Array[Short], s: Shape3, d: Shape3, f: Shape3, op: Int,
+                   out: Array[Short]): Unit = {
+    val sx = s.x.toInt; val fx = f.x.toInt; val dX = d.x.toInt
+    val full = math.min(dX, sx / fx) // output cells whose x window is whole
+    val tail = full < dX              // then dX == full + 1: the clipped window [full·fx, sx)
+    val acc = new Array[Long](dX)
+    var dz = 0L
+    while (dz < d.z) {
+      val z0 = dz * f.z; val z1 = math.min(z0 + f.z, s.z)
+      var dy = 0L
+      while (dy < d.y) {
+        val y0 = dy * f.y; val y1 = math.min(y0 + f.y, s.y)
+        val o = ((dz * d.y + dy) * d.x).toInt
+        if (op == Stride) {
+          val base = ((z0 * s.y + y0) * s.x).toInt
+          var dx = 0
+          while (dx < dX) { out(o + dx) = src(base + dx * fx); dx += 1 }
+        } else {
+          java.util.Arrays.fill(acc, if (op == Min) 0xffffL else 0L)
+          var wz = z0
+          while (wz < z1) {
+            var wy = y0
+            while (wy < y1) {
+              val base = ((wz * s.y + wy) * s.x).toInt
+              var k = 0
+              while (k < fx) {
+                var i = base + k; var dx = 0
+                if (op == Mean) while (dx < full) { acc(dx) += src(i) & 0xffff; i += fx; dx += 1 }
+                else if (op == Min) while (dx < full) { acc(dx) = math.min(acc(dx), src(i) & 0xffff); i += fx; dx += 1 }
+                else while (dx < full) { acc(dx) = math.max(acc(dx), src(i) & 0xffff); i += fx; dx += 1 }
+                k += 1
+              }
+              if (tail) {
+                var i = base + full * fx
+                while (i < base + sx) {
+                  val v = src(i) & 0xffff
+                  acc(full) = if (op == Mean) acc(full) + v
+                    else if (op == Min) math.min(acc(full), v) else math.max(acc(full), v)
+                  i += 1
+                }
+              }
+              wy += 1
+            }
+            wz += 1
+          }
+          val zy = (z1 - z0) * (y1 - y0)
+          var dx = 0
+          while (dx < dX) {
+            out(o + dx) = (if (op != Mean) acc(dx)
+              else acc(dx) / (zy * (if (dx < full) fx else sx - full * fx))).toShort
+            dx += 1
+          }
+        }
+        dy += 1
+      }
+      dz += 1
+    }
+  }
+
+  /** median/mode: copy each window, clipped at the source edge, and sort
+    * it. Even-window median = lower middle; mode = smallest of the most
+    * frequent.
+    */
+  private def sortedWindows(src: Array[Short], s: Shape3, d: Shape3, f: Shape3,
+                            median: Boolean, out: Array[Short]): Unit = {
     val window = new Array[Int]((f.z * f.y * f.x).toInt)
     var dz = 0L
-    while (dz < dstShape.z) {
+    while (dz < d.z) {
       var dy = 0L
-      while (dy < dstShape.y) {
+      while (dy < d.y) {
         var dx = 0L
-        while (dx < dstShape.x) {
+        while (dx < d.x) {
           var n = 0
           var wz = dz * f.z
-          val wzHi = math.min(wz + f.z, srcShape.z)
+          val wzHi = math.min(wz + f.z, s.z)
           while (wz < wzHi) {
             var wy = dy * f.y
-            val wyHi = math.min(wy + f.y, srcShape.y)
+            val wyHi = math.min(wy + f.y, s.y)
             while (wy < wyHi) {
               var wx = dx * f.x
-              val wxHi = math.min(wx + f.x, srcShape.x)
-              val base = ((wz * srcShape.y + wy) * srcShape.x).toInt
+              val wxHi = math.min(wx + f.x, s.x)
+              val base = ((wz * s.y + wy) * s.x).toInt
               while (wx < wxHi) {
                 window(n) = src(base + wx.toInt) & 0xffff
                 n += 1; wx += 1
@@ -643,46 +801,27 @@ object Downsample {
             }
             wz += 1
           }
-          val v: Int = mode match {
-            case "stride" => window(0)
-            case "mean" =>
-              var s = 0L; var i = 0
-              while (i < n) { s += window(i); i += 1 }
-              (s / n).toInt
-            case "min" =>
-              var m = window(0); var i = 1
-              while (i < n) { if (window(i) < m) m = window(i); i += 1 }
-              m
-            case "max" =>
-              var m = window(0); var i = 1
-              while (i < n) { if (window(i) > m) m = window(i); i += 1 }
-              m
-            case "median" =>
-              val w = java.util.Arrays.copyOf(window, n)
-              java.util.Arrays.sort(w)
-              w((n - 1) / 2)
-            case "mode" =>
-              val w = java.util.Arrays.copyOf(window, n)
-              java.util.Arrays.sort(w)
-              var best = w(0); var bestCnt = 1
-              var cur = w(0); var curCnt = 1
+          java.util.Arrays.sort(window, 0, n)
+          val v =
+            if (median) window((n - 1) / 2)
+            else {
+              var best = window(0); var bestCnt = 1
+              var cur = window(0); var curCnt = 1
               var i = 1
               while (i < n) {
-                if (w(i) == cur) curCnt += 1
-                else { cur = w(i); curCnt = 1 }
+                if (window(i) == cur) curCnt += 1
+                else { cur = window(i); curCnt = 1 }
                 if (curCnt > bestCnt) { best = cur; bestCnt = curCnt }
                 i += 1
               }
               best
-            case other => sys.error(s"unknown downsample mode: $other")
-          }
-          out(((dz * dstShape.y + dy) * dstShape.x + dx).toInt) = v.toShort
+            }
+          out(((dz * d.y + dy) * d.x + dx).toInt) = v.toShort
           dx += 1
         }
         dy += 1
       }
       dz += 1
     }
-    out
   }
 }

@@ -16,11 +16,12 @@ import graft.sinks.{ZarrV2, ZarrV3}
   *
   * Same execution shape as the conversion plan: driver-side planning is
   * metadata-only (read each level's `.zarray`), all v3 store metadata is
-  * written by the driver up front, and voxel work is one pooled
-  * `mapPartitions` job where each task reads its shard-aligned region
-  * from v2 chunk files and writes exactly one v3 shard — coordination-
-  * free, shuffle-free, ~task count = store bytes / shard bytes at
-  * 100 TB.
+  * written by the driver up front, and voxel work is one pooled RDD job
+  * where each task reads its shard-aligned region from v2 chunk files and
+  * writes exactly one v3 shard — coordination-free, shuffle-free, ~task
+  * count = store bytes / shard bytes at 100 TB. A job with fewer
+  * partitions than slots encodes each shard's chunks on the idle slots
+  * ([[ImarisToZarr.encodeThreads]]).
   */
 object ZarrMigrate {
 
@@ -110,20 +111,19 @@ object ZarrMigrate {
     val tasks = levels.flatMap(l => Geometry.shardTasks(
       s"$srcStore/$l", l, TrueShape(metas(l).shape), specs(l)._2))
     if (tasks.isEmpty) return Seq.empty
-    import spark.implicits._
-    val maxTaskBytes = tasks.map(t =>
-      (t.z1 - t.z0) * (t.y1 - t.y0) * (t.x1 - t.x0) * 2L).max * 3
+    val maxTaskBytes = tasks.map(t => t.region.voxels * 2L).max * 3
     val par = ImarisToZarr.memoryCappedParallelism(spark, tasks.size, maxTaskBytes)
+    val threads = ImarisToZarr.encodeThreads(spark, par)
     val io = levels.map(l => l -> (metas(l), specs(l))).toMap
-    spark.createDataset(spark.sparkContext.parallelize(tasks, par)).map { t =>
+    spark.sparkContext.parallelize(tasks, par).map { t =>
       val (m, (chunkL, shardL)) = io(t.level)
       // foreign stores may omit all-fill chunks (write_empty_chunks=False)
       val data = ZarrV2.readRegion(serConf.value, t.file, m.shape, m.chunk,
         t.z0, t.z1, t.y0, t.y1, t.x0, t.x1, m.separator, allowMissing = true)
-      val dataShape = Shape3(t.z1 - t.z0, t.y1 - t.y0, t.x1 - t.x0)
+      val dataShape = t.region.shape
       val key = ZarrV3.shardKey(t.sz, t.sy, t.sx)
       val written = ZarrV3.writeShard(serConf.value, s"$dstStore/${t.level}/$key",
-        data, dataShape, shardL, chunkL, zstdLevel, codec)
+        data, dataShape, shardL, chunkL, zstdLevel, codec, threads)
       ImarisToZarr.ShardStats(t.file, t.level, key, written, dataShape.voxels)
     }.collect().toSeq
   }

@@ -1,6 +1,8 @@
 package graft.sinks
 
 import java.nio.{ByteBuffer, ByteOrder}
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors, Future, FutureTask}
+import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.CRC32C
 
 import com.github.luben.zstd.Zstd
@@ -8,7 +10,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import graft.core.Geometry.Shape3
-import graft.core.{Json, Voxels}
+import graft.core.{Geometry, Json, Voxels}
 import graft.core.Json._
 
 /** Zarr v3 sharded-store writer (reference W2: `create_scale_spec`,
@@ -58,16 +60,23 @@ object ZarrV3 {
       level: Int = 3,
       codec: String = "zstd"): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream(1 << 20)
-    encodeShardTo(bos, shardData, dataShape, shardShape, chunkShape, level, codec)
+    encodeShardTo(bos, shardData, dataShape, shardShape, chunkShape, level, codec, threads = 1)
     bos.toByteArray
   }
 
   /** Stream a shard directly to `path` (raw FS). Peak memory is one chunk
-    * (staging + compressed), not the whole shard — a task encoding a
-    * 512³ shard holds ~35 MB instead of ~500 MB, which keeps wide
-    * executors (8–32 concurrent tasks) off the GC cliff and writes the
-    * file in chunk-sized increments instead of one giant buffer.
-    * Returns bytes written.
+    * per encode thread (staging + compressed), not the whole shard — a
+    * task encoding a 512³ shard holds ~35 MB instead of ~500 MB, which
+    * keeps wide executors (8–32 concurrent tasks) off the GC cliff and
+    * writes the file in chunk-sized increments instead of one giant
+    * buffer.
+    *
+    * `threads` > 1 encodes up to that many inner chunks at once on a
+    * JVM-wide daemon pool (capped at `availableProcessors` and at the
+    * shard's chunk count), for a task that runs while slots sit idle; the
+    * calling thread still writes chunks and index entries in C order, so
+    * the file is byte-identical to `threads = 1`. An encode failure is
+    * rethrown as the encoder threw it. Returns bytes written.
     */
   def writeShard(
       fsConf: Configuration,
@@ -77,18 +86,34 @@ object ZarrV3 {
       shardShape: Shape3,
       chunkShape: Shape3,
       level: Int = 3,
-      codec: String = "zstd"): Long = {
+      codec: String = "zstd",
+      threads: Int = 1): Long = {
     val p = new Path(pathStr)
     val fs = rawFs(p, fsConf)
     val out = fs.create(p, true)
-    try encodeShardTo(out, shardData, dataShape, shardShape, chunkShape, level, codec)
+    try encodeShardTo(out, shardData, dataShape, shardShape, chunkShape, level, codec, threads)
     finally out.close()
   }
 
+  /** Encode pool shared by every [[writeShard]] call in the JVM: daemon
+    * threads, so an idle pool never holds the JVM open.
+    */
+  private lazy val encodePool: ExecutorService = {
+    val n = new AtomicInteger(0)
+    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors, { (r: Runnable) =>
+      val t = new Thread(r, s"zarr-encode-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  }
+
   /** Core streaming encoder shared by [[encodeShard]] and [[writeShard]]:
-    * chunks are staged in ONE reused buffer, compressed, and written as
-    * produced; the (offset,nbytes) index + CRC32C trailer follows
-    * (index_location=end). Returns total bytes written.
+    * a window of up to `threads` chunks is in flight; each is fill-padded,
+    * staged, converted to LE and compressed (on [[encodePool]], or inline
+    * on the calling thread when the window is 1), and the calling thread
+    * writes them as they complete, in C order. The (offset,nbytes) index
+    * + CRC32C trailer follows (index_location=end). Returns total bytes
+    * written.
     */
   private def encodeShardTo(
       out: java.io.OutputStream,
@@ -97,7 +122,8 @@ object ZarrV3 {
       shardShape: Shape3,
       chunkShape: Shape3,
       level: Int,
-      codec: String): Long = {
+      codec: String,
+      threads: Int): Long = {
     // >= not ==: callers may pass a REUSED oversized region buffer (the
     // per-partition scratch in ImarisToZarr waves)
     require(shardData.length >= dataShape.voxels,
@@ -109,23 +135,49 @@ object ZarrV3 {
     // every entry starts as missing (-1, -1): chunks wholly outside the
     // data are elided
     java.util.Arrays.fill(index.array(), 0, nChunks * 16, 0xff.toByte)
-    // ONE staging chunk reused across chunks; compressed chunks are
-    // written as produced — peak state is O(chunk), never O(shard), and
-    // shard files are no longer capped at a 2 GiB in-memory buffer
-    val chunk = new Array[Short](chunkVox)
-    val raw = new Array[Byte](chunkVox * 2)
+    val stored = Geometry.ceilDiv(dataShape.z, chunkShape.z) *
+      Geometry.ceilDiv(dataShape.y, chunkShape.y) * Geometry.ceilDiv(dataShape.x, chunkShape.x)
+    val window = math.max(1L, math.min(threads.toLong,
+      math.min(Runtime.getRuntime.availableProcessors.toLong, stored))).toInt
+    // one staging chunk per window slot, EXACTLY the chunk's size (the
+    // compressor reads the whole staging array): chunk i reuses slot
+    // i % window only after chunk i - window was written
+    val chunks = Array.fill(window)(new Array[Short](chunkVox))
+    val raws = Array.fill(window)(new Array[Byte](chunkVox * 2))
+    val inFlight = new java.util.ArrayDeque[(Int, Future[Array[Byte]])](window)
     var off = 0L
-    // data beyond the shard is not stored
-    Voxels.forEachTile(Origin, dataShape, chunkShape, shardShape) { t =>
-      // chunks are always stored full-size, fill-padded at the data edge
-      if (t.extent != chunkShape) java.util.Arrays.fill(chunk, Fill)
-      Voxels.copyBox(shardData, dataShape, Origin, chunk, chunkShape, t.origin, t.lo, t.extent)
-      Voxels.toLE(chunk, chunkVox, raw)
-      val comp = compress(raw, level, codec)
+    def writeOldest(): Unit = {
+      val (ci, job) = inFlight.poll()
+      val comp =
+        try job.get()
+        catch { case e: ExecutionException => throw e.getCause }
       out.write(comp)
-      val ci = ((t.gz * grid.y + t.gy) * grid.x + t.gx).toInt
       index.putLong(ci * 16, off).putLong(ci * 16 + 8, comp.length.toLong)
       off += comp.length
+    }
+    var i = 0
+    try {
+      // data beyond the shard is not stored
+      Voxels.forEachTile(Origin, dataShape, chunkShape, shardShape) { t =>
+        if (inFlight.size == window) writeOldest()
+        val chunk = chunks(i % window)
+        val raw = raws(i % window)
+        val job = new FutureTask[Array[Byte]](() => {
+          // chunks are always stored full-size, fill-padded at the data edge
+          if (t.extent != chunkShape) java.util.Arrays.fill(chunk, Fill)
+          Voxels.copyBox(shardData, dataShape, Origin, chunk, chunkShape, t.origin, t.lo, t.extent)
+          Voxels.toLE(chunk, chunkVox, raw)
+          compress(raw, level, codec)
+        })
+        if (window == 1) job.run() else encodePool.execute(job)
+        inFlight.add((((t.gz * grid.y + t.gy) * grid.x + t.gx).toInt, job))
+        i += 1
+      }
+      while (!inFlight.isEmpty) writeOldest()
+    } finally {
+      // a failed chunk, a failed write or an interrupt (a killed task):
+      // drop every chunk still queued or encoding
+      inFlight.forEach(_._2.cancel(true))
     }
     val crc = new CRC32C()
     crc.update(index.array(), 0, nChunks * 16)
