@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.Geometry.Shape3
 import graft.plans.{DirSync, ImarisToZarr, JobSettings, Manifest}
 
 /** CLI entrypoint for the IMS → OME-Zarr batch job (reference O1/O2:
   * `job_entrypoint` + `run_job`, `imaris_job.py:719-770`).
   *
   * Settings reach the job through the reference's three entry modes
-  * (see [[graft.plans.JobSettings]]) plus explicit flags:
+  * (see [[graft.plans.JobSettings]]), the third with explicit flags:
   * {{{
   * graft.ImsToZarrJob --job-settings '{"input_source":...,"output_directory":...}'
   * graft.ImsToZarrJob --config-file /path/settings.json
@@ -18,6 +17,8 @@ import graft.plans.{DirSync, ImarisToZarr, JobSettings, Manifest}
   *   [--shard Z,Y,X] [--chunk Z,Y,X] [--levels N] [--mode mean]
   *   [--partition-mode shard|file] [--s3-location URI]
   *   [--no-translate] [--single-tile] [--zstd-level 3]
+  *   [--codec zstd|blosc|gzip] [--zarr-format 3|2]
+  *   [--blosc-cname zstd] [--blosc-shuffle shuffle] [--v2-separator .|/]
   * }}}
   *
   * The external-scheduler partitioning contract (O5: SLURM array id →
@@ -26,15 +27,10 @@ import graft.plans.{DirSync, ImarisToZarr, JobSettings, Manifest}
   */
 object ImsToZarrJob {
 
-  private def parseShape(s: String): Shape3 = {
-    val p = s.split(",").map(_.trim.toLong)
-    require(p.length == 3, s"expected Z,Y,X, got: $s")
-    Shape3(p(0), p(1), p(2))
-  }
-
   /** Resolve settings with the reference's precedence
     * (`imaris_job.py:758-768`): inline JSON beats config file beats
-    * env/flags. Flags and env compose (flags win field-wise).
+    * env/flags. Flags and env compose (flags win field-wise); the env
+    * variables count only when `GRAFT_JOB_INPUT_SOURCE` is set.
     */
   def resolveSettings(argv: Array[String],
                       env: Map[String, String],
@@ -43,36 +39,11 @@ object ImsToZarrJob {
       val i = argv.indexOf(flag)
       if (i >= 0 && i + 1 < argv.length) Some(argv(i + 1)) else None
     }
-    if (valOf("--job-settings").isDefined) JobSettings.fromJson(valOf("--job-settings").get)
-    else if (valOf("--config-file").isDefined) JobSettings.fromConfigFile(hconf, valOf("--config-file").get)
-    else {
-      var s =
+    valOf("--job-settings").map(JobSettings.fromJson)
+      .orElse(valOf("--config-file").map(JobSettings.fromConfigFile(hconf, _)))
+      .getOrElse(JobSettings.fromArgs(argv,
         if (env.contains("GRAFT_JOB_INPUT_SOURCE")) JobSettings.fromEnv(env)
-        else JobSettings(inputSource = "", outputDirectory = "")
-      var i = 0
-      while (i < argv.length) {
-        argv(i) match {
-          case "--input"          => s = s.copy(inputSource = argv(i + 1)); i += 2
-          case "--output"         => s = s.copy(outputDirectory = argv(i + 1)); i += 2
-          case "--shard"          => s = s.copy(shardSize = parseShape(argv(i + 1))); i += 2
-          case "--chunk"          => s = s.copy(chunkSize = parseShape(argv(i + 1))); i += 2
-          case "--levels"         => s = s.copy(downsampleLevels = argv(i + 1).toInt); i += 2
-          case "--mode"           => s = s.copy(downsampleMode = argv(i + 1)); i += 2
-          case "--zstd-level"     => s = s.copy(zstdLevel = argv(i + 1).toInt); i += 2
-          case "--zarr-format"    => s = s.copy(zarrFormat = argv(i + 1).toInt); i += 2
-          case "--codec"          => s = s.copy(codec = argv(i + 1)); i += 2
-          case "--blosc-cname"    => s = s.copy(bloscCname = argv(i + 1)); i += 2
-          case "--blosc-shuffle"  => s = s.copy(bloscShuffle = argv(i + 1)); i += 2
-          case "--v2-separator"   => s = s.copy(v2Separator = argv(i + 1)); i += 2
-          case "--partition-mode" => s = s.copy(partitionMode = argv(i + 1)); i += 2
-          case "--s3-location"    => s = s.copy(s3Location = Some(argv(i + 1))); i += 2
-          case "--no-translate"   => s = s.copy(translateImarisPyramid = false); i += 1
-          case "--single-tile"    => s = s.copy(singleTileUpload = true); i += 1
-          case other              => sys.error(s"unknown arg: $other")
-        }
-      }
-      s.validated
-    }
+        else JobSettings(inputSource = "", outputDirectory = "")))
   }
 
   def main(argv: Array[String]): Unit = {
@@ -107,14 +78,7 @@ object ImsToZarrJob {
     // ONE global pooled task list over all files (reference
     // `_build_global_shard_task_list`) — per-file settings differ only in
     // the manifest origin override
-    val settingsFor = (stack: String) => ImarisToZarr.Settings(
-      shard = a.shardSize, chunk = a.chunkSize, zstdLevel = a.zstdLevel,
-      translatePyramid = a.translateImarisPyramid, computeLevels = a.downsampleLevels,
-      downsampleMode = a.downsampleMode, scaleFactor = a.scaleFactor,
-      partitionMode = a.partitionMode, codecName = a.codec,
-      zarrFormat = a.zarrFormat, bloscCname = a.bloscCname,
-      bloscShuffle = JobSettings.resolveShuffle(a.bloscShuffle),
-      v2Separator = a.v2Separator,
+    val settingsFor = (stack: String) => a.settings.copy(
       voxelSizeOverrideUm = voxelOverride,
       originOverrideUm = manifest.flatMap(m =>
         Manifest.tileTranslationUm(m, stack.split('/').last)))

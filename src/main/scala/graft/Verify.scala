@@ -19,8 +19,8 @@ object Verify {
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        System.err.println(
-          f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+        // stdout: sbt tags every stderr line [error], and a pass is not one
+        println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -178,7 +178,7 @@ object Tables {
     * lets doc_id/user_id-clustered consumers reuse the partitioning
     * (guide §2.4). Tables under 24 KB (the broadcast-side dims) are
     * left alone — for them the extra exchange is pure latency.
-    * `spark.graft.scan.spread=false` disables the rewrite.
+    * [[raw]] is the per-query opt-out.
     *
     * Values are partitioning-independent across this surface (the
     * round-2 decimal discipline; every collect_list is sorted, every
@@ -235,8 +235,7 @@ object Tables {
   private def spread(spark: SparkSession, path: String, name: String,
       df: DataFrame): DataFrame =
     spreadKeys.get(name) match {
-      case Some(key) if spark.conf.getOption("spark.graft.scan.spread")
-          .forall(_.toBoolean) =>
+      case Some(key) =>
         val target = spark.sparkContext.defaultParallelism
         val layout = layoutOf(spark, path)
         // typed accessor, not conf string parsing: the default renders

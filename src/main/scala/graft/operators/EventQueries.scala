@@ -111,10 +111,10 @@ object EventQueries {
     *   - `auto`: tables under `spark.graft.events.saltBytes` (default
     *     128 MB) always take the plain plan — at that size even a 100 %
     *     hot user fits one task comfortably. Above the floor, a BOUNDED
-    *     head-sample probe (`limit(spark.graft.events.skewSampleRows)`,
-    *     default 1M rows — a LocalLimit scan that reads only the leading
+    *     head-sample probe (`limit(SkewSampleRows)`,
+    *     1M rows — a LocalLimit scan that reads only the leading
     *     row groups, never the table) measures the top user's share; above
-    *     `spark.graft.events.skewShare` (default 0.05 — 5 % of a
+    *     `SkewShare` (0.05 — 5 % of a
     *     >128 MB table in one window partition is straggler territory)
     *     the salted plan is dispatched. The probe is cached per
     *     (path, content snapshot) so repeat invocations plan for free.
@@ -129,6 +129,10 @@ object EventQueries {
   private[graft] object Dispatch {
     private def conf(s: SparkSession, key: String, dflt: String): String =
       s.conf.getOption(key).getOrElse(dflt)
+    /** Top-user share of the sample above which `auto` salts. */
+    private val SkewShare = 0.05
+    /** Rows in the bounded skew probe. */
+    private val SkewSampleRows = 1000000
 
     def useSalted(s: SparkSession, d: String): Boolean =
       conf(s, "spark.graft.events.salted", "auto") match {
@@ -137,21 +141,18 @@ object EventQueries {
         case _ =>
           val floor = conf(s, "spark.graft.events.saltBytes", (128L << 20).toString).toLong
           graft.core.Sizing.onDiskBytes(s, s"$d/events.parquet") > floor && {
-            val thresh = conf(s, "spark.graft.events.skewShare", "0.05").toDouble
-            probedShare(s, d) > thresh
+            probedShare(s, d) > SkewShare
           }
       }
 
     /** Top-user share over a bounded head sample; an empty table probes
       * as share 0. The MEASURED share is cached (a SessionMemo value per
-      * (path, sample size) and table snapshot), not the decision: the
-      * threshold is session conf, and caching the boolean would leak one
-      * session's skewShare setting into another's dispatch.
+      * (path, sample size) and table snapshot), not the decision, which
+      * also reads the per-session `salted` and `saltBytes` settings.
       */
     private def probedShare(s: SparkSession, d: String): Double = {
       val path = s"$d/events.parquet"
-      val rows = conf(s, "spark.graft.events.skewSampleRows", "1000000").toInt
-      graft.core.SessionMemo.value(s, "events_top_share", (path, rows), Seq(path)) {
+      graft.core.SessionMemo.value(s, "events_top_share", (path, SkewSampleRows), Seq(path)) {
         // head sample (LocalLimit over the leading row groups) PLUS an
         // explicit sample of the lexicographically LAST part file
         // (round-14 lead 2): a hot key whose rows land only in later
@@ -161,11 +162,11 @@ object EventQueries {
         // `salted=on` exists for workloads that know); rows may be
         // double-counted when the table is a single file, which only
         // biases the share estimate of data both samples saw anyway.
-        val head = s.read.parquet(path).select(col("user_id")).limit(rows / 2)
+        val head = s.read.parquet(path).select(col("user_id")).limit(SkewSampleRows / 2)
         val sample = lastPartFile(s, path) match {
           case Some(last) =>
             head.unionAll(
-              s.read.parquet(last).select(col("user_id")).limit(rows / 2))
+              s.read.parquet(last).select(col("user_id")).limit(SkewSampleRows / 2))
           case None => head
         }
         val agg = sample

@@ -52,12 +52,19 @@ import graft.sources.{Hdf5Reader, Imaris}
   */
 object ImarisToZarr {
 
-  /** Job settings (reference `models.ImarisJobSettings`, `models.py:20-143`). */
+  /** The conversion settings (reference `models.ImarisJobSettings`,
+    * `models.py:20-143`): the one record every entry mode parses into
+    * ([[JobSettings]] for JSON, config file, env and flags; the API
+    * directly) and the one place each default is written. [[convertAll]]
+    * runs [[Settings.validated]] on every file's settings before it plans
+    * or writes anything.
+    */
   final case class Settings(
       shard: Shape3 = Shape3(512, 512, 512),
       chunk: Shape3 = Shape3(128, 256, 256),
+      // v3: the codec's level (zstd 1–22); v2: the blosc clevel (0–9)
       zstdLevel: Int = 3,
-      codecName: String = "zstd",       // zstd (reference chain) | gzip
+      codecName: String = "zstd",       // v3 chunk codec: zstd (reference chain) | blosc | gzip
       // W1: zarr v2 legacy store (blosc chunks, one file per chunk) —
       // the reference's DEFAULT path (use_tensorstore=False,
       // models.py:91-98); 3 = sharded v3 (its tensorstore path)
@@ -68,10 +75,9 @@ object ImarisToZarr {
       // reference writes), "/" = nested directory store
       v2Separator: String = ".",
       translatePyramid: Boolean = true,   // models.py:99-108
-      computeLevels: Int = 1,             // levels to materialize if not translating
+      computeLevels: Int = 5,             // levels to materialize if not translating (reference default)
       downsampleMode: String = "mean",    // stride|median|mode|mean|min|max (models.py:79-85)
       scaleFactor: Shape3 = Shape3(2, 2, 2),
-      singleTileOnly: Boolean = false,    // models.py:131-143 (S3)
       // D6 two-mode partitioning (models.py:121-130): "shard" = one task
       // per (file, shard index) — sub-file parallelism; "file" = legacy
       // whole-file granularity, realized as a degenerate one-shard-per-
@@ -93,7 +99,44 @@ object ImarisToZarr {
       // back to the store read. Output stores are byte-identical either
       // way (spec-asserted); false selects the store read everywhere.
       fuseDownsample: Boolean = true
-  )
+  ) {
+
+    /** Every rule on these settings; each message names the setting by
+      * its job-settings key. Returns `this`, or throws
+      * IllegalArgumentException.
+      */
+    def validated: Settings = {
+      require(Settings.DownsampleModes.contains(downsampleMode),
+        s"downsample_mode must be one of ${Settings.DownsampleModes.mkString("|")}, got: $downsampleMode")
+      require(partitionMode == "file" || partitionMode == "shard",
+        s"partition_mode must be file|shard, got: $partitionMode")
+      require(computeLevels >= 1, s"downsample_levels must be >= 1, got: $computeLevels")
+      if (zarrFormat == 2)
+        require(zstdLevel >= 0 && zstdLevel <= 9,
+          s"blosc clevel must be in [0,9] for zarr v2, got: $zstdLevel")
+      else require(zstdLevel >= 1 && zstdLevel <= 22, s"zstd level must be in [1,22], got: $zstdLevel")
+      require(Settings.Codecs.contains(codecName),
+        s"codec must be ${Settings.Codecs.mkString("|")}, got: $codecName")
+      require(zarrFormat == 2 || zarrFormat == 3, s"zarr_format must be 2|3, got: $zarrFormat")
+      require(v2Separator == "." || v2Separator == "/",
+        s"dimension_separator must be '.' or '/', got: $v2Separator")
+      if (zarrFormat == 2) {
+        require(Settings.BloscCnames.contains(bloscCname),
+          s"blosc cname must be ${Settings.BloscCnames.mkString("|")}, got: $bloscCname")
+        require(graft.sinks.Blosc.ShuffleNames.values.exists(_ == bloscShuffle),
+          s"shuffle must be one of -1..2, got: $bloscShuffle")
+      }
+      for ((s, k) <- Seq((shard, "shard_size"), (chunk, "chunk_size"), (scaleFactor, "scale_factor")))
+        require(s.z > 0 && s.y > 0 && s.x > 0, s"$k must be three positive integers, got: $s")
+      this
+    }
+  }
+
+  object Settings {
+    val DownsampleModes: Seq[String] = Seq("stride", "median", "mode", "mean", "min", "max")
+    val Codecs: Seq[String] = Seq("zstd", "blosc", "gzip")
+    val BloscCnames: Seq[String] = Seq("zstd", "lz4", "lz4hc", "zlib", "snappy")
+  }
 
   final case class ShardStats(
       file: String, level: Int, key: String, bytesWritten: Long, voxels: Long)
@@ -127,12 +170,11 @@ object ImarisToZarr {
       levelDir: String, shape: Shape3, shard: Shape3, chunk: Shape3) extends Source
 
   /** Per-(file, level) parameters an executor task resolves from its
-    * ShardTask key.
+    * ShardTask key: the file's settings, and the level's clamped chunk and
+    * shard.
     */
   private final case class TaskIo(
-      store: String, chunk: Shape3, shard: Shape3, zstdLevel: Int, codec: String,
-      zarrFormat: Int, cname: String, shuffle: Int, separator: String,
-      factor: Shape3, mode: String, source: Source,
+      store: String, chunk: Shape3, shard: Shape3, settings: Settings, source: Source,
       // non-empty → emit the next level's partial of this task's region
       // to `$partialDir/<sz>_<sy>_<sx>`
       partialDir: String)
@@ -188,14 +230,14 @@ object ImarisToZarr {
     // job and deserialized per task, on the critical path of every wave
     val serConf = spark.sparkContext.broadcast(new SerializableConfiguration(hconf))
 
-    // Fail before ANY metadata is written: Settings built directly via the
-    // API bypass JobSettings.validated, and a bad separator caught only at
-    // executor write time would leave a partially written store whose
-    // .zarray files already carry the bogus dimension_separator.
-    imsPaths.foreach { p =>
-      val sep = settingsFor(p).v2Separator
-      require(sep == "." || sep == "/",
-        s"dimension_separator must be '.' or '/', got: $sep (input $p)")
+    // Fail before ANY metadata is written: a bad setting caught only on
+    // an executor would leave a partially written store whose metadata
+    // already names it (a codec, a separator) or a level 0 without its
+    // pyramid (a downsample mode).
+    val fileSettings = imsPaths.map { p =>
+      try settingsFor(p).validated
+      catch { case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"${e.getMessage} (input $p)", e) }
     }
 
     // ---- driver-side planning, metadata-only (W7→driver, W9, X9) ----
@@ -204,8 +246,7 @@ object ImarisToZarr {
     final case class FilePlan(file: String, settings: Settings, store: String,
                               trueShapes: Seq[Shape3], specs: Seq[(Shape3, Shape3)],
                               metadata: Seq[(String, String)])
-    val plans = imsPaths.map { imsPath =>
-      val settings = settingsFor(imsPath)
+    val plans = imsPaths.zip(fileSettings).map { case (imsPath, settings) =>
       val stem = imsPath.split('/').last.stripSuffix(".ims").stripSuffix(".h5")
       val store = s"$outDir/$stem.ome.zarr"
       val meta = Imaris.readMeta(imsPath, hconf)
@@ -228,11 +269,6 @@ object ImarisToZarr {
             Geometry.ceilDiv(ts.x, c.x) * c.x))
         } else Geometry.clampSpec(ts, settings.chunk, settings.shard)
       }
-      require(settings.zarrFormat == 2 || settings.zarrFormat == 3,
-        s"zarr format must be 2|3, got: ${settings.zarrFormat}")
-      if (settings.zarrFormat == 2)
-        require(settings.zstdLevel >= 0 && settings.zstdLevel <= 9,
-          s"blosc clevel must be in [0,9] for zarr v2, got: ${settings.zstdLevel}")
       val levelDocs = trueShapes.zipWithIndex.map { case (ts, l) =>
         val (chunk, shard) = perLevelSpecs(l)
         if (settings.zarrFormat == 2)
@@ -304,11 +340,7 @@ object ImarisToZarr {
     val io: Map[(String, Int), TaskIo] = plans.flatMap { p =>
       p.trueShapes.indices.map { l =>
         val (chunkL, shardL) = p.specs(l)
-        (p.file, l) -> TaskIo(p.store, chunkL, shardL,
-          p.settings.zstdLevel, p.settings.codecName,
-          p.settings.zarrFormat, p.settings.bloscCname, p.settings.bloscShuffle,
-          p.settings.v2Separator, p.settings.scaleFactor, p.settings.downsampleMode,
-          source(p, l),
+        (p.file, l) -> TaskIo(p.store, chunkL, shardL, p.settings, source(p, l),
           partialDir = if (fusesLevel(p, l)) partialDir(p, l + 1) else "")
       }
     }.toMap
@@ -328,11 +360,10 @@ object ImarisToZarr {
 
     // a task buffer past one JVM array would fail on an executor after
     // the store was initialised: reject the plan before any metadata
-    val partitionMode = plans.map(p => p.file -> p.settings.partitionMode).toMap
     waves.foreach(_.foreach { t =>
       val spec = io((t.file, t.level))
-      checkTaskBuffers(t, spec.source, spec.factor, spec.partialDir.nonEmpty,
-        partitionMode(t.file))
+      checkTaskBuffers(t, spec.source, spec.settings.scaleFactor, spec.partialDir.nonEmpty,
+        spec.settings.partitionMode)
     })
     plans.foreach(_.metadata.foreach { case (path, doc) => ZarrV3.writeString(hconf, path, doc) })
 
@@ -476,7 +507,7 @@ object ImarisToZarr {
       spec.source match {
         case FromHdf5 => region * 2L
         case FromPartials(_, tile, _) => (region + tile.voxels) * 2L
-        case _: FromStore => region * spec.factor.voxels * 2L
+        case _: FromStore => region * spec.settings.scaleFactor.voxels * 2L
       }
     }.max * 3
     val partitions = memoryCappedParallelism(spark, tasks.size, maxTaskBytes)
@@ -509,7 +540,8 @@ object ImarisToZarr {
         if (buf.length >= n) buf else new Array[Short](n.toInt)
       it.map { t =>
         val spec = io((t.file, t.level))
-        val f = spec.factor
+        val cfg = spec.settings
+        val f = cfg.scaleFactor
         val origin = Shape3(t.z0, t.y0, t.x0)
         val end = Shape3(t.z1, t.y1, t.x1)
         val shape = t.region.shape
@@ -533,29 +565,29 @@ object ImarisToZarr {
             val (lo, hi) = storeBox(t, f, src)
             val srcShape = Shape3(hi.z - lo.z, hi.y - lo.y, hi.x - lo.x)
             srcBuf = grown(srcBuf, srcShape.voxels)
-            if (spec.zarrFormat == 2)
+            if (cfg.zarrFormat == 2)
               ZarrV2.readRegionInto(conf, levelDir, src, srcChunk,
-                lo.z, hi.z, lo.y, hi.y, lo.x, hi.x, srcBuf, spec.separator)
+                lo.z, hi.z, lo.y, hi.y, lo.x, hi.x, srcBuf, cfg.v2Separator)
             else ZarrRegion.readInto(conf, levelDir, src, srcShard, srcChunk,
               lo.z, hi.z, lo.y, hi.y, lo.x, hi.x, srcBuf)
-            Downsample.reduceInto(srcBuf, srcShape, shape, f, spec.mode, regionBuf)
+            Downsample.reduceInto(srcBuf, srcShape, shape, f, cfg.downsampleMode, regionBuf)
         }
         // streaming encode+write: peak task state is the voxel region +
         // one chunk per encode thread, not an extra fully-assembled shard
         val (key, written) =
-          if (spec.zarrFormat == 2)
-            (ZarrV2.chunkKey(t.sz, t.sy, t.sx, spec.separator),
+          if (cfg.zarrFormat == 2)
+            (ZarrV2.chunkKey(t.sz, t.sy, t.sx, cfg.v2Separator),
               ZarrV2.writeRegionChunks(conf, s"${spec.store}/${t.level}", regionBuf,
-                shape, origin, spec.chunk, spec.cname, spec.zstdLevel, spec.shuffle, spec.separator))
+                shape, origin, spec.chunk, cfg.bloscCname, cfg.zstdLevel, cfg.bloscShuffle, cfg.v2Separator))
           else {
             val k = ZarrV3.shardKey(t.sz, t.sy, t.sx)
             (k, ZarrV3.writeShard(conf, s"${spec.store}/${t.level}/$k",
-              regionBuf, shape, spec.shard, spec.chunk, spec.zstdLevel, spec.codec, threads))
+              regionBuf, shape, spec.shard, spec.chunk, cfg.zstdLevel, cfg.codecName, threads))
           }
         if (spec.partialDir.nonEmpty) {
           val pShape = partialShape(t, f)
           partialBuf = grown(partialBuf, pShape.voxels)
-          Downsample.reduceInto(regionBuf, shape, pShape, f, spec.mode, partialBuf)
+          Downsample.reduceInto(regionBuf, shape, pShape, f, cfg.downsampleMode, partialBuf)
           PartialStore.write(conf,
             s"${spec.partialDir}/${t.sz}_${t.sy}_${t.sx}", partialBuf, pShape,
             partialScratch)

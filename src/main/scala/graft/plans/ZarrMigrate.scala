@@ -26,6 +26,7 @@ import graft.sinks.{ZarrV2, ZarrV3}
 object ZarrMigrate {
 
   private val mapper = new ObjectMapper()
+  private val Defaults = ImarisToZarr.Settings()
 
   /** One v2 level's geometry, read from its `.zarray`. `separator`
     * honors foreign stores' `dimension_separator` ("." default, "/" for
@@ -53,11 +54,14 @@ object ZarrMigrate {
   /** Migrate `srcStore` (v2) to `dstStore` (v3 sharded). Returns per-shard
     * stats. The v3 inner chunk equals the v2 chunk (no recompression
     * boundary mismatch); `shard` is clamped per level exactly like the
-    * conversion plan.
+    * conversion plan. The defaults and rules are the conversion's
+    * ([[ImarisToZarr.Settings]]).
     */
   def v2ToV3(spark: SparkSession, srcStore: String, dstStore: String,
-             shard: Shape3 = Shape3(512, 512, 512),
-             zstdLevel: Int = 3, codec: String = "zstd"): Seq[ImarisToZarr.ShardStats] = {
+             shard: Shape3 = Defaults.shard,
+             zstdLevel: Int = Defaults.zstdLevel,
+             codec: String = Defaults.codecName): Seq[ImarisToZarr.ShardStats] = {
+    Defaults.copy(shard = shard, zstdLevel = zstdLevel, codecName = codec).validated
     val hconf = spark.sparkContext.hadoopConfiguration
     val serConf = new SerializableConfiguration(hconf)
     import org.apache.hadoop.fs.Path

@@ -75,8 +75,11 @@ object ZarrV3 {
     * JVM-wide daemon pool (capped at `availableProcessors` and at the
     * shard's chunk count), for a task that runs while slots sit idle; the
     * calling thread still writes chunks and index entries in C order, so
-    * the file is byte-identical to `threads = 1`. An encode failure is
-    * rethrown as the encoder threw it. Returns bytes written.
+    * the file is byte-identical to `threads = 1`. An encode or write
+    * failure deletes the partly written file (best effort) — a reader
+    * then sees a missing shard, which reads as fill, not a truncated one
+    * that fails its CRC — and is rethrown as the encoder threw it.
+    * Returns bytes written.
     */
   def writeShard(
       fsConf: Configuration,
@@ -91,8 +94,16 @@ object ZarrV3 {
     val p = new Path(pathStr)
     val fs = rawFs(p, fsConf)
     val out = fs.create(p, true)
-    try encodeShardTo(out, shardData, dataShape, shardShape, chunkShape, level, codec, threads)
-    finally out.close()
+    try {
+      val n = encodeShardTo(out, shardData, dataShape, shardShape, chunkShape, level, codec, threads)
+      out.close()
+      n
+    } catch { case e: Throwable =>
+      // best-effort cleanup: its own failures must not mask `e`
+      try out.close() catch { case _: Throwable => () }
+      try fs.delete(p, false) catch { case _: java.io.IOException => () }
+      throw e
+    }
   }
 
   /** Encode pool shared by every [[writeShard]] call in the JVM: daemon

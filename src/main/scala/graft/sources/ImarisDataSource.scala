@@ -151,7 +151,7 @@ final class ImarisScan(
     val path = props.getOrElse("path", sys.error("imaris source requires option 'path'"))
     val shard = props.get("shard").map { s =>
       val p = s.split(",").map(_.trim.toLong); Shape3(p(0), p(1), p(2))
-    }.getOrElse(Shape3(512, 512, 512))
+    }.getOrElse(graft.plans.ImarisToZarr.Settings().shard)
     val conf = sessionConf
     val files =
       if (path.endsWith(".ims") || path.endsWith(".h5")) Seq(path)

@@ -30,14 +30,6 @@ object StreamingOps {
       .select(col("w.start").as("window_start"), col("event_type"),
         col("cnt"), col("total_value"))
 
-  /** Q-B2 streaming twin: 1h windows sliding every 15m. */
-  def slidingCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
-      .agg(count(lit(1)).as("cnt"), sum(col("value")).as("total_value"))
-      .select(col("w.start").as("window_start"), col("cnt"), col("total_value"))
-
   /** Q-B3 streaming twin using the built-in session_window (30m gap). */
   def sessionWindows(events: DataFrame, watermark: String = "2 hours"): DataFrame =
     events
@@ -1033,17 +1025,5 @@ object StreamingOps {
       out.iterator
     }
     heavyHitterServe(updates.toDF())
-  }
-
-  /** Wire any of the above to a memory sink for tests/demos; returns the
-    * query name to poll with `spark.sql(s"select * from $name")`.
-    */
-  def toMemorySink(df: DataFrame, name: String, complete: Boolean = true): String = {
-    df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(if (complete) OutputMode.Complete() else OutputMode.Append())
-      .start()
-    name
   }
 }

@@ -318,6 +318,21 @@ class ImarisToZarrSpec extends AnyFunSuite with BeforeAndAfterAll {
       "no partial store may exist after early validation failure")
   }
 
+  test("API settings are validated before anything is planned or written") {
+    val ok = ImarisToZarr.Settings(shard = Shape3(32, 32, 32), chunk = Shape3(16, 16, 16),
+      translatePyramid = false, computeLevels = 2)
+    Seq(ok.copy(codecName = "lz4") -> "codec must be zstd|blosc|gzip",
+      ok.copy(downsampleMode = "avg") -> "downsample_mode must be one of",
+      ok.copy(partitionMode = "files") -> "partition_mode must be file|shard",
+      ok.copy(zstdLevel = 40) -> "zstd level must be in [1,22]").foreach { case (bad, msg) =>
+      val out = Files.createTempDirectory("zarrbadsetting").toString
+      val e = intercept[IllegalArgumentException](
+        ImarisToZarr.convert(spark, s"${Fixtures.dir}/ims_64.ims", out, bad))
+      assert(e.getMessage.contains(msg), e.getMessage)
+      assert(new java.io.File(out).listFiles().isEmpty, s"$msg: the store was started")
+    }
+  }
+
   test("discover: deterministic order and single-tile mode (S1-S3)") {
     val files = ImarisToZarr.discover(Fixtures.dir, singleTileOnly = false, conf)
     assert(files.map(_.split('/').last) ==

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Geometry.Shape3
-import graft.plans.JobSettings
+import graft.plans.{ImarisToZarr, JobSettings}
+import graft.sinks.Blosc
 
 /** Settings schema (reference `models.py:20-143`): three entry modes,
   * field validation, reference-config compatibility.
@@ -20,20 +21,23 @@ class JobSettingsSpec extends AnyFunSuite {
         |"downsample_levels":3,"downsample_mode":"median",
         |"translate_imaris_pyramid":false,"partition_mode":"file",
         |"single_tile_upload":true,"zstd_level":5}""".stripMargin)
-    assert(s == JobSettings("/in", "/out", Some("s3://bkt/x"),
-      Shape3(256, 256, 256), Shape3(64, 128, 128), Shape3(1, 2, 2),
-      3, "median", translateImarisPyramid = false, "file",
-      singleTileUpload = true, 5))
+    assert(s == JobSettings("/in", "/out", Some("s3://bkt/x"), singleTileUpload = true,
+      ImarisToZarr.Settings(shard = Shape3(256, 256, 256), chunk = Shape3(64, 128, 128),
+        scaleFactor = Shape3(1, 2, 2), computeLevels = 3, downsampleMode = "median",
+        translatePyramid = false, partitionMode = "file", zstdLevel = 5)))
   }
 
   test("JSON entry: defaults match the reference schema") {
     val s = JobSettings.fromJson("""{"input_source":"/in","output_directory":"/out"}""")
-    assert(s.shardSize == Shape3(512, 512, 512))
-    assert(s.chunkSize == Shape3(128, 256, 256))
-    assert(s.scaleFactor == Shape3(2, 2, 2))
-    assert(s.downsampleLevels == 5 && s.downsampleMode == "mean")
-    assert(s.translateImarisPyramid && s.partitionMode == "shard")
-    assert(!s.singleTileUpload && s.zstdLevel == 3 && s.s3Location.isEmpty)
+    val c = s.settings
+    assert(c.shard == Shape3(512, 512, 512))
+    assert(c.chunk == Shape3(128, 256, 256))
+    assert(c.scaleFactor == Shape3(2, 2, 2))
+    assert(c.computeLevels == 5 && c.downsampleMode == "mean")
+    assert(c.translatePyramid && c.partitionMode == "shard")
+    assert(!s.singleTileUpload && c.zstdLevel == 3 && s.s3Location.isEmpty)
+    // one default per setting: the API's is the JSON's
+    assert(c == ImarisToZarr.Settings())
   }
 
   test("JSON entry: validation errors") {
@@ -68,25 +72,25 @@ class JobSettingsSpec extends AnyFunSuite {
         |"compress_job_save_kwargs":{"n_jobs":-1},
         |"compressor_name":"blosc",
         |"compressor_kwargs":{"cname":"zstd","clevel":7,"shuffle":"shuffle"}}""".stripMargin)
-    assert(s.zstdLevel == 7) // compressor_kwargs.clevel flows through
-    assert(s.zarrFormat == 3) // use_tensorstore=true → sharded v3
-    assert(s.bloscCname == "zstd" && s.bloscShuffle == "shuffle")
+    assert(s.settings.zstdLevel == 7) // compressor_kwargs.clevel flows through
+    assert(s.settings.zarrFormat == 3) // use_tensorstore=true → sharded v3
+    assert(s.settings.bloscCname == "zstd" && s.settings.bloscShuffle == Blosc.SHUFFLE)
   }
 
   test("dimension_separator reaches v2Separator from JSON and is validated") {
     val s = JobSettings.fromJson(
       """{"input_source":"/in","output_directory":"/out","zarr_format":2,
         |"dimension_separator":"/"}""".stripMargin)
-    assert(s.v2Separator == "/")
+    assert(s.settings.v2Separator == "/")
     assert(JobSettings.fromJson(
-      """{"input_source":"/in","output_directory":"/out"}""").v2Separator == ".")
+      """{"input_source":"/in","output_directory":"/out"}""").settings.v2Separator == ".")
     intercept[Exception](JobSettings.fromJson(
       """{"input_source":"/in","output_directory":"/out","zarr_format":2,
         |"dimension_separator":"x"}""".stripMargin))
     val e = JobSettings.fromEnv(Map(
       "GRAFT_JOB_INPUT_SOURCE" -> "/in", "GRAFT_JOB_OUTPUT_DIRECTORY" -> "/out",
       "GRAFT_JOB_ZARR_FORMAT" -> "2", "GRAFT_JOB_DIMENSION_SEPARATOR" -> "/"))
-    assert(e.v2Separator == "/")
+    assert(e.settings.v2Separator == "/")
   }
 
   test("use_tensorstore=false selects the legacy Zarr v2 writer (W1)") {
@@ -94,18 +98,19 @@ class JobSettingsSpec extends AnyFunSuite {
       """{"input_source":"/in","output_directory":"/out",
         |"use_tensorstore":false,
         |"compressor_kwargs":{"cname":"lz4","clevel":5,"shuffle":"bitshuffle"}}""".stripMargin)
-    assert(s.zarrFormat == 2)
-    assert(s.bloscCname == "lz4" && s.bloscShuffle == "bitshuffle" && s.zstdLevel == 5)
+    assert(s.settings.zarrFormat == 2)
+    assert(s.settings.bloscCname == "lz4" && s.settings.bloscShuffle == Blosc.BITSHUFFLE &&
+      s.settings.zstdLevel == 5)
     // explicit zarr_format wins over use_tensorstore
     val s2 = JobSettings.fromJson(
       """{"input_source":"/in","output_directory":"/out",
         |"use_tensorstore":false,"zarr_format":3}""".stripMargin)
-    assert(s2.zarrFormat == 3)
+    assert(s2.settings.zarrFormat == 3)
     // numcodecs int shuffle constants are accepted (P8 name map, both ways)
     val s3 = JobSettings.fromJson(
       """{"input_source":"/in","output_directory":"/out","zarr_format":2,
         |"compressor_kwargs":{"shuffle":2}}""".stripMargin)
-    assert(s3.bloscShuffle == "bitshuffle")
+    assert(s3.settings.bloscShuffle == Blosc.BITSHUFFLE)
     // v2 path validates blosc bounds: clevel <= 9, known cname/shuffle
     intercept[Exception](JobSettings.fromJson(
       """{"input_source":"/in","output_directory":"/out","zarr_format":2,"zstd_level":15}"""))
@@ -121,7 +126,7 @@ class JobSettingsSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(f,
       """{"input_source":"/in","output_directory":"/out","downsample_mode":"max"}""")
     val s = JobSettings.fromConfigFile(conf, f.toString)
-    assert(s.downsampleMode == "max")
+    assert(s.settings.downsampleMode == "max")
     intercept[Exception](JobSettings.fromConfigFile(conf, "/no/such/file.json"))
   }
 
@@ -132,8 +137,62 @@ class JobSettingsSpec extends AnyFunSuite {
       "GRAFT_JOB_SHARD_SIZE" -> "64, 64, 64",
       "GRAFT_JOB_PARTITION_MODE" -> "file",
       "GRAFT_JOB_TRANSLATE_IMARIS_PYRAMID" -> "false"))
-    assert(s.shardSize == Shape3(64, 64, 64))
-    assert(s.partitionMode == "file" && !s.translateImarisPyramid)
+    assert(s.settings.shard == Shape3(64, 64, 64))
+    assert(s.settings.partitionMode == "file" && !s.settings.translatePyramid)
     intercept[Exception](JobSettings.fromEnv(Map("GRAFT_JOB_INPUT_SOURCE" -> "/in")))
+  }
+
+  test("every key: the JSON, GRAFT_JOB_* and flag forms give the same settings") {
+    val base = JobSettings("/in", "/out")
+    val d = ImarisToZarr.Settings()
+    def conv(c: ImarisToZarr.Settings) = base.copy(settings = c)
+    // key -> (its JSON field(s), its env and flag text, the expected settings)
+    val cases: Map[String, (String, String, JobSettings)] = Map(
+      "input_source" -> (""""input_source":"/in2"""", "/in2", base.copy(inputSource = "/in2")),
+      "output_directory" -> (""""output_directory":"/out2"""", "/out2", base.copy(outputDirectory = "/out2")),
+      "s3_location" -> (""""s3_location":"s3://b/x"""", "s3://b/x", base.copy(s3Location = Some("s3://b/x"))),
+      "single_tile_upload" -> (""""single_tile_upload":true""", "true", base.copy(singleTileUpload = true)),
+      "shard_size" -> (""""shard_size":[64,32,16]""", "64,32,16", conv(d.copy(shard = Shape3(64, 32, 16)))),
+      "chunk_size" -> (""""chunk_size":[8,16,32]""", "8,16,32", conv(d.copy(chunk = Shape3(8, 16, 32)))),
+      "scale_factor" -> (""""scale_factor":[1,2,3]""", "1,2,3", conv(d.copy(scaleFactor = Shape3(1, 2, 3)))),
+      "downsample_levels" -> (""""downsample_levels":3""", "3", conv(d.copy(computeLevels = 3))),
+      "downsample_mode" -> (""""downsample_mode":"max"""", "max", conv(d.copy(downsampleMode = "max"))),
+      "translate_imaris_pyramid" -> (""""translate_imaris_pyramid":false""", "false",
+        conv(d.copy(translatePyramid = false))),
+      "partition_mode" -> (""""partition_mode":"file"""", "file", conv(d.copy(partitionMode = "file"))),
+      "zstd_level" -> (""""zstd_level":7""", "7", conv(d.copy(zstdLevel = 7))),
+      "codec" -> (""""codec":"gzip"""", "gzip", conv(d.copy(codecName = "gzip"))),
+      "zarr_format" -> (""""zarr_format":2""", "2", conv(d.copy(zarrFormat = 2))),
+      "blosc_cname" -> (""""compressor_kwargs":{"cname":"lz4"}""", "lz4", conv(d.copy(bloscCname = "lz4"))),
+      "blosc_shuffle" -> (""""compressor_kwargs":{"shuffle":"bitshuffle"}""", "bitshuffle",
+        conv(d.copy(bloscShuffle = Blosc.BITSHUFFLE))),
+      "dimension_separator" -> (""""dimension_separator":"/"""", "/", conv(d.copy(v2Separator = "/"))))
+    assert(cases.keySet == JobSettings.Keys.map(_.name).toSet)
+    // the flags the job has always taken; scale_factor has none
+    assert(JobSettings.Keys.flatMap(_.flag).sorted == Seq("--blosc-cname", "--blosc-shuffle",
+      "--chunk", "--codec", "--input", "--levels", "--mode", "--no-translate", "--output",
+      "--partition-mode", "--s3-location", "--shard", "--single-tile", "--v2-separator",
+      "--zarr-format", "--zstd-level"))
+    JobSettings.Keys.foreach { k =>
+      val (field, text, want) = cases(k.name)
+      val required = Seq("input_source" -> "/in", "output_directory" -> "/out").filter(_._1 != k.name)
+      val json = (required.map { case (n, v) => s""""$n":"$v"""" } :+ field).mkString("{", ",", "}")
+      assert(ImsToZarrJob.resolveSettings(Array("--job-settings", json), Map.empty, conf) == want, json)
+      val env = Map("GRAFT_JOB_INPUT_SOURCE" -> "/in", "GRAFT_JOB_OUTPUT_DIRECTORY" -> "/out", k.env -> text)
+      assert(ImsToZarrJob.resolveSettings(Array.empty, env, conf) == want, k.env)
+      k.flag.foreach { f =>
+        val args = Array("--input", "/in", "--output", "/out", f) ++
+          (if (k.switchValue.isDefined) Nil else Seq(text))
+        assert(ImsToZarrJob.resolveSettings(args, Map.empty, conf) == want, args.mkString(" "))
+      }
+    }
+  }
+
+  test("blosc keys are JSON-only inside compressor_kwargs; an unknown flag lists the flags") {
+    intercept[IllegalArgumentException](JobSettings.fromJson(
+      """{"input_source":"/in","output_directory":"/out","blosc_cname":"lz4"}"""))
+    val e = intercept[IllegalArgumentException](
+      ImsToZarrJob.resolveSettings(Array("--input", "/in", "--bogus"), Map.empty, conf))
+    assert(e.getMessage.contains("unknown arg: --bogus") && e.getMessage.contains("--v2-separator"))
   }
 }

@@ -51,9 +51,9 @@ class ManifestSpec extends AnyFunSuite {
       "--input", "/in", "--output", "/out", "--shard", "64,64,64",
       "--no-translate", "--levels", "3", "--mode", "median", "--single-tile"),
       Map.empty, conf)
-    assert(a.shardSize == graft.core.Geometry.Shape3(64, 64, 64))
-    assert(!a.translateImarisPyramid && a.downsampleLevels == 3
-      && a.downsampleMode == "median" && a.singleTileUpload)
+    assert(a.settings.shard == graft.core.Geometry.Shape3(64, 64, 64))
+    assert(!a.settings.translatePyramid && a.settings.computeLevels == 3
+      && a.settings.downsampleMode == "median" && a.singleTileUpload)
     intercept[RuntimeException] {
       ImsToZarrJob.resolveSettings(Array("--bogus"), Map.empty, conf)
     }

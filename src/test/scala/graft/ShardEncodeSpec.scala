@@ -87,6 +87,8 @@ class ShardEncodeSpec extends AnyFunSuite {
       assert(e.getClass == classOf[RuntimeException])
       assert(e.getMessage == "unsupported zarr codec: lz77 (zstd|blosc|gzip)")
     }
+    // a truncated shard would fail its readers; a missing one reads as fill
+    Seq("bad1", "bad4").foreach(f => assert(!new java.io.File(s"$dir/$f").exists, f))
     def busy = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).filter(t =>
       t.getName.startsWith("zarr-encode-") && t.getState == Thread.State.RUNNABLE)
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
