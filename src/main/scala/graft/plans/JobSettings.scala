@@ -63,18 +63,37 @@ object JobSettings {
     def env: String = "GRAFT_JOB_" + name.toUpperCase
   }
 
+  /** A key whose JSON value goes through `text` when it is textual and
+    * through `json` otherwise; either failing is an
+    * `IllegalArgumentException` naming the key.
+    */
   private def key[A](name: String, flag: String, json: JsonNode => A, text: String => A)(
       set: (JobSettings, A) => JobSettings): Key =
-    Key(name, Option(flag), (j, n) => set(j, json(n)), (j, s) => set(j, text(s)))
+    Key(name, Option(flag), (j, n) => set(j, jsonValue(name, n, json, text)),
+      (j, s) => set(j, named(name)(text(s))))
+
+  /** `parse`, with a failure rethrown as an `IllegalArgumentException`
+    * naming the key.
+    */
+  private def named[A](name: String)(parse: => A): A =
+    try parse
+    catch { case e: IllegalArgumentException => throw new IllegalArgumentException(s"$name: ${e.getMessage}", e) }
+
+  /** A JSON value: textual through the key's `text` parser (the one env
+    * and flags use), otherwise through `json`.
+    */
+  private def jsonValue[A](name: String, n: JsonNode, json: JsonNode => A, text: String => A): A =
+    named(name)(if (n.isTextual) text(n.asText) else json(n))
+
   private def str(name: String, flag: String)(set: (JobSettings, String) => JobSettings): Key =
-    key(name, flag, _.asText, identity)(set)
+    key(name, flag, n => throw new IllegalArgumentException(s"must be a string, got: $n"), identity)(set)
   private def int(name: String, flag: String)(set: (JobSettings, Int) => JobSettings): Key =
-    key(name, flag, _.asInt, _.toInt)(set)
+    key(name, flag, jsonInt, _.toInt)(set)
   private def shape(name: String, flag: String)(set: (JobSettings, Shape3) => JobSettings): Key =
-    key(name, flag, jsonShape(name, _), textShape(name, _))(set)
+    key(name, flag, jsonShape, textShape)(set)
   private def switch(name: String, flag: String, value: Boolean)(
       set: (JobSettings, Boolean) => JobSettings): Key =
-    key(name, flag, _.asBoolean, _.toBoolean)(set).copy(switchValue = Some(value.toString))
+    key(name, flag, jsonBoolean, _.toBoolean)(set).copy(switchValue = Some(value.toString))
   /** A setter on the conversion's [[Settings]]. */
   private def conv[A](set: (Settings, A) => Settings): (JobSettings, A) => JobSettings =
     (j, a) => j.copy(settings = set(j.settings, a))
@@ -97,7 +116,7 @@ object JobSettings {
     str("codec", "--codec")(conv((s, v) => s.copy(codecName = v))),
     int("zarr_format", "--zarr-format")(conv((s, v) => s.copy(zarrFormat = v))),
     str("blosc_cname", "--blosc-cname")(conv((s, v) => s.copy(bloscCname = v))),
-    key("blosc_shuffle", "--blosc-shuffle", n => resolveShuffle(n.asText), resolveShuffle)(
+    key("blosc_shuffle", "--blosc-shuffle", n => resolveShuffle(jsonInt(n).toString), resolveShuffle)(
       conv((s, v) => s.copy(bloscShuffle = v))),
     str("dimension_separator", "--v2-separator")(conv((s, v) => s.copy(v2Separator = v))))
 
@@ -129,14 +148,27 @@ object JobSettings {
         s"${names.keys.toSeq.sorted.mkString("|")} or -1..2"))
   }
 
-  private def jsonShape(key: String, n: JsonNode): Shape3 = {
-    require(n.isArray && n.size == 3, s"$key must be a 3-element array, got: $n")
-    Shape3(n.get(0).asLong, n.get(1).asLong, n.get(2).asLong)
+  /** A JSON integral number that fits an Int. */
+  private def jsonInt(n: JsonNode): Int = {
+    require(n.isIntegralNumber && n.canConvertToInt, s"must be an integer, got: $n")
+    n.intValue
   }
 
-  private def textShape(key: String, s: String): Shape3 = {
+  private def jsonBoolean(n: JsonNode): Boolean = {
+    require(n.isBoolean, s"must be true or false, got: $n")
+    n.booleanValue
+  }
+
+  private def jsonShape(n: JsonNode): Shape3 = {
+    require(n.isArray && n.size == 3, s"must be a 3-element array, got: $n")
+    val e = (0 until 3).map(n.get)
+    require(e.forall(v => v.isIntegralNumber && v.canConvertToLong), s"must hold three integers, got: $n")
+    Shape3(e(0).longValue, e(1).longValue, e(2).longValue)
+  }
+
+  private def textShape(s: String): Shape3 = {
     val p = s.split(",").map(_.trim.toLong)
-    require(p.length == 3, s"$key must be Z,Y,X, got: $s")
+    require(p.length == 3, s"must be Z,Y,X, got: $s")
     Shape3(p(0), p(1), p(2))
   }
 
@@ -151,13 +183,17 @@ object JobSettings {
     require(root != null && root.isObject, "job settings must be a JSON object")
     val unknown = root.fieldNames.asScala.toSeq.filterNot(k => JsonKeys(k) || Ignored(k))
     require(unknown.isEmpty, s"unknown job-settings key(s): ${unknown.sorted.mkString(", ")}")
-    def kwarg(k: String) = Option(root.get("compressor_kwargs")).flatMap(n => Option(n.get(k)))
+    // a missing key and a JSON null both leave the setting at its default
+    def present(n: JsonNode): Option[JsonNode] = Option(n).filterNot(_.isNull)
+    def kwarg(k: String) = present(root.get("compressor_kwargs")).flatMap(n => present(n.get(k)))
     val aliases = Map(
       "zstd_level" -> kwarg("clevel"),
       "blosc_cname" -> kwarg("cname"),
       "blosc_shuffle" -> kwarg("shuffle"),
-      "zarr_format" -> Option(root.get("use_tensorstore")).filter(!_.asBoolean).map(_ => IntNode.valueOf(2)))
-    def value(k: String): Option[JsonNode] = Option(root.get(k)).orElse(aliases.get(k).flatten)
+      "zarr_format" -> present(root.get("use_tensorstore"))
+        .filter(n => !jsonValue("use_tensorstore", n, jsonBoolean, _.toBoolean))
+        .map(_ => IntNode.valueOf(2)))
+    def value(k: String): Option[JsonNode] = present(root.get(k)).orElse(aliases.get(k).flatten)
     Keys.foldLeft(JobSettings("", "")) { (j, k) => value(k.name).fold(j)(k.setJson(j, _)) }.validated
   }
 

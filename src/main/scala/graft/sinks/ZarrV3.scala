@@ -288,9 +288,10 @@ object ZarrV3 {
 
     /** Decode inner chunk (`gz`, `gy`, `gx`) of the shard's own chunk
       * grid into the first `chunkShape.voxels` elements of `out` (C order,
-      * full chunk shape); an elided chunk reads as Fill.
+      * full chunk shape); an elided chunk reads as Fill. Returns whether
+      * the chunk was stored (and so decoded).
       */
-    def decodeChunkInto(gz: Long, gy: Long, gx: Long, out: Array[Short]): Unit = {
+    def decodeChunkInto(gz: Long, gy: Long, gx: Long, out: Array[Short]): Boolean = {
       require(out.length >= chunkVox, s"chunk buffer ${out.length} < $chunkVox")
       val ci = ((gz * grid.y + gy) * grid.x + gx).toInt
       val off = offset(ci)
@@ -299,6 +300,7 @@ object ZarrV3 {
         decompressInto(bytes, off.toInt, nbytes(ci).toInt, raw)
         Voxels.fromLE(raw, 0, out, chunkVox)
       }
+      off != -1L
     }
 
     /** Decode only the inner chunks overlapping the box [`lo`, `hi`) and

@@ -64,6 +64,36 @@ class JobSettingsSpec extends AnyFunSuite {
     bad("""[1,2,3]""", "JSON object")
   }
 
+  test("JSON entry: a wrongly typed value is rejected naming the key, not coerced") {
+    def json(field: String) = s"""{"input_source":"/in","output_directory":"/out",$field}"""
+    def bad(field: String, msgParts: String*): Unit = {
+      val e = intercept[IllegalArgumentException](JobSettings.fromJson(json(field)))
+      assert(msgParts.forall(e.getMessage.contains), s"got: ${e.getMessage}")
+    }
+    bad(""""translate_imaris_pyramid":"yes"""", "translate_imaris_pyramid", "yes")
+    bad(""""downsample_levels":2.7""", "downsample_levels", "2.7")
+    bad(""""zstd_level":"abc"""", "zstd_level", "abc")
+    bad(""""shard_size":[64,"x",64]""", "shard_size", "\"x\"")
+    bad(""""downsample_levels":4294967296""", "downsample_levels", "4294967296")
+    bad(""""single_tile_upload":1""", "single_tile_upload")
+    bad(""""codec":5""", "codec")
+    bad(""""use_tensorstore":"no"""", "use_tensorstore", "no")
+  }
+
+  test("JSON entry: a textual value goes through the key's text parser") {
+    def json(field: String) = s"""{"input_source":"/in","output_directory":"/out",$field}"""
+    assert(JobSettings.fromJson(json(""""zstd_level":"5"""")).settings.zstdLevel == 5)
+    assert(!JobSettings.fromJson(json(""""translate_imaris_pyramid":"false"""")).settings.translatePyramid)
+    assert(JobSettings.fromJson(json(""""shard_size":"64,32,16"""")).settings.shard == Shape3(64, 32, 16))
+  }
+
+  test("JSON entry: a null value leaves the key at its default") {
+    val s = JobSettings.fromJson(
+      """{"input_source":"/in","output_directory":"/out","s3_location":null,
+        |"zstd_level":null,"use_tensorstore":null,"compressor_kwargs":{"clevel":null}}""".stripMargin)
+    assert(s == JobSettings("/in", "/out"))
+  }
+
   test("reference scheduler/compressor keys are accepted; clevel honored") {
     val s = JobSettings.fromJson(
       """{"input_source":"/in","output_directory":"/out",

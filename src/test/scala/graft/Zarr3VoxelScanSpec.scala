@@ -4,12 +4,13 @@ import java.nio.file.Files
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
-import org.apache.spark.sql.execution.{ColumnarToRowExec, WholeStageCodegenExec}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.sources.{Filter, GreaterThan, LessThan}
 import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,10 +19,11 @@ import graft.core.Geometry.Shape3
 import graft.sinks.ZarrV3
 import graft.sources.Zarr3VoxelScanBuilder
 
-/** The `zarr3voxels` columnar scan over a synthetic level whose shape is
-  * not a multiple of the shard, with one elided all-fill inner chunk and
-  * one shard file deleted: random boxes and column subsets equal a
-  * per-voxel reference decoded with `ZarrV3.decodeShard`.
+/** The `zarr3voxels` scan over a synthetic level whose shape is not a
+  * multiple of the shard, with one elided all-fill inner chunk and one
+  * shard file deleted: random boxes and column subsets, exact `v` filters
+  * and pushed aggregates equal a per-voxel reference decoded with
+  * `ZarrV3.decodeShard`.
   */
 class Zarr3VoxelScanSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
 
@@ -183,7 +185,8 @@ class Zarr3VoxelScanSpec extends AnyFunSuite with BeforeAndAfterAll with Adaptiv
   }
 
   test("plan: ColumnarToRow under whole-stage codegen above a columnar BatchScan") {
-    val df = voxels().groupBy("z").agg(F.avg("v"))
+    // grouping by an expression is not pushed, so the scan stays columnar
+    val df = voxels().groupBy(F.expr("z div 2")).agg(F.avg("v"))
     df.collect()
     val plan = df.queryExecution.executedPlan
     val scans = collect(plan) { case b: BatchScanExec => b }
@@ -192,5 +195,131 @@ class Zarr3VoxelScanSpec extends AnyFunSuite with BeforeAndAfterAll with Adaptiv
       .flatten
     assert(scans.nonEmpty && scans.forall(_.supportsColumnar) && fed.size == scans.size, plan.toString)
     assert(fused.nonEmpty, plan.toString)
+  }
+
+  test("plan: a pushed aggregate reads folded rows from the BatchScan, no ColumnarToRow") {
+    val df = voxels().where(F.col("v") > 100).groupBy("z").agg(F.avg("v"))
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val scans = collect(plan) { case b: BatchScanExec => b }
+    assert(scans.size == 1 && !scans.head.supportsColumnar, plan.toString)
+    val desc = scans.head.scan.description()
+    assert(desc.contains("v[101,65535]") && desc.contains("aggregate=[SUM(v), COUNT(*)] GROUP BY z"), desc)
+    assert(collect(plan) { case c: ColumnarToRowExec => c }.isEmpty, plan.toString)
+    assert(collect(plan) { case f: FilterExec => f }.isEmpty, plan.toString)
+  }
+
+  /** Voxels of the clipped box [z0, z1] x [y0, y1] x [x0, x1]. */
+  private def cellsOf(z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long): Seq[(Long, Long, Long)] =
+    for {
+      z <- math.max(z0, 0L) to math.min(z1, shape.z - 1)
+      y <- math.max(y0, 0L) to math.min(y1, shape.y - 1)
+      x <- math.max(x0, 0L) to math.min(x1, shape.x - 1)
+    } yield (z, y, x)
+
+  private def span(n: Long): Gen[(Long, Long)] = Gen.frequency(
+    8 -> (for (lo <- Gen.choose(0L, n - 1); hi <- Gen.choose(lo, n - 1)) yield (lo, hi)),
+    2 -> Gen.const((0L, n - 1)),
+    1 -> (for (lo <- Gen.choose(-3L, n + 3); hi <- Gen.choose(-3L, n + 3)) yield (lo, hi)))
+
+  /** A comparison of `v` with an Int literal, as a column and a predicate. */
+  private val vPredicate: Gen[(Column, Int => Boolean)] = for {
+    op <- Gen.oneOf("=", ">", ">=", "<", "<=")
+    c <- Gen.frequency(4 -> Gen.choose(0, 65535), 1 -> Gen.oneOf(-1, 0, 1, 65534, 65535, 65536, 70000),
+      2 -> Gen.choose(0, ref.length - 1).map(i => ref(i) & 0xffff))
+  } yield {
+    val v = F.col("v")
+    op match {
+      case "=" => (v === c, (u: Int) => u == c)
+      case ">" => (v > c, (u: Int) => u > c)
+      case ">=" => (v >= c, (u: Int) => u >= c)
+      case "<" => (v < c, (u: Int) => u < c)
+      case _ => (v <= c, (u: Int) => u <= c)
+    }
+  }
+
+  test("pushed COUNT/SUM/MIN/MAX/AVG over random boxes, v ranges and groupings equal the reference") {
+    val gen = for {
+      (z0, z1) <- span(shape.z); (y0, y1) <- span(shape.y); (x0, x1) <- span(shape.x)
+      preds <- Gen.choose(0, 2).flatMap(Gen.listOfN(_, vPredicate))
+      group <- Gen.oneOf(Option.empty[String], Some("z"), Some("y"), Some("x"))
+    } yield (Seq(z0, z1, y0, y1, x0, x1), preds, group)
+    val p = Prop.forAll(gen) { case (Seq(z0, z1, y0, y1, x0, x1), preds, group) =>
+      val where = preds.map(_._1).foldLeft(F.col("z").between(z0, z1) && F.col("y").between(y0, y1) &&
+        F.col("x").between(x0, x1))(_ && _)
+      val grouped = voxels().where(where).groupBy(group.map(F.col).toSeq: _*)
+      val df = grouped.agg(F.count(F.lit(1)), F.sum("v"), F.min("v"), F.max("v"), F.avg("v"))
+      val got = df.collect().map { r =>
+        val o = if (group.isEmpty) 0 else 1
+        val key = if (group.isEmpty) 0L else r.getLong(0)
+        def opt(i: Int): Option[Any] = if (r.isNullAt(o + i)) None else Some(r.get(o + i))
+        key -> (r.getLong(o), opt(1), opt(2), opt(3), opt(4))
+      }.toMap
+      // the reference: (count, sum, min, max) per group of the matching voxels
+      val acc = scala.collection.mutable.Map.empty[Long, (Long, Long, Int, Int)]
+      for ((z, y, x) <- cellsOf(z0, z1, y0, y1, x0, x1)) {
+        val u = at(z, y, x)
+        if (preds.forall(_._2(u))) {
+          val key = group match { case Some("z") => z; case Some("y") => y; case Some("x") => x; case _ => 0L }
+          val (n, s, lo, hi) = acc.getOrElse(key, (0L, 0L, Int.MaxValue, Int.MinValue))
+          acc(key) = (n + 1, s + u, math.min(lo, u), math.max(hi, u))
+        }
+      }
+      val want = acc.map { case (k, (n, s, lo, hi)) =>
+        k -> (n, Option[Any](s), Option[Any](lo), Option[Any](hi), Option[Any](s.toDouble / n))
+      }.toMap ++ (if (group.isEmpty && acc.isEmpty) Map(0L -> (0L, None, None, None, None)) else Map.empty)
+      val pushed = collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+        .forall(_.scan.description().contains("aggregate="))
+      (pushed && got == want) :| s"pushed=$pushed got=${got.toSeq.sortBy(_._1).take(4)} " +
+        s"want=${want.toSeq.sortBy(_._1).take(4)} (${got.size} vs ${want.size} groups)"
+    }
+    val r = Check.check(Check.Parameters.default.withMinSuccessfulTests(40), p)
+    assert(r.passed, r.status.toString)
+  }
+
+  test("columnar rows: exact v filters return exactly the matching voxels") {
+    val cols = Seq("z", "y", "x", "v")
+    for ((lo, hi) <- Seq((30000, 65535), (0, 999), (12345, 12345), (40000, 39999))) {
+      val df = voxels().select(cols.map(F.col): _*).where(F.col("v") >= lo && F.col("v") <= hi &&
+        F.col("z").between(10, 40))
+      val got = df.collect().map(r => pack(cols, cols.indices.map(i => r.get(i).asInstanceOf[Number].longValue)))
+        .sorted
+      val want = cellsOf(10, 40, 0, shape.y - 1, 0, shape.x - 1).collect {
+        case (z, y, x) if at(z, y, x) >= lo && at(z, y, x) <= hi => pack(cols, Seq(z, y, x, at(z, y, x).toLong))
+      }.toArray.sorted
+      assert(got.sameElements(want), s"v in [$lo, $hi]: ${got.length} rows, want ${want.length}")
+      assert(collect(df.queryExecution.executedPlan) { case f: FilterExec => f }.isEmpty)
+    }
+    // v > t with every column, as a non-pushable query reads it
+    val t = 50000
+    val n = voxels().select("z", "y", "x", "v").where(F.col("v") > t).collect().length
+    assert(n == ref.count(r => (r & 0xffff) > t))
+  }
+
+  /** The scan's custom metrics after running `df`, summed over its scans. */
+  private def scanMetrics(df: DataFrame): Map[String, Long] = {
+    df.collect()
+    val scans = collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+    Seq("chunksDecoded", "shardBytesRead", "voxelsFolded").map(m => m -> scans.map(_.metrics(m).value).sum).toMap
+  }
+
+  test("scan metrics: chunks decoded, shard bytes read and voxels folded") {
+    val shardFile = new java.io.File(shardPath(level, elided))
+    // one stored chunk of one shard
+    val one = scanMetrics(voxels().where("z < 16 AND y < 32 AND x < 48").agg(F.sum("v")))
+    assert(one == Map("chunksDecoded" -> 1L, "shardBytesRead" -> shardFile.length, "voxelsFolded" -> 16L * 32 * 48))
+    // a full columnar scan decodes every stored chunk and folds nothing
+    val tasks = Geometry.shardTasks("f", 0, Geometry.TrueShape(shape), shard)
+    val files = tasks.map(t => new java.io.File(shardPath(level, (t.sz, t.sy, t.sx)))).filter(_.exists)
+    val stored = tasks.filter(t => (t.sz, t.sy, t.sx) != deleted).map { t =>
+      val r = t.region.shape
+      Geometry.ceilDiv(r.z, chunk.z) * Geometry.ceilDiv(r.y, chunk.y) * Geometry.ceilDiv(r.x, chunk.x)
+    }.sum - 1 // the elided chunk
+    val full = scanMetrics(voxels().where(F.col("v") % 2 === 0).select("v"))
+    assert(full == Map("chunksDecoded" -> stored, "shardBytesRead" -> files.map(_.length).sum, "voxelsFolded" -> 0L))
+    // a pushed aggregate folds every voxel of its box, fill included
+    val box = scanMetrics(voxels().where("z BETWEEN 5 AND 40 AND x >= 90").groupBy("y").agg(F.max("v")))
+    assert(box("voxelsFolded") == 36L * shape.y * 10)
+    assert(scanMetrics(voxels().groupBy().count())("voxelsFolded") == shape.voxels)
   }
 }
