@@ -1407,11 +1407,13 @@ object DedupQueries {
     // uniform-hashing idealization. Grid membership (and why not every
     // b·r ≤ 6 truncation) is documented at [[lshGrid]].
     //
-    // 100 TB shape: every grid point scans the STORED 48 B/doc
-    // signature index (q_c66's artifact — the corpus text is never
-    // read), bands into one shuffle on its band keys, and reduces to a
-    // single row; the verified-pair frame joins in at O(true pairs).
-    // The grid is a calibration harness run on an ingest sample, not a
+    // 100 TB shape: ONE pass over the STORED 48 B/doc signature index
+    // (q_c66's artifact — the corpus text is never read) emits every
+    // grid point's band keys, so the sweep shuffles once on
+    // (bands, rows_per_band, band, key) — the summed volume the six
+    // per-point plans paid, in one job chain instead of six. The
+    // verified-pair frame joins in at O(true pairs × grid points). The
+    // grid is a calibration harness run on an ingest sample, not a
     // per-ingest cost.
     QueryDef(
       "q_c120_lsh_band_grid",
@@ -1419,42 +1421,8 @@ object DedupQueries {
               |$duckJaccardTail,
               |$lshGridSqlTail""".stripMargin)
     ) { (s, d) =>
-      val sig = s.read.parquet(s"${minhashIndex(s, d)}/sigs")
-      val sFrame = verifiedJaccardPairs(s, d)
-        .select(col("doc_a"), col("doc_b"),
-          (col("shared").cast("double") / col("uni").cast("double")).as("s"))
-      lshGrid.map { case (b, r) =>
-        val bandsDf = (0 until b).map { i =>
-          sig.select(col("doc_id"), lit(i).as("band"),
-            concat_ws("_", (0 until r).map(j => col(s"mh${i * r + j}")): _*)
-              .as("key"))
-        }.reduce(_ unionByName _)
-        val cand = bandsDf.as("a")
-          .join(bandsDf.as("b"),
-            col("a.band") === col("b.band") && col("a.key") === col("b.key")
-              && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        val nCand = cand.agg(count(lit(1)).cast("long").as("n_candidates"))
-        val spow = (0 until r).map(_ => col("s")).reduce(_ * _)
-        val q = lit(1) - spow
-        val qpow = (0 until b).map(_ => q).reduce(_ * _)
-        val stats = sFrame
-          .join(cand.withColumn("det", lit(1)), Seq("doc_a", "doc_b"), "left")
-          .select(when(col("det").isNotNull, 1).otherwise(0).as("detected"),
-            dec(lit(1) - qpow).as("exp_p"))
-          .agg(count(lit(1)).cast("long").as("n_true"),
-            sum(col("detected")).cast("long").as("n_detected"),
-            emit((dec(sum(col("detected"))) / dec(count(lit(1)))).cast(D38))
-              .as("observed_recall"),
-            emit((dec(sum(col("exp_p"))) / dec(count(lit(1)))).cast(D38))
-              .as("expected_recall"))
-        nCand.crossJoin(stats) // two 1-row stat frames
-          .select(lit(b.toLong).as("bands"), lit(r.toLong).as("rows_per_band"),
-            col("n_candidates"), col("n_true"), col("n_detected"),
-            col("observed_recall"), col("expected_recall"))
-      }.reduce(_ unionByName _)
-        .orderBy(col("bands"), col("rows_per_band"))
+      lshBandGrid(s.read.parquet(s"${minhashIndex(s, d)}/sigs"),
+        verifiedJaccardPairs(s, d))
     },
 
     // ---- q_c134: MinHash segment retirement ----------------------------------
@@ -1512,6 +1480,72 @@ object DedupQueries {
     */
   private[graft] lazy val lshGrid: Seq[(Int, Int)] =
     Seq((1, 3), (1, 6), (2, 2), (2, 3), (3, 2), (6, 1))
+
+  /** q_c120's frontier over a signature table `sig(doc_id, mh0..mh5)` and
+    * the verified pairs `jp(doc_a, doc_b, shared, uni)` — the DataFrame
+    * twin of [[lshGridSqlTail]], as one keyed pass: every grid point's
+    * (bands, rows_per_band, band, key) rows come out of one explode, one
+    * self-join on those four keys finds every point's candidates, and
+    * the grid frame left-joins the per-point stats, so a point with no
+    * candidates or no true pairs keeps its row (0 counts, NULL sums).
+    * Each pair's S-curve is its own point's literal expression (a CASE
+    * over the grid), so every double matches the per-point SQL.
+    */
+  private[graft] def lshBandGrid(sig: DataFrame, jp: DataFrame): DataFrame = {
+    val s = sig.sparkSession
+    import s.implicits._
+    val point = Seq("bands", "rows_per_band")
+    val pointLits = (b: Int, r: Int) =>
+      Seq(lit(b.toLong).as("bands"), lit(r.toLong).as("rows_per_band"))
+    val bandsDf = sig.select(col("doc_id"), explode(array(lshGrid.flatMap { case (b, r) =>
+      (0 until b).map { i =>
+        struct(pointLits(b, r) ++ Seq(lit(i).as("band"),
+          concat_ws("_", (0 until r).map(j => col(s"mh${i * r + j}")): _*).as("key")): _*)
+      }
+    }: _*)).as("bk")).select(col("doc_id"), col("bk.*"))
+    val cand = bandsDf.as("a")
+      .join(bandsDf.as("b"),
+        (point :+ "band" :+ "key").map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+          && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.bands"), col("a.rows_per_band"),
+        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+    val nCand = cand.groupBy(point.map(col): _*)
+      .agg(count(lit(1)).cast("long").as("n_candidates"))
+    val expP = lshGrid.map { case (b, r) =>
+      val spow = (0 until r).map(_ => col("s")).reduce(_ * _)
+      val q = lit(1) - spow
+      val qpow = (0 until b).map(_ => q).reduce(_ * _)
+      (col("bands") === b.toLong && col("rows_per_band") === r.toLong, dec(lit(1) - qpow))
+    }
+    val stats = jp
+      .select(col("doc_a"), col("doc_b"),
+        (col("shared").cast("double") / col("uni").cast("double")).as("s"),
+        explode(array(lshGrid.map { case (b, r) => struct(pointLits(b, r): _*) }: _*))
+          .as("pt"))
+      .select(col("doc_a"), col("doc_b"), col("s"), col("pt.*"))
+      .join(cand.withColumn("det", lit(1)), point ++ Seq("doc_a", "doc_b"), "left")
+      .select(col("bands"), col("rows_per_band"),
+        when(col("det").isNotNull, 1).otherwise(0).as("detected"),
+        expP.tail.foldLeft(when(expP.head._1, expP.head._2)) {
+          case (acc, (c, v)) => acc.when(c, v) }.as("exp_p"))
+      .groupBy(point.map(col): _*)
+      .agg(count(lit(1)).cast("long").as("n_true"),
+        sum(col("detected")).as("n_detected"), sum(col("exp_p")).as("sum_exp_p"))
+    lshGrid.map { case (b, r) => (b.toLong, r.toLong) }.toDF(point: _*)
+      .join(broadcast(nCand), point, "left").join(broadcast(stats), point, "left")
+      .select(col("bands"), col("rows_per_band"),
+        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
+        coalesce(col("n_true"), lit(0L)).as("n_true"),
+        col("n_detected"), col("sum_exp_p"))
+      .select(col("bands"), col("rows_per_band"), col("n_candidates"), col("n_true"),
+        col("n_detected").cast("long").as("n_detected"),
+        emit((dec(col("n_detected")) / dec(col("n_true"))).cast(D38))
+          .as("observed_recall"),
+        emit((dec(col("sum_exp_p")) / dec(col("n_true"))).cast(D38))
+          .as("expected_recall"))
+      .orderBy(col("bands"), col("rows_per_band"))
+  }
 
   /** Dialect-neutral SQL tail of the q_c120 grid (composes after any
     * chain putting `sig(doc_id, mh0..mh5)` and `jp(doc_a, doc_b,

@@ -721,12 +721,17 @@ object SimilarityQueries {
     // corpus read). Integer permille outputs.
     //
     // 100 TB shape: ground truth is ONE broadcast-queries corpus scan;
-    // each grid point joins the ≤|queries|·nprobe probe list against
-    // the k-row cell histogram (bytes) and reuses the registered search
-    // plan. A calibration harness run on an ingest sample, not a
+    // the codes are joined and int8-scored ONCE against the widest
+    // probe list, and each candidate is replicated (ids and score only)
+    // to the grid points whose fan-out covers its cell, so the windows,
+    // rerank and accounting run once, keyed by nprobe — the summed
+    // volume the per-point searches paid, in one job chain. The
+    // scanned-rows leg joins the keyed probe list against the k-row cell
+    // histogram. A calibration harness run on an ingest sample, not a
     // per-ingest cost (the q_c120 contract). Quantizer is learned model
     // state ⇒ rows-only driver check; IvfFrontierSpec pins monotone
-    // recall, monotone scanned fraction, and the endpoint floors.
+    // recall, monotone scanned fraction, the endpoint floors, and every
+    // grid point against an independent per-point search.
     QueryDef("q_c132_ivf_nprobe_frontier", None) { (s, d) =>
       ivfNprobeFrontier(s, d)
     },
@@ -1112,7 +1117,9 @@ object SimilarityQueries {
     * permille per nprobe grid point, off the stored compacted index.
     * The grid spans the decisions the ANN literature argues about:
     * minimum fan-out (1, 2), the clustered-data structural point √k,
-    * and the uniform-fixture escalation k/4 → k/2.
+    * and the uniform-fixture escalation k/4 → k/2. One keyed pass: each
+    * row equals the registered [[ivfSearchCodes]] at that fan-out
+    * (IvfFrontierSpec).
     */
   private[graft] def ivfNprobeFrontier(s: SparkSession, d: String): DataFrame = {
     val path = int8CompactedIndex(s, int8SegmentsIndex(s, d))
@@ -1123,8 +1130,7 @@ object SimilarityQueries {
       embDoubleRaw(s, d).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val codes = s.read.parquet(s"$path/codes")
     // exact ground truth: q_b7's kernel at depth 5, same query set
-    val q = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+    val q = queryFrame(e)
     val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id"))
     val truth = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
@@ -1138,26 +1144,49 @@ object SimilarityQueries {
     val corpusStats = codes.agg(count(lit(1)).cast("long").as("n_corpus"))
     val grid = Seq(1, 2, sqrtNprobe(k), k / 4, k / 2)
       .map(np => math.min(k, math.max(1, np))).distinct.sorted
-    grid.map { np =>
-      val res = ivfSearchCodes(s, codes, e, fn, np)
-        .select(col("query_id"), col("vec_id"))
-      val stats = truth.join(res.withColumn("hit", lit(1)),
-          Seq("query_id", "vec_id"), "left")
-        .agg(count(lit(1)).cast("long").as("n_true"),
-          sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))
-      val scanned = probeQueries(e, fn, np)
-        .select(col("query_id"), col("cell"))
-        .join(cellSizes, Seq("cell"))
-        .agg(sum(col("cn")).cast("long").as("rows_scanned"),
-          countDistinct(col("query_id")).cast("long").as("n_queries"))
-      stats.crossJoin(scanned).crossJoin(broadcast(corpusStats)) // 1-row frames
-        .select(lit(np.toLong).as("nprobe"), col("n_queries"), col("n_true"),
-          col("n_hit"),
-          expr("CAST(n_hit * 1000 DIV n_true AS BIGINT)").as("recall_pm"),
-          col("rows_scanned"),
-          expr("CAST(rows_scanned * 1000 DIV (n_queries * n_corpus) AS BIGINT)")
-            .as("scanned_pm"))
-    }.reduce(_ unionByName _)
+    val gridArr = array(grid.map(np => lit(np.toLong)): _*)
+    // NearestCells orders cells by (similarity DESC, index ASC), so the
+    // probe list at fan-out np is the first np cells of the widest one:
+    // a cell at position pos belongs to every grid point with np > pos
+    val inGrid = explode(filter(gridArr, np => np > col("pos"))).as("nprobe")
+    val probes = q.select(col("query_id"), col("qv"),
+      posexplode(expr(s"$fn(qv, ${grid.max})")).as(Seq("pos", "cell")))
+    // stage 1 joins and scores the codes once; only the narrow
+    // (ids, cell, ascore) rows are replicated per grid point
+    val scored = codes.join(broadcast(probes), Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("cell"), col("vec_id"), col("pos"),
+        expr("int8_cos_q(q8, qv)").as("ascore"))
+      .select(col("query_id"), col("cell"), col("vec_id"), col("ascore"), inGrid)
+    // the registered search's over-fetch depth (ivfSearchCodes' default 4 × 5)
+    val res = rerankTail(scored, e, fetch = 4 * 5, keys = Seq("nprobe"))
+      .select(col("nprobe"), col("query_id"), col("vec_id"), lit(1).as("hit"))
+    val stats = truth.select(col("query_id"), col("vec_id"), explode(gridArr).as("nprobe"))
+      .join(res, Seq("nprobe", "query_id", "vec_id"), "left")
+      .groupBy(col("nprobe"))
+      .agg(count(lit(1)).cast("long").as("n_true"),
+        sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))
+    val scanned = probes.select(col("query_id"), col("cell"), inGrid)
+      .join(cellSizes, Seq("cell"))
+      .groupBy(col("nprobe"))
+      .agg(sum(col("cn")).cast("long").as("rows_scanned"),
+        countDistinct(col("query_id")).cast("long").as("n_queries"))
+    // the grid frame keeps every point's row, with the 0s and NULLs a
+    // per-point aggregate over no rows gives; the per-point stats are
+    // grid-sized, so they broadcast
+    import s.implicits._
+    grid.map(_.toLong).toDF("nprobe")
+      .join(broadcast(stats), Seq("nprobe"), "left")
+      .join(broadcast(scanned), Seq("nprobe"), "left")
+      .crossJoin(broadcast(corpusStats)) // 1-row frame
+      .select(col("nprobe"), coalesce(col("n_queries"), lit(0L)).as("n_queries"),
+        coalesce(col("n_true"), lit(0L)).as("n_true"), col("n_hit"),
+        col("rows_scanned"), col("n_corpus"))
+      .select(col("nprobe"), col("n_queries"), col("n_true"), col("n_hit"),
+        expr("CAST(n_hit * 1000 DIV n_true AS BIGINT)").as("recall_pm"),
+        col("rows_scanned"),
+        expr("CAST(rows_scanned * 1000 DIV (n_queries * n_corpus) AS BIGINT)")
+          .as("scanned_pm"))
       .orderBy(col("nprobe"))
   }
 
@@ -1386,7 +1415,7 @@ object SimilarityQueries {
       .withColumn("ascore",
         expr("aggregate(zip_with(q8, qv, (a, b) -> a * b), 0D, (acc, y) -> acc + y)" +
           " / greatest(sqrt(aggregate(q8, 0D, (acc, y) -> acc + CAST(y AS DOUBLE) * y)), 1e-12D)"))
-    rerankTail(cands, e, fetch, Some(queryFrame(e)))
+    rerankTail(cands, e, fetch)
   }
 
   /** The query side of the rerank searches: fixed query ids, each probing
@@ -1399,33 +1428,39 @@ object SimilarityQueries {
 
   /** Shared tail of the two-stage searches: per-cell + per-query pushdown
     * of the int8 stage-1 scores to the over-fetch depth, then the exact
-    * rerank over only `fetch` full-precision rows per query.
+    * rerank over only `fetch` full-precision rows per query. `keys` are
+    * extra partition-key columns: every window, the rerank and the
+    * output are per (keys, query_id), so one call runs a whole keyed
+    * sweep (q_c132's nprobe grid) and a single search is the zero-key
+    * case.
     *
     * Two window layouts, dispatched on `spark.graft.rerank.narrowWindows`
     * (default FALSE — the local harness winner; TRUE in
     * [[graft.core.GraftSession.clusterConfs]]): the default carries the
     * query vector through the two row_number sorts, the narrow form
-    * sorts (ids, ascore) only and re-joins qv from the tiny `queries`
-    * frame after the cut. Measured (RerankWidthHarness, PERF.md round
-    * 21): per-search the narrow form is equal at dim 64 and 15–27 %
-    * faster at dims 384–1536 (qv is dim × 8 B per probed candidate row
-    * through the sorts — 12 KB at 1536); what keeps it out of the local
-    * default is the sandbox's per-broadcast job overhead, which the
-    * 5-searches-per-query q_c132 grid pays 5× (14.1 vs 9.7 s at
-    * scale10). Same rows out either way — the sort keys never involved
-    * qv — and RerankNarrowSpec pins the equality.
+    * sorts (ids, ascore) only and re-joins qv from [[queryFrame]] after
+    * the cut. A scored frame without qv (the keyed sweep keeps it out of
+    * its replicated rows) always takes the narrow form. Measured
+    * (RerankWidthHarness, PERF.md round 21): per-search the narrow form
+    * is equal at dim 64 and 15–27 % faster at dims 384–1536 (qv is
+    * dim × 8 B per probed candidate row through the sorts — 12 KB at
+    * 1536); what keeps it out of the local default is the sandbox's
+    * per-broadcast job overhead. Same rows out either way — the sort
+    * keys never involved qv — and RerankNarrowSpec and IvfFrontierSpec
+    * pin the equality.
     */
   private def rerankTail(
       scored: DataFrame, e: DataFrame, fetch: Int,
-      queries: Option[DataFrame] = None): DataFrame = {
-    val narrow = queries.nonEmpty &&
+      keys: Seq[String] = Nil): DataFrame = {
+    val narrow = !scored.columns.contains("qv") ||
       e.sparkSession.conf.get("spark.graft.rerank.narrowWindows", "false") == "true"
-    val wCell = Window.partitionBy(col("query_id"), col("cell"))
+    val part = keys.map(col) :+ col("query_id")
+    val wCell = Window.partitionBy(part :+ col("cell"): _*)
       .orderBy(col("ascore").desc, col("vec_id"))
-    val wQ = Window.partitionBy(col("query_id"))
+    val wQ = Window.partitionBy(part: _*)
       .orderBy(col("ascore").desc, col("vec_id"))
     val base = if (narrow)
-      scored.select(col("query_id"), col("cell"), col("vec_id"), col("ascore"))
+      scored.select(part ++ Seq(col("cell"), col("vec_id"), col("ascore")): _*)
     else scored
     val cut = base
       // same per-cell pushdown as ivfSearch, at the over-fetched depth
@@ -1434,17 +1469,17 @@ object SimilarityQueries {
       .withColumn("arank", row_number().over(wQ))
       .filter(col("arank") <= fetch)
     val cands = if (narrow)
-      cut.select(col("query_id"), col("vec_id"))
-        .join(broadcast(queries.get), Seq("query_id"))
-    else cut.select(col("query_id"), col("qv"), col("vec_id"))
+      cut.select(part :+ col("vec_id"): _*)
+        .join(broadcast(queryFrame(e)), Seq("query_id"))
+    else cut.select(part ++ Seq(col("qv"), col("vec_id")): _*)
     // exact rerank: only `fetch` full-precision rows per query
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id"))
+    val w = Window.partitionBy(part: _*).orderBy(col("score").desc, col("vec_id"))
     cands.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
       .withColumn("score", round(expr(cosExpr), 4))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("vec_id"), emit(col("score")).as("score"))
-      .orderBy(col("query_id"), col("rank"))
+      .select(part ++ Seq(col("rank"), col("vec_id"), emit(col("score")).as("score")): _*)
+      .orderBy(part :+ col("rank"): _*)
   }
 
   /** The fixed query set of the rerank searches: one (query_id, qv) row
@@ -1500,7 +1535,7 @@ object SimilarityQueries {
       .join(broadcast(probeQueries(e, fn, nprobe)), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("ascore", expr("int8_cos_q(q8, qv)"))
-    rerankTail(cands, e, fetch, Some(queryFrame(e)))
+    rerankTail(cands, e, fetch)
   }
 
   /** The structural nprobe for clustered data: √k (the standard IVF

@@ -61,15 +61,15 @@ class IvfFrontierSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows() === rows())
   }
 
-  test("mid-grid point == an independently recomputed registered search") {
-    // pins the frontier's per-point recall to the registered search
-    // recomputed from scratch at the same fan-out — any future frontier
-    // plan change (e.g. a shared-scan rewrite; two were measured SLOWER
-    // and rejected, PERF.md round 21) must keep this equality
+  test("every grid point == an independent per-point search") {
+    // pins each frontier row to the registered search recomputed from
+    // scratch at that fan-out, plus a driver-side recall and scanned-rows
+    // count: the frontier runs every grid point in one keyed pass (the
+    // probe list at fan-out np is the first np cells of the widest one),
+    // and that plan must keep these equalities
     import org.apache.spark.sql.functions._
     import graft.operators.SimilarityQueries
     val out = rows()
-    val np = out(out.size / 2)._1.toInt
     val path = SimilarityQueries.int8CompactedIndex(
       spark, SimilarityQueries.int8SegmentsIndex(spark, sf))
     val (fn, _, _) = SimilarityQueries.frozenQuantizer(spark, path)
@@ -78,8 +78,6 @@ class IvfFrontierSpec extends AnyFunSuite with BeforeAndAfterAll {
       SimilarityQueries.ivfCorpus(spark, sf)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val codes = spark.read.parquet(s"$path/codes")
-    val res = SimilarityQueries.ivfSearchCodes(spark, codes, e, fn, np)
-      .select(col("query_id"), col("vec_id"))
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val w = org.apache.spark.sql.expressions.Window
@@ -90,10 +88,35 @@ class IvfFrontierSpec extends AnyFunSuite with BeforeAndAfterAll {
         round(expr("CAST(cosine_similarity(v, qv) AS DECIMAL(18,6))"), 4))
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
       .select(col("query_id"), col("vec_id"))
-    val nHit = truth.join(res, Seq("query_id", "vec_id"), "left_semi").count()
-    val row = out.find(_._1 == np.toLong).get
-    assert(row._4 === nHit,
-      s"frontier n_hit at nprobe=$np must equal the independent search's")
+      .cache()
+    val nTrue = truth.count()
+    // driver-side scanned-rows accounting: cell populations and each
+    // query's probe list collected, summed in plain Scala
+    val cellSize = codes.groupBy(col("cell")).count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val nCorpus = codes.count()
+    for (row <- out) {
+      val np = row._1.toInt
+      val res = SimilarityQueries.ivfSearchCodes(spark, codes, e, fn, np)
+        .select(col("query_id"), col("vec_id"))
+      val nHit = truth.join(res, Seq("query_id", "vec_id"), "left_semi").count()
+      val probed = q.select(expr(s"$fn(qv, $np)")).collect()
+        .map(_.getSeq[Int](0).filter(cellSize.contains))
+      val scannedRows = probed.map(_.map(cellSize).sum).sum
+      val nQueries = probed.count(_.nonEmpty).toLong
+      assert(row === ((np.toLong, nQueries, nTrue, nHit, nHit * 1000 / nTrue,
+        scannedRows, scannedRows * 1000 / (nQueries * nCorpus))),
+        s"frontier row at nprobe=$np must equal the independent per-point recomputation")
+    }
+    truth.unpersist()
+    graft.core.CachedRdds.drain()
+  }
+
+  test("narrow rerank windows (the cluster profile) return the same frontier rows") {
+    val fat = rows()
+    spark.conf.set("spark.graft.rerank.narrowWindows", "true")
+    try assert(rows() === fat, "the window layout must never change the frontier")
+    finally spark.conf.unset("spark.graft.rerank.narrowWindows")
     graft.core.CachedRdds.drain()
   }
 }
