@@ -47,6 +47,11 @@ object Geometry {
   /** ceil(n / d) for positive d. */
   def ceilDiv(n: Long, d: Long): Long = { require(d > 0); (n + d - 1) / d }
 
+  /** The smallest multiple of `unit` per axis that covers `shape`. */
+  def cover(shape: Shape3, unit: Shape3): Shape3 =
+    Shape3(ceilDiv(shape.z, unit.z) * unit.z, ceilDiv(shape.y, unit.y) * unit.y,
+      ceilDiv(shape.x, unit.x) * unit.x)
+
   /** Downsampled shape: per-axis ceil division by the factor
     * (reference `compute_downsampled_shape`, `imaris_to_zarr.py:56-87`).
     */

@@ -969,19 +969,26 @@ object SimilarityQueries {
     }
 
   /** Re-bind the frozen quantizer persisted with a stored base index:
-    * (registered assignment-function name, nprobe, k).
+    * (registered assignment-function name, nprobe, k). The decoded model
+    * is a SessionMemo value keyed on the artifact path, so only the first
+    * call per snapshot of `model` and `cents` reads them; the function is
+    * registered on every call (a fresh session has none).
     */
   private[graft] def frozenQuantizer(
       s: SparkSession, path: String): (String, Int, Int) = {
-    val meta = s.read.parquet(s"$path/model").head()
-    val (dim, nprobe, k) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val rows = s.read.parquet(s"$path/cents").collect()
-    val cents = new Array[Double](k * dim)
-    rows.foreach { r =>
-      val c = r.getInt(0)
-      val v = r.getSeq[Double](1)
-      var i = 0
-      while (i < dim) { cents(c * dim + i) = v(i); i += 1 }
+    val (dim, nprobe, k, cents) = graft.core.SessionMemo.value(
+        s, "ivf_quantizer", path, Seq(s"$path/model", s"$path/cents")) {
+      val meta = s.read.parquet(s"$path/model").head()
+      val (dim, nprobe, k) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+      val rows = s.read.parquet(s"$path/cents").collect()
+      val cents = new Array[Double](k * dim)
+      rows.foreach { r =>
+        val c = r.getInt(0)
+        val v = r.getSeq[Double](1)
+        var i = 0
+        while (i < dim) { cents(c * dim + i) = v(i); i += 1 }
+      }
+      (dim, nprobe, k, cents)
     }
     (graft.functions.NearestCells.register(s, cents, dim), nprobe, k)
   }

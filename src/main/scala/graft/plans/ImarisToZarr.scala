@@ -19,22 +19,33 @@ import graft.sources.{Hdf5Reader, Imaris}
   *    attrs + level shapes — reference `_build_global_shard_task_list`,
   *    `imaris_job.py:535-556`);
   *  - all store metadata (every level zarr.json + root OME metadata) is
-  *    created by the DRIVER before the job launches — the reference's
-  *    idempotent-create race workaround (W7, `imaris_to_zarr.py:1759-1831`)
-  *    disappears because only one process initializes;
+  *    written by the DRIVER, on a small pool while the first wave runs —
+  *    the reference's idempotent-create race workaround (W7,
+  *    `imaris_to_zarr.py:1759-1831`) disappears because only one process
+  *    initializes, and a failed document write fails the conversion;
   *  - voxel work runs in waves of `ShardTask`s, one plain RDD job each
   *    (`parallelize` + `mapPartitions` + `collect`: no SQL, so no Catalyst
   *    analysis, planning or encoder codegen per wave), all through ONE
-  *    runner ([[runWave]]). A task gets its output region
-  *    from one of three sources: its region of the Imaris dataset (level
-  *    0, and every level of a translated pyramid), the partials the
-  *    previous wave reduced from the regions it held (fused), or the
-  *    previous level's store read at ×factor and reduced. It then writes
-  *    exactly one v3 shard or one shard-aligned set of v2 chunks
-  *    (W4/X3), emits the next level's partial when that level is fused,
-  *    and returns a stats row (A5);
-  *  - pyramid levels are sequential waves (A3 — the inter-level barrier
-  *    is inherent: level l+1 reads level l);
+  *    runner ([[runWave]]). A task gets its output region from its
+  *    [[Source]]: its region of the Imaris dataset (level 0, and every
+  *    level of a translated pyramid), the partials a lower wave reduced
+  *    from the regions it held, or the previous level's store read at
+  *    ×factor and reduced. It writes exactly one v3 shard or one
+  *    shard-aligned set of v2 chunks (W4/X3) and returns a stats row (A5);
+  *  - a task also emits the computed levels above its own while its
+  *    region reduces to them exactly: it reduces once per level and, where
+  *    the reduced region covers whole inner chunks of that level, encodes
+  *    them itself — one chunk blob per task for v3, the chunk files at
+  *    their final keys for v2. A v3 level fed by blobs runs one IO-only
+  *    task per shard that copies its encoded chunks into the shard file in
+  *    C order (`ZarrV3.assembleShard`), so each shard is still written
+  *    whole by one task and the store is byte-identical. At the first
+  *    level that is not chunk-aligned the task writes a raw partial
+  *    instead, and that level is computed in the next wave;
+  *  - so the level barrier (A3) falls only at the levels that are not
+  *    chunk-aligned or cannot be reduced exactly from a task's region:
+  *    with 512³ shards and 128³ chunks a 3-level pyramid runs the level-0
+  *    wave and ONE wave that assembles levels 1 and 2;
   *  - a wave with fewer partitions than slots (the top levels of a
   *    pyramid are often one shard) encodes each shard's inner chunks on
   *    the slots it leaves idle: `slots / partitions` chunks at once
@@ -90,12 +101,13 @@ object ImarisToZarr {
       // absent → Imaris ExtMin origin
       originOverrideUm: Option[(Double, Double, Double)] = None,
       // Fuse each computed level's reduction into the wave that already
-      // holds its source in memory: every task emits the next level's
-      // partial (1/∏factor of its bytes), and the next wave assembles
-      // partials instead of decoding the previous level's store.
-      // Requires the source task shard to be factor-aligned (shard %
-      // scaleFactor == 0 per dim) so no output window crosses a source-
-      // task border; a level whose clamped shard breaks alignment falls
+      // holds its source in memory: every task reduces its region to the
+      // levels above and emits their encoded chunks, or a raw partial
+      // (1/∏factor of its bytes) at a level whose chunks it does not
+      // cover whole, so later waves assemble instead of decoding the
+      // previous level's store. Requires the task region to stay
+      // factor-aligned (shard % scaleFactor^k == 0 per dim) so no output
+      // window crosses a source-task border; a level that breaks it falls
       // back to the store read. Output stores are byte-identical either
       // way (spec-asserted); false selects the store read everywhere.
       fuseDownsample: Boolean = true
@@ -156,28 +168,44 @@ object ImarisToZarr {
       spark.sparkContext.longAccumulator("graft.bytes.written"))
   }
 
-  /** Where a task's output region comes from. */
+  /** Where a level's voxels come from. */
   private[plans] sealed trait Source extends Serializable
   /** The task's region of the Imaris dataset at its level. */
   private[plans] case object FromHdf5 extends Source
-  /** Assembled from the previous wave's partials under `dir`: partial
-    * (gz, gy, gx) covers tile (gz, gy, gx) of this level's `tile` grid,
-    * clipped to `levelShape`.
+  /** Assembled from the partials a lower level's tasks reduced under
+    * `dir`: partial (gz, gy, gx) covers tile (gz, gy, gx) of this level's
+    * `tile` grid, clipped to `levelShape`.
     */
   private[plans] final case class FromPartials(dir: String, tile: Shape3, levelShape: Shape3) extends Source
   /** The ×factor region of the previous level's store, read and reduced. */
   private[plans] final case class FromStore(
       levelDir: String, shape: Shape3, shard: Shape3, chunk: Shape3) extends Source
+  /** v3: the level's inner chunks, already encoded by a lower level's
+    * tasks into one chunk blob each under `dir` (blob (gz, gy, gx) covers
+    * tile (gz, gy, gx) of the `tile` grid, clipped to `levelShape`). The
+    * level's tasks only assemble shards from them (`ZarrV3.assembleShard`).
+    */
+  private[plans] final case class FromChunks(dir: String, tile: Shape3, levelShape: Shape3) extends Source
+  /** v2: a lower level's tasks wrote the level's chunk files at their
+    * final keys, so the level runs no task of its own.
+    */
+  private[plans] case object Emitted extends Source
+
+  /** A level above its own that a task emits by reducing its region once
+    * more: the level's chunks (a chunk blob under `dir` for v3, the chunk
+    * files in the level dir `dir` for v2), or a raw partial under `dir`
+    * when the reduced region does not cover whole chunks of the level.
+    */
+  private final case class Emit(level: Int, dir: String, chunk: Shape3, shard: Shape3,
+                                levelShape: Shape3, partial: Boolean)
 
   /** Per-(file, level) parameters an executor task resolves from its
-    * ShardTask key: the file's settings, and the level's clamped chunk and
-    * shard.
+    * ShardTask key: the file's settings, the level's clamped chunk and
+    * shard, its source, and the levels its tasks emit.
     */
   private final case class TaskIo(
       store: String, chunk: Shape3, shard: Shape3, settings: Settings, source: Source,
-      // non-empty → emit the next level's partial of this task's region
-      // to `$partialDir/<sz>_<sy>_<sx>`
-      partialDir: String)
+      emits: Seq[Emit])
 
   /** Deterministic discovery: recursive *.ims listing, *.h5 fallback,
     * lexicographic order, optional first-only (reference S1–S3,
@@ -214,12 +242,13 @@ object ImarisToZarr {
     * (file, level) read-from-IMS tasks across every input run as ONE
     * Spark job, so the cluster never idles in a small file's per-level
     * tail while other files still have work. Computed pyramid levels run
-    * as one pooled job per LEVEL (the l−1 → l barrier is inherent), again
-    * across all files at once.
+    * in later pooled jobs, again across all files at once: one per level
+    * that is not chunk-aligned, plus the IO-only shard assembly of the
+    * aligned levels, which rides in the wave after their source level.
     *
     * At 100 TB / 1000 executors this is the difference between ~n_files ×
-    * n_levels tiny jobs (each with its own straggler tail) and
-    * 1 + (levels−1) jobs whose ~400k pooled tasks bin-pack the cluster.
+    * n_levels tiny jobs (each with its own straggler tail) and a few jobs
+    * whose ~400k pooled tasks bin-pack the cluster.
     */
   def convertAll(spark: SparkSession, imsPaths: Seq[String], outDir: String,
                  settingsFor: String => Settings,
@@ -263,10 +292,7 @@ object ImarisToZarr {
           // whole-file mode: a single shard spanning the chunk-aligned
           // cover of the level ⇒ exactly one write task per (file, level)
           val (c, _) = Geometry.clampSpec(ts, settings.chunk, settings.shard)
-          (c, Shape3(
-            Geometry.ceilDiv(ts.z, c.z) * c.z,
-            Geometry.ceilDiv(ts.y, c.y) * c.y,
-            Geometry.ceilDiv(ts.x, c.x) * c.x))
+          (c, Geometry.cover(ts, c))
         } else Geometry.clampSpec(ts, settings.chunk, settings.shard)
       }
       val levelDocs = trueShapes.zipWithIndex.map { case (ts, l) =>
@@ -308,52 +334,82 @@ object ImarisToZarr {
     }
 
     // ---- global task lists, planned up front (pure geometry) ----
-    // level-(l+1) fusion precondition (see Settings.fuseDownsample): the
-    // level-l TASK grid must be factor-aligned so no level-(l+1) output
-    // window crosses a source-task border (file-mode's chunk-aligned
-    // cover isn't; skip fusion there). The gate is per level, so a deep
-    // level whose clamped shard breaks alignment falls back to the store
-    // read without affecting other levels.
-    def fusesLevel(p: FilePlan, srcLevel: Int): Boolean = {
-      val f = p.settings.scaleFactor
-      val shardL = p.specs(srcLevel)._2
-      p.settings.fuseDownsample && !p.settings.translatePyramid &&
-        p.settings.computeLevels >= srcLevel + 2 &&
-        p.settings.partitionMode == "shard" &&
-        shardL.z % f.z == 0 && shardL.y % f.y == 0 && shardL.x % f.x == 0
-    }
-    def partialDir(p: FilePlan, level: Int): String = s"${p.store}/$level/.partial"
-    // every partial dir this plan COULD use (any run mode): stale-scratch
+    def scratchDir(p: FilePlan, level: Int, kind: String): String = s"${p.store}/$level/$kind"
+    // every scratch dir this plan COULD use (any run mode): stale-scratch
     // cleanup must not depend on the current run's fusion decisions
-    def allPartialDirs(p: FilePlan): Seq[String] =
-      (1 until math.max(2, p.settings.computeLevels)).map(partialDir(p, _))
-    def source(p: FilePlan, level: Int): Source =
-      if (p.settings.translatePyramid || level == 0) FromHdf5
-      else {
-        val f = p.settings.scaleFactor
-        val (srcChunk, srcShard) = p.specs(level - 1)
-        if (fusesLevel(p, level - 1))
-          FromPartials(partialDir(p, level),
-            Shape3(srcShard.z / f.z, srcShard.y / f.y, srcShard.x / f.x), p.trueShapes(level))
-        else FromStore(s"${p.store}/${level - 1}", p.trueShapes(level - 1), srcShard, srcChunk)
+    def allScratchDirs(p: FilePlan): Seq[String] =
+      for (l <- 1 until math.max(2, p.settings.computeLevels); k <- Seq(".partial", ".chunks"))
+        yield scratchDir(p, l, k)
+    // Each level's source, the levels each computed level's tasks emit,
+    // and the wave each level's tasks run in. A computed level s walks up:
+    // while its tasks' regions still reduce exactly to level m (fusion on,
+    // shard mode, S_s % f^(m-s) == 0, so no window crosses a task border),
+    // level m takes its chunks from the s-tasks if their reduced regions
+    // (tiles of S_s / f^(m-s)) cover whole level-m chunks: origins
+    // chunk-aligned, extents a chunk multiple or clipped at the level
+    // edge. The first level that is not aligned takes one raw partial per
+    // s-task and becomes a computed level, starting its own walk; a level
+    // the s-tasks cannot reduce to exactly reads the previous level's
+    // store instead. So the level barrier falls only at those levels.
+    final case class LevelPlan(source: Source, emits: Seq[Emit], wave: Int)
+    def levelPlans(p: FilePlan): IndexedSeq[LevelPlan] = {
+      val cfg = p.settings
+      val f = cfg.scaleFactor
+      val n = p.trueShapes.length
+      val source = Array.fill[Source](n)(FromHdf5)
+      val emits = Array.fill(n)(Vector.empty[Emit])
+      val wave = Array.fill(n)(0)
+      if (!cfg.translatePyramid) {
+        var s = 0
+        var tile = p.specs(0)._2 // an s-task's region at level m - 1, away from the edge
+        for (m <- 1 until n) {
+          val (chunkM, shardM) = p.specs(m)
+          if (cfg.fuseDownsample && cfg.partitionMode == "shard" &&
+              tile.z % f.z == 0 && tile.y % f.y == 0 && tile.x % f.x == 0) {
+            tile = Shape3(tile.z / f.z, tile.y / f.y, tile.x / f.x)
+            val tasks = Geometry.shardGrid(p.trueShapes(s), p.specs(s)._2)
+            def whole(count: Long, t: Long, c: Long): Boolean = count == 1 || t % c == 0
+            if (whole(tasks.z, tile.z, chunkM.z) && whole(tasks.y, tile.y, chunkM.y) &&
+                whole(tasks.x, tile.x, chunkM.x)) {
+              val dir = if (cfg.zarrFormat == 2) s"${p.store}/$m" else scratchDir(p, m, ".chunks")
+              emits(s) :+= Emit(m, dir, chunkM, shardM, p.trueShapes(m), partial = false)
+              if (cfg.zarrFormat == 2) { source(m) = Emitted; wave(m) = wave(s) }
+              else { source(m) = FromChunks(dir, tile, p.trueShapes(m)); wave(m) = wave(s) + 1 }
+            } else {
+              val dir = scratchDir(p, m, ".partial")
+              emits(s) :+= Emit(m, dir, chunkM, shardM, p.trueShapes(m), partial = true)
+              source(m) = FromPartials(dir, tile, p.trueShapes(m))
+              wave(m) = wave(s) + 1
+              s = m; tile = shardM
+            }
+          } else {
+            source(m) = FromStore(s"${p.store}/${m - 1}", p.trueShapes(m - 1), p.specs(m - 1)._2,
+              p.specs(m - 1)._1)
+            wave(m) = wave(m - 1) + 1
+            s = m; tile = shardM
+          }
+        }
       }
+      (0 until n).map(l => LevelPlan(source(l), emits(l), wave(l)))
+    }
+    val levels: Map[String, IndexedSeq[LevelPlan]] = plans.map(p => p.file -> levelPlans(p)).toMap
     val io: Map[(String, Int), TaskIo] = plans.flatMap { p =>
       p.trueShapes.indices.map { l =>
         val (chunkL, shardL) = p.specs(l)
-        (p.file, l) -> TaskIo(p.store, chunkL, shardL, p.settings, source(p, l),
-          partialDir = if (fusesLevel(p, l)) partialDir(p, l + 1) else "")
+        val lp = levels(p.file)(l)
+        (p.file, l) -> TaskIo(p.store, chunkL, shardL, p.settings, lp.source, lp.emits)
       }
     }.toMap
-    // wave 0 holds every level read from an Imaris file; wave l ≥ 1 the
-    // computed level l of every file, pooled across files. A file's tasks
-    // stay contiguous, so most partitions touch few files and the
-    // per-partition reader cache hits.
-    def wave(p: FilePlan, level: Int): Int = if (p.settings.translatePyramid) 0 else level
+    // a wave holds, across files, every level whose source is complete
+    // after the wave before it (wave 0: every level read from an Imaris
+    // file). A file's tasks stay contiguous, so most partitions touch few
+    // files and the per-partition reader cache hits.
     val waves: Seq[Seq[ShardTask]] =
-      (0 until plans.map(_.trueShapes.length).maxOption.getOrElse(0)).map { w =>
+      (0 to plans.flatMap(p => levels(p.file).map(_.wave)).maxOption.getOrElse(-1)).map { w =>
         for {
           p <- plans
-          l <- p.trueShapes.indices if wave(p, l) == w
+          l <- p.trueShapes.indices
+          lp = levels(p.file)(l) if lp.wave == w && lp.source != Emitted
           t <- Geometry.shardTasks(p.file, l, TrueShape(p.trueShapes(l)), p.specs(l)._2)
         } yield t
       }
@@ -362,22 +418,50 @@ object ImarisToZarr {
     // the store was initialised: reject the plan before any metadata
     waves.foreach(_.foreach { t =>
       val spec = io((t.file, t.level))
-      checkTaskBuffers(t, spec.source, spec.settings.scaleFactor, spec.partialDir.nonEmpty,
+      checkTaskBuffers(t, spec.source, spec.settings.scaleFactor, spec.emits.nonEmpty,
         spec.settings.partitionMode)
     })
-    plans.foreach(_.metadata.foreach { case (path, doc) => ZarrV3.writeString(hconf, path, doc) })
+
+    // drop any fused-reduction scratch left by a PREVIOUS failed run
+    // regardless of THIS run's fusion mode: a crash between a wave and
+    // cleanup leaves `<store>/<l>/.partial` or `.chunks` on disk, and a
+    // later successful run (fused or not) must not ship it — the
+    // finished-store invariant is "spec-defined keys only". Also guards
+    // the fused path against assembling stale scratch from an aborted
+    // earlier attempt.
+    def dropScratch(): Unit = plans.foreach(allScratchDirs(_).foreach { d =>
+      val dir = new org.apache.hadoop.fs.Path(d)
+      try dir.getFileSystem(hconf).delete(dir, true)
+      catch { case _: java.io.IOException => () }
+    })
+    dropScratch()
+
+    // the store documents are written on a small pool while wave 0 runs:
+    // one create (with parent mkdirs) each, off the critical path. A
+    // failed write fails the conversion once the wave is done.
+    val docs = plans.flatMap(_.metadata)
+    val docPool = java.util.concurrent.Executors.newFixedThreadPool(math.min(4, math.max(1, docs.size)))
+    val docWrites = docs.map { case (path, doc) =>
+      java.util.concurrent.CompletableFuture.runAsync(() => ZarrV3.writeString(hconf, path, doc), docPool)
+    }
+    docPool.shutdown()
+    def awaitDocs(): Unit = docWrites.foreach { w =>
+      try w.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    }
 
     // ---- live progress: log as shard completions stream in (A5) ----
-    val totalTasks = waves.map(_.size).sum
+    val totalShards = plans.map(p => p.trueShapes.indices.map(l =>
+      Geometry.shardGrid(p.trueShapes(l), p.specs(l)._2).voxels).sum).sum
     val listener = progress.map { p =>
-      val logEvery = math.max(1L, totalTasks / 10L)
+      val logEvery = math.max(1L, totalShards / 10L)
       val lastLogged = new java.util.concurrent.atomic.AtomicLong(0L)
       val l = new org.apache.spark.scheduler.SparkListener {
         override def onTaskEnd(
             e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
           val done = p.shards.value
           if (done / logEvery > lastLogged.getAndSet(done) / logEvery)
-            println(s"[ims-to-zarr] progress: $done/$totalTasks shards, " +
+            println(s"[ims-to-zarr] progress: $done/$totalShards shards, " +
               s"${p.bytes.value} bytes")
         }
       }
@@ -385,35 +469,25 @@ object ImarisToZarr {
       l
     }
 
-    // drop any fused-reduction scratch left by a PREVIOUS failed run
-    // regardless of THIS run's fusion mode: a crash between a wave and
-    // cleanup leaves `<store>/<l>/.partial` on disk, and a later
-    // successful run (fused or not) must not ship it — the finished-store
-    // invariant is "spec-defined keys only". Also guards the fused path
-    // against assembling stale partials from an aborted earlier attempt.
-    plans.foreach { p =>
-      allPartialDirs(p).foreach { d =>
-        val dir = new org.apache.hadoop.fs.Path(d)
-        val fs = dir.getFileSystem(hconf)
-        if (fs.exists(dir)) fs.delete(dir, true)
-      }
-    }
-
     try {
-      waves.flatMap(runWave(spark, _, io, serConf, progress))
+      val first = waves.headOption.toSeq.flatMap(runWave(spark, _, io, serConf, progress))
+      awaitDocs()
+      val rows = first ++ waves.drop(1).flatMap(runWave(spark, _, io, serConf, progress))
+      // a v2 level written by a lower level's tasks comes back as one row
+      // per (task, shard) piece: sum each shard's pieces
+      val shards = scala.collection.mutable.LinkedHashMap.empty[(String, Int, String), ShardStats]
+      rows.foreach { r =>
+        shards.updateWith((r.file, r.level, r.key))(m => Some(m.fold(r)(m =>
+          m.copy(bytesWritten = m.bytesWritten + r.bytesWritten, voxels = m.voxels + r.voxels))))
+      }
+      shards.values.toSeq
     } finally {
       serConf.destroy()
       listener.foreach(spark.sparkContext.removeSparkListener)
-      // fused-reduction scratch is consumed by the next level's wave;
-      // remove every level's dir even on failure so a partially written
-      // store never carries non-spec keys into a rerun
-      plans.foreach { p =>
-        allPartialDirs(p).foreach { d =>
-          val dir = new org.apache.hadoop.fs.Path(d)
-          try dir.getFileSystem(hconf).delete(dir, true)
-          catch { case _: java.io.IOException => () }
-        }
-      }
+      // fused-reduction scratch is consumed by a later wave; remove every
+      // level's dir even on failure so a partially written store never
+      // carries non-spec keys into a rerun
+      dropScratch()
     }
   }
 
@@ -455,14 +529,16 @@ object ImarisToZarr {
     (Shape3(t.z0 * f.z, t.y0 * f.y, t.x0 * f.x),
       Shape3(math.min(t.z1 * f.z, src.z), math.min(t.y1 * f.y, src.y), math.min(t.x1 * f.x, src.x)))
 
-  /** The next level's partial of task `t`: its region reduced by `f`.
-    * Task borders are factor-aligned (planner precondition), so every
-    * output window is wholly local and the partial is exact.
+  /** The box [lo, hi) of one level reduced by `f`: the box it covers in
+    * the next level. The planner keeps `lo` factor-aligned and `hi`
+    * factor-aligned or at the level edge, so every output window is wholly
+    * inside the box and the reduction is exact.
     */
-  private def partialShape(t: ShardTask, f: Shape3): Shape3 = Shape3(
-    Geometry.ceilDiv(t.z1, f.z) - t.z0 / f.z,
-    Geometry.ceilDiv(t.y1, f.y) - t.y0 / f.y,
-    Geometry.ceilDiv(t.x1, f.x) - t.x0 / f.x)
+  private def reducedBox(lo: Shape3, hi: Shape3, f: Shape3): (Shape3, Shape3) =
+    (Shape3(lo.z / f.z, lo.y / f.y, lo.x / f.x),
+      Shape3(Geometry.ceilDiv(hi.z, f.z), Geometry.ceilDiv(hi.y, f.y), Geometry.ceilDiv(hi.x, f.x)))
+
+  private def extent(lo: Shape3, hi: Shape3): Shape3 = Shape3(hi.z - lo.z, hi.y - lo.y, hi.x - lo.x)
 
   /** Reject task `t` when its region, the source it reads beside it (a
     * partial, or the ×factor store region) or the partial it emits
@@ -473,13 +549,16 @@ object ImarisToZarr {
   private[plans] def checkTaskBuffers(t: ShardTask, source: Source, factor: Shape3,
                                       fused: Boolean, partitionMode: String): Unit = {
     val read = source match {
-      case FromHdf5 => None
+      case FromHdf5 | _: FromChunks | Emitted => None
       case FromPartials(_, tile, _) => Some("partial read" -> tile.voxels)
       case FromStore(_, src, _, _) =>
         val (lo, hi) = storeBox(t, factor, src)
-        Some("×factor store source region" -> Shape3(hi.z - lo.z, hi.y - lo.y, hi.x - lo.x).voxels)
+        Some("×factor store source region" -> extent(lo, hi).voxels)
     }
-    val emitted = if (fused) Some("next-level partial" -> partialShape(t, factor).voxels) else None
+    val emitted = if (!fused) None else {
+      val (lo, hi) = reducedBox(Shape3(t.z0, t.y0, t.x0), Shape3(t.z1, t.y1, t.x1), factor)
+      Some("next-level partial" -> extent(lo, hi).voxels)
+    }
     (Seq("region" -> t.region.voxels) ++ read ++ emitted).foreach { case (what, n) =>
       if (n > Int.MaxValue) throw new IllegalArgumentException(
         s"${t.file} level ${t.level}: a task's $what is $n voxels, more than the " +
@@ -489,9 +568,13 @@ object ImarisToZarr {
     }
   }
 
-  /** One pooled RDD job over the tasks of one wave: each task gets its
-    * region from its [[Source]], writes it, emits the next level's
-    * partial if that level is fused, and returns its stats row.
+  /** One pooled RDD job over the tasks of one wave. A task of a level
+    * with chunk blobs assembles its shard from them. Any other task gets
+    * its region from its [[Source]], writes it, then walks up through the
+    * levels it emits: it reduces the region once per level and writes that
+    * level's chunk blob (v3), its chunk files (v2) or, at the last one, a
+    * raw partial. Each task returns its stats row, plus one row per shard
+    * piece of each v2 level it wrote.
     */
   private def runWave(
       spark: SparkSession, tasks: Seq[ShardTask], io: Map[(String, Int), TaskIo],
@@ -505,9 +588,9 @@ object ImarisToZarr {
       val spec = io((t.file, t.level))
       val region = t.region.voxels
       spec.source match {
-        case FromHdf5 => region * 2L
         case FromPartials(_, tile, _) => (region + tile.voxels) * 2L
         case _: FromStore => region * spec.settings.scaleFactor.voxels * 2L
+        case _ => region * 2L
       }
     }.max * 3
     val partitions = memoryCappedParallelism(spark, tasks.size, maxTaskBytes)
@@ -534,76 +617,108 @@ object ImarisToZarr {
       // checkTaskBuffers keeps every size below 2³¹ (planning time)
       var regionBuf: Array[Short] = Array.emptyShortArray  // the task's region
       var srcBuf: Array[Short] = Array.emptyShortArray     // a partial or the ×factor source
-      var partialBuf: Array[Short] = Array.emptyShortArray // the next level's partial
+      // the emitted levels' regions, alternately (each is reduced from the one before)
+      val emitBufs = Array(Array.emptyShortArray, Array.emptyShortArray)
       lazy val partialScratch = new PartialStore.Scratch
       def grown(buf: Array[Short], n: Long): Array[Short] =
         if (buf.length >= n) buf else new Array[Short](n.toInt)
-      it.map { t =>
+      def done(row: ShardStats, shards: Long): ShardStats = {
+        progress.foreach { p => p.shards.add(shards); p.bytes.add(row.bytesWritten) }
+        row
+      }
+      it.flatMap { t =>
         val spec = io((t.file, t.level))
         val cfg = spec.settings
         val f = cfg.scaleFactor
         val origin = Shape3(t.z0, t.y0, t.x0)
         val end = Shape3(t.z1, t.y1, t.x1)
         val shape = t.region.shape
-        regionBuf = grown(regionBuf, shape.voxels)
         spec.source match {
-          case FromHdf5 =>
-            val r = readers.getOrElseUpdate(t.file, new Hdf5Reader(t.file, conf))
-            val ds = datasets.getOrElseUpdate((t.file, t.level),
-              r.openDataset(Imaris.dataPath(t.level)))
-            r.readRegionInto(ds, t.z0, t.z1, t.y0, t.y1, t.x0, t.x1, regionBuf)
-          case FromPartials(dir, tile, levelShape) =>
-            // a plain region copy over 1/∏factor of the source bytes; the
-            // partials tile the level, so every region voxel is written
-            Voxels.forEachTile(origin, end, tile, levelShape) { p =>
-              srcBuf = grown(srcBuf, p.shape.voxels)
-              PartialStore.readInto(conf, s"$dir/${p.gz}_${p.gy}_${p.gx}",
-                p.shape, srcBuf, partialScratch)
-              Voxels.copyBox(srcBuf, p.shape, p.origin, regionBuf, shape, origin, p.lo, p.extent)
-            }
-          case FromStore(levelDir, src, srcShard, srcChunk) =>
-            val (lo, hi) = storeBox(t, f, src)
-            val srcShape = Shape3(hi.z - lo.z, hi.y - lo.y, hi.x - lo.x)
-            srcBuf = grown(srcBuf, srcShape.voxels)
-            if (cfg.zarrFormat == 2)
-              ZarrV2.readRegionInto(conf, levelDir, src, srcChunk,
-                lo.z, hi.z, lo.y, hi.y, lo.x, hi.x, srcBuf, cfg.v2Separator)
-            else ZarrRegion.readInto(conf, levelDir, src, srcShard, srcChunk,
-              lo.z, hi.z, lo.y, hi.y, lo.x, hi.x, srcBuf)
-            Downsample.reduceInto(srcBuf, srcShape, shape, f, cfg.downsampleMode, regionBuf)
-        }
-        // streaming encode+write: peak task state is the voxel region +
-        // one chunk per encode thread, not an extra fully-assembled shard
-        val (key, written) =
-          if (cfg.zarrFormat == 2)
-            (ZarrV2.chunkKey(t.sz, t.sy, t.sx, cfg.v2Separator),
-              ZarrV2.writeRegionChunks(conf, s"${spec.store}/${t.level}", regionBuf,
-                shape, origin, spec.chunk, cfg.bloscCname, cfg.zstdLevel, cfg.bloscShuffle, cfg.v2Separator))
-          else {
+          case FromChunks(dir, tile, levelShape) =>
             val k = ZarrV3.shardKey(t.sz, t.sy, t.sx)
-            (k, ZarrV3.writeShard(conf, s"${spec.store}/${t.level}/$k",
-              regionBuf, shape, spec.shard, spec.chunk, cfg.zstdLevel, cfg.codecName, threads))
-          }
-        if (spec.partialDir.nonEmpty) {
-          val pShape = partialShape(t, f)
-          partialBuf = grown(partialBuf, pShape.voxels)
-          Downsample.reduceInto(regionBuf, shape, pShape, f, cfg.downsampleMode, partialBuf)
-          PartialStore.write(conf,
-            s"${spec.partialDir}/${t.sz}_${t.sy}_${t.sx}", partialBuf, pShape,
-            partialScratch)
+            val written = ZarrV3.assembleShard(conf, s"${spec.store}/${t.level}/$k",
+              levelShape, origin, spec.shard, spec.chunk, tile, dir)
+            Seq(done(ShardStats(t.file, t.level, k, written, shape.voxels), 1L))
+          case source =>
+            regionBuf = grown(regionBuf, shape.voxels)
+            source match {
+              case FromHdf5 =>
+                val r = readers.getOrElseUpdate(t.file, new Hdf5Reader(t.file, conf))
+                val ds = datasets.getOrElseUpdate((t.file, t.level),
+                  r.openDataset(Imaris.dataPath(t.level)))
+                r.readRegionInto(ds, t.z0, t.z1, t.y0, t.y1, t.x0, t.x1, regionBuf)
+              case FromPartials(dir, tile, levelShape) =>
+                // a plain region copy over 1/∏factor of the source bytes; the
+                // partials tile the level, so every region voxel is written
+                Voxels.forEachTile(origin, end, tile, levelShape) { p =>
+                  srcBuf = grown(srcBuf, p.shape.voxels)
+                  PartialStore.readInto(conf, s"$dir/${p.gz}_${p.gy}_${p.gx}",
+                    p.shape, srcBuf, partialScratch)
+                  Voxels.copyBox(srcBuf, p.shape, p.origin, regionBuf, shape, origin, p.lo, p.extent)
+                }
+              case FromStore(levelDir, src, srcShard, srcChunk) =>
+                val (lo, hi) = storeBox(t, f, src)
+                val srcShape = extent(lo, hi)
+                srcBuf = grown(srcBuf, srcShape.voxels)
+                if (cfg.zarrFormat == 2)
+                  ZarrV2.readRegionInto(conf, levelDir, src, srcChunk,
+                    lo.z, hi.z, lo.y, hi.y, lo.x, hi.x, srcBuf, cfg.v2Separator)
+                else ZarrRegion.readInto(conf, levelDir, src, srcShard, srcChunk,
+                  lo.z, hi.z, lo.y, hi.y, lo.x, hi.x, srcBuf)
+                Downsample.reduceInto(srcBuf, srcShape, shape, f, cfg.downsampleMode, regionBuf)
+              case other => sys.error(s"a level with source $other runs no region task")
+            }
+            // streaming encode+write: peak task state is the voxel region +
+            // one chunk per encode thread, not an extra fully-assembled shard
+            val (key, written) =
+              if (cfg.zarrFormat == 2)
+                (ZarrV2.chunkKey(t.sz, t.sy, t.sx, cfg.v2Separator),
+                  ZarrV2.writeRegionChunks(conf, s"${spec.store}/${t.level}", regionBuf,
+                    shape, origin, spec.chunk, cfg.bloscCname, cfg.zstdLevel, cfg.bloscShuffle, cfg.v2Separator))
+              else {
+                val k = ZarrV3.shardKey(t.sz, t.sy, t.sx)
+                (k, ZarrV3.writeShard(conf, s"${spec.store}/${t.level}/$k",
+                  regionBuf, shape, spec.shard, spec.chunk, cfg.zstdLevel, cfg.codecName, threads))
+              }
+            val rows = Seq.newBuilder[ShardStats]
+            rows += done(ShardStats(t.file, t.level, key, written, shape.voxels), 1L)
+            var (lo, hi, data) = (origin, end, regionBuf)
+            spec.emits.zipWithIndex.foreach { case (e, i) =>
+              val (eLo, eHi) = reducedBox(lo, hi, f)
+              val eShape = extent(eLo, eHi)
+              emitBufs(i % 2) = grown(emitBufs(i % 2), eShape.voxels)
+              val out = emitBufs(i % 2)
+              Downsample.reduceInto(data, extent(lo, hi), eShape, f, cfg.downsampleMode, out)
+              val blob = s"${e.dir}/${t.sz}_${t.sy}_${t.sx}"
+              if (e.partial) PartialStore.write(conf, blob, out, eShape, partialScratch)
+              else if (cfg.zarrFormat == 2)
+                // one row per piece of each level-e shard the region overlaps;
+                // the piece holding the shard's origin counts the shard
+                Voxels.forEachTile(eLo, eHi, e.shard, e.levelShape) { sh =>
+                  val n = ZarrV2.writeBoxChunks(conf, e.dir, out, eShape, eLo, sh.lo, sh.hi, e.chunk,
+                    cfg.bloscCname, cfg.zstdLevel, cfg.bloscShuffle, cfg.v2Separator)
+                  rows += done(ShardStats(t.file, e.level,
+                    ZarrV2.chunkKey(sh.gz, sh.gy, sh.gx, cfg.v2Separator), n, sh.extent.voxels),
+                    if (sh.lo == sh.origin) 1L else 0L)
+                }
+              else
+                // the chunk blob: a shard file over the reduced region's chunk cover
+                ZarrV3.writeShard(conf, blob, out, eShape, Geometry.cover(eShape, e.chunk),
+                  e.chunk, cfg.zstdLevel, cfg.codecName, threads)
+              lo = eLo; hi = eHi; data = out
+            }
+            rows.result()
         }
-        progress.foreach { p => p.shards.add(1L); p.bytes.add(written) }
-        ShardStats(t.file, t.level, key, written, shape.voxels)
       }
     }.collect().toSeq
   }
 }
 
 /** Scratch store for fused partial reductions (one blob per task of the
-  * level below): 12-byte header of int32-BE dims, then a zstd-1 compressed
-  * little-endian int16 payload. Lives at `<store>/<level>/.partial/`
-  * between the wave that writes it and the wave that assembles it,
-  * deleted by the driver after.
+  * lower level that emits it): 12-byte header of int32-BE dims, then a
+  * zstd-1 compressed little-endian int16 payload. Lives at
+  * `<store>/<level>/.partial/` between the wave that writes it and the
+  * wave that assembles it, deleted by the driver after.
   * zstd level 1 (not the store's clevel): this data is written once, read
   * once, and deleted — cheap-to-encode beats small-on-disk.
   */

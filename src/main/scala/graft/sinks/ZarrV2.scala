@@ -72,19 +72,39 @@ object ZarrV2 {
       cname: String = "zstd",
       clevel: Int = 3,
       shuffle: Int = Blosc.SHUFFLE,
-      separator: String = "."): Long = {
+      separator: String = "."): Long =
+    writeBoxChunks(fsConf, levelDir, regionData, dataShape, origin, origin,
+      Shape3(origin.z + dataShape.z, origin.y + dataShape.y, origin.x + dataShape.x),
+      chunk, cname, clevel, shuffle, separator)
+
+  /** [[writeRegionChunks]] for the chunks of the box [`lo`, `hi`) of the
+    * region only: `lo` is chunk-aligned, and chunks are clipped to `hi`,
+    * which is a chunk multiple or the array edge. Returns bytes written.
+    */
+  def writeBoxChunks(
+      fsConf: Configuration,
+      levelDir: String,
+      regionData: Array[Short],
+      dataShape: Shape3,
+      origin: Shape3,
+      lo: Shape3,
+      hi: Shape3,
+      chunk: Shape3,
+      cname: String,
+      clevel: Int,
+      shuffle: Int,
+      separator: String): Long = {
     require(separator == "." || separator == "/",
       s"dimension_separator must be '.' or '/', got: $separator")
     require(regionData.length >= dataShape.voxels,
       s"region payload ${regionData.length} < ${dataShape.voxels}")
-    require(origin.z % chunk.z == 0 && origin.y % chunk.y == 0 && origin.x % chunk.x == 0,
-      s"region origin $origin not chunk-aligned to $chunk")
+    require(lo.z % chunk.z == 0 && lo.y % chunk.y == 0 && lo.x % chunk.x == 0,
+      s"region origin $lo not chunk-aligned to $chunk")
     val chunkVox = chunk.voxels.toInt
     val staged = new Array[Short](chunkVox)
     val raw = new Array[Byte](chunkVox * 2)
-    val end = Shape3(origin.z + dataShape.z, origin.y + dataShape.y, origin.x + dataShape.x)
     var written = 0L
-    Voxels.forEachTile(origin, end, chunk, end) { t =>
+    Voxels.forEachTile(lo, hi, chunk, hi) { t =>
       // chunks are always stored full-size, fill-padded at the region edge
       if (t.extent != chunk) java.util.Arrays.fill(staged, Fill)
       Voxels.copyBox(regionData, dataShape, origin, staged, chunk, t.origin, t.lo, t.extent)

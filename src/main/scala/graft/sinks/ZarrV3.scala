@@ -90,12 +90,21 @@ object ZarrV3 {
       chunkShape: Shape3,
       level: Int = 3,
       codec: String = "zstd",
-      threads: Int = 1): Long = {
+      threads: Int = 1): Long =
+    writeWhole(fsConf, pathStr)(
+      encodeShardTo(_, shardData, dataShape, shardShape, chunkShape, level, codec, threads))
+
+  /** Write the file at `pathStr` with `body`, which returns the bytes it
+    * wrote. A failure deletes the partly written file (best effort) and
+    * is rethrown as `body` threw it.
+    */
+  private def writeWhole(fsConf: Configuration, pathStr: String)(
+      body: java.io.OutputStream => Long): Long = {
     val p = new Path(pathStr)
     val fs = rawFs(p, fsConf)
     val out = fs.create(p, true)
     try {
-      val n = encodeShardTo(out, shardData, dataShape, shardShape, chunkShape, level, codec, threads)
+      val n = body(out)
       out.close()
       n
     } catch { case e: Throwable =>
@@ -103,6 +112,63 @@ object ZarrV3 {
       try out.close() catch { case _: Throwable => () }
       try fs.delete(p, false) catch { case _: java.io.IOException => () }
       throw e
+    }
+  }
+
+  /** Write one shard from inner chunks that other tasks already encoded:
+    * nothing is decoded or re-encoded. The shard is at `origin` in a
+    * level of shape `levelShape`. Its chunks come from chunk blobs under
+    * `blobDir`: blob `<gz>_<gy>_<gx>` is a [[writeShard]] file over tile
+    * (gz, gy, gx) of the `tile` grid, clipped to the level, whose shard
+    * shape is the tile's chunk cover. Tiles and shards are chunk-aligned,
+    * so every chunk of the shard's data is whole in one blob. Chunks go
+    * out in C order, then the index and its CRC32C, so the file is
+    * byte-identical to [[writeShard]] over the same voxels. A missing or
+    * damaged blob, or one that lacks a chunk inside the data, is an
+    * `IllegalArgumentException` naming the shard; a failed write deletes
+    * the partly written file. Returns bytes written.
+    */
+  def assembleShard(
+      fsConf: Configuration,
+      pathStr: String,
+      levelShape: Shape3,
+      origin: Shape3,
+      shardShape: Shape3,
+      chunkShape: Shape3,
+      tile: Shape3,
+      blobDir: String): Long = {
+    val grid = chunkGrid(shardShape, chunkShape)
+    val end = Shape3(math.min(origin.z + shardShape.z, levelShape.z),
+      math.min(origin.y + shardShape.y, levelShape.y), math.min(origin.x + shardShape.x, levelShape.x))
+    // every blob the shard's data overlaps, its index checked, with its tile's origin
+    val blobs = scala.collection.mutable.Map.empty[(Long, Long, Long), (Shape3, Shard)]
+    Voxels.forEachTile(origin, end, tile, levelShape) { t =>
+      val blobPath = s"$blobDir/${t.gz}_${t.gy}_${t.gx}"
+      val bytes =
+        try read(fsConf, blobPath)
+        catch { case e: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(s"$pathStr: chunk blob $blobPath is missing", e) }
+      blobs((t.gz, t.gy, t.gx)) = t.origin -> openShard(bytes, Geometry.cover(t.shape, chunkShape),
+        chunkShape, s"$pathStr: chunk blob $blobPath")
+    }
+    val nChunks = grid.voxels.toInt
+    val index = newIndex(nChunks)
+    writeWhole(fsConf, pathStr) { out =>
+      var off = 0L
+      // the shard's chunks that hold data, in C order (as encodeShardTo stores them)
+      Voxels.forEachTile(origin, end, chunkShape, end) { c =>
+        val (tOrigin, blob) = blobs((c.origin.z / tile.z, c.origin.y / tile.y, c.origin.x / tile.x))
+        val bi = ((((c.origin.z - tOrigin.z) / chunkShape.z) * blob.grid.y +
+          (c.origin.y - tOrigin.y) / chunkShape.y) * blob.grid.x + (c.origin.x - tOrigin.x) / chunkShape.x).toInt
+        val (at, n) = (blob.offset(bi), blob.nbytes(bi))
+        require(at != -1L, s"$pathStr: the chunk at ${c.origin} is missing from its chunk blob")
+        out.write(blob.bytes, at.toInt, n.toInt)
+        val ci = (((c.gz - origin.z / chunkShape.z) * grid.y + c.gy - origin.y / chunkShape.y) * grid.x +
+          c.gx - origin.x / chunkShape.x).toInt
+        index.putLong(ci * 16, off).putLong(ci * 16 + 8, n)
+        off += n
+      }
+      off + writeIndex(out, index, nChunks)
     }
   }
 
@@ -142,10 +208,7 @@ object ZarrV3 {
     val grid = chunkGrid(shardShape, chunkShape)
     val nChunks = grid.voxels.toInt
     val chunkVox = chunkShape.voxels.toInt
-    val index = ByteBuffer.allocate(nChunks * 16 + 4).order(ByteOrder.LITTLE_ENDIAN)
-    // every entry starts as missing (-1, -1): chunks wholly outside the
-    // data are elided
-    java.util.Arrays.fill(index.array(), 0, nChunks * 16, 0xff.toByte)
+    val index = newIndex(nChunks)
     val stored = Geometry.ceilDiv(dataShape.z, chunkShape.z) *
       Geometry.ceilDiv(dataShape.y, chunkShape.y) * Geometry.ceilDiv(dataShape.x, chunkShape.x)
     val window = math.max(1L, math.min(threads.toLong,
@@ -190,11 +253,25 @@ object ZarrV3 {
       // drop every chunk still queued or encoding
       inFlight.forEach(_._2.cancel(true))
     }
+    off + writeIndex(out, index, nChunks)
+  }
+
+  /** A shard index of `nChunks` entries plus its CRC32C slot, every entry
+    * missing (-1, -1): chunks wholly outside the data are elided.
+    */
+  private def newIndex(nChunks: Int): ByteBuffer = {
+    val index = ByteBuffer.allocate(nChunks * 16 + 4).order(ByteOrder.LITTLE_ENDIAN)
+    java.util.Arrays.fill(index.array(), 0, nChunks * 16, 0xff.toByte)
+    index
+  }
+
+  /** Write the index and its CRC32C (index_location=end); returns its bytes. */
+  private def writeIndex(out: java.io.OutputStream, index: ByteBuffer, nChunks: Int): Long = {
     val crc = new CRC32C()
     crc.update(index.array(), 0, nChunks * 16)
     index.putInt(nChunks * 16, crc.getValue.toInt)
     out.write(index.array())
-    off + nChunks * 16 + 4
+    nChunks * 16 + 4L
   }
 
   /** The shard's inner-chunk grid. */
@@ -276,7 +353,8 @@ object ZarrV3 {
     * is the file plus one chunk.
     */
   final class Shard private[ZarrV3] (
-      bytes: Array[Byte], grid: Shape3, chunkShape: Shape3, idxStart: Int) {
+      private[ZarrV3] val bytes: Array[Byte], private[ZarrV3] val grid: Shape3, chunkShape: Shape3,
+      idxStart: Int) {
     // NOTE: ByteBuffer.wrap(a, off, len) still indexes absolute gets from
     // a[0]; keep one whole-array buffer and offset explicitly.
     private[ZarrV3] val whole = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)

@@ -32,7 +32,8 @@ import graft.core.Voxels
   *    v4 with Single-Chunk, Implicit, Fixed-Array, Extensible-Array,
   *    and v2-B-tree indexes — the full v4 index set libhdf5 picks
   *    across maxshape choices), contiguous, and compact;
-  *  - filters deflate(1) / shuffle(2) / lz4(32004);
+  *  - filters deflate(1) / shuffle(2) / lz4(32004), the shuffle first in
+  *    the pipeline as libhdf5 writers place it;
   *  - byte-string attributes, message versions 1/2/3
   *    (`io_utils.py:462-466` decodes with `.tobytes()`).
   * Anything outside the subset fails loudly. v2-header checksums are
@@ -916,18 +917,21 @@ final class Hdf5Reader(val path: String, conf: Configuration) extends Closeable 
   // valid only until the next decodeChunk call on this reader.
   private var compScratch: Array[Byte] = Array.emptyByteArray
   private var inflateScratch: Array[Byte] = Array.emptyByteArray
-  private var shuffleScratch: Array[Byte] = Array.emptyByteArray
   private var lz4Scratch: Array[Byte] = Array.emptyByteArray
-  private var voxelScratch: Array[Short] = Array.emptyShortArray
   private def grown(buf: Array[Byte], n: Int): Array[Byte] =
     if (buf.length >= n) buf else new Array[Byte](n)
 
-  /** Decode one stored chunk to exactly rawLen bytes. The returned array
-    * may be a reused scratch whose length EXCEEDS the logical chunk size
-    * and whose content is valid only until the next call — callers must
-    * copy out what they need immediately (readRegion does).
+  /** Decode one stored chunk to exactly rawLen bytes, applying every
+    * filter but the shuffle: libhdf5 writers put it first in the pipeline
+    * (shuffle, then deflate or lz4), so it comes last in read order and is
+    * left to the region copy; the second result says whether the bytes
+    * are still shuffled. A shuffle anywhere else is outside the subset.
+    * The returned array may be a reused scratch whose length EXCEEDS the
+    * logical chunk size and whose content is valid only until the next
+    * call — callers must copy out what they need immediately
+    * (readRegionInto does).
     */
-  private def decodeChunk(ds: Dataset, addr: Long, storedLen: Int): Array[Byte] = {
+  private def decodeChunk(ds: Dataset, addr: Long, storedLen: Int): (Array[Byte], Boolean) = {
     var data: Array[Byte] = null
     var len = 0
     if (addr == InlineAddr) { data = ds.inline.get; len = data.length } // compact layout
@@ -938,7 +942,10 @@ final class Hdf5Reader(val path: String, conf: Configuration) extends Closeable 
     }
     val rawLen = ds.chunk.product * ds.elemSize
     // filters applied in reverse of pipeline order
-    for (f <- ds.filters.reverse) f.id match {
+    val shuffled = ds.filters.headOption.exists(_.id == 2)
+    if (shuffled) require(ds.filters.head.clientData.headOption.forall(_ == ds.elemSize),
+      s"$path: shuffle element size ${ds.filters.head.clientData.head} is not the datatype's ${ds.elemSize}")
+    for (f <- ds.filters.reverse.dropRight(if (shuffled) 1 else 0)) f.id match {
       case 1 => // deflate
         val inf = new Inflater()
         inf.setInput(data, 0, len)
@@ -956,22 +963,7 @@ final class Hdf5Reader(val path: String, conf: Configuration) extends Closeable 
         inf.end()
         require(off == rawLen, s"$path: deflate chunk expanded to $off, want $rawLen")
         data = out; len = rawLen
-      case 2 => // shuffle: de-interleave byte planes
-        val es = if (f.clientData.nonEmpty) f.clientData.head else ds.elemSize
-        val nElems = len / es
-        shuffleScratch = grown(shuffleScratch, len)
-        val out = shuffleScratch
-        var j = 0
-        while (j < es) {
-          var e = 0
-          while (e < nElems) { out(e * es + j) = data(j * nElems + e); e += 1 }
-          j += 1
-        }
-        // libhdf5 copies a non-multiple-of-es tail verbatim; without this
-        // the reused scratch would expose stale bytes from a prior chunk
-        if (nElems * es < len)
-          System.arraycopy(data, nElems * es, out, nElems * es, len - nElems * es)
-        data = out // len unchanged
+      case 2 => sys.error(s"$path: a shuffle filter after another filter is outside the subset")
       case 32004 => // HDF5-lz4: u64BE total, u32BE blockSize, blocks of u32BE len + payload
         val bb = ByteBuffer.wrap(data, 0, len).order(ByteOrder.BIG_ENDIAN)
         val total = bb.getLong()
@@ -997,7 +989,7 @@ final class Hdf5Reader(val path: String, conf: Configuration) extends Closeable 
       case other => sys.error(s"$path: unsupported HDF5 filter id $other")
     }
     require(len == rawLen, s"$path: chunk decoded to $len, want $rawLen")
-    data
+    (data, shuffled)
   }
 
   /** Hyperslab read (reference `read_block`, `io_utils.py:122-151`):
@@ -1016,6 +1008,12 @@ final class Hdf5Reader(val path: String, conf: Configuration) extends Closeable 
     * one region scratch across every task in a partition — allocating a
     * fresh 268 MB humongous array per 512³ shard task was the dominant
     * allocation of the whole pipeline.
+    *
+    * One pass per chunk: the decoded bytes go straight into the region's
+    * rows — read as little-endian, or gathered from the two byte planes
+    * when the shuffle was left undone ([[decodeChunk]]). Every
+    * region voxel is written once: by its chunk, or as fill where the
+    * chunk is missing.
     */
   def readRegionInto(ds: Dataset,
                      z0: Long, z1: Long, y0: Long, y1: Long, x0: Long, x1: Long,
@@ -1023,20 +1021,37 @@ final class Hdf5Reader(val path: String, conf: Configuration) extends Closeable 
     require(ds.elemSize == 2, s"$path: only uint16/int16 payloads supported, got ${ds.elemSize} bytes")
     val region = Shape3(z1 - z0, y1 - y0, x1 - x0)
     require(out.length >= region.voxels, s"$path: region buffer too small")
-    // missing chunks mean fill-value voxels — zero the used prefix (a
-    // fresh array arrives pre-zeroed; a reused scratch does not)
-    java.util.Arrays.fill(out, 0, region.voxels.toInt, 0.toShort)
     val chunk = Shape3(ds.chunk(0), ds.chunk(1), ds.chunk(2))
     val chunkVox = chunk.voxels.toInt
     val lo = Shape3(z0, y0, x0)
     val hi = Shape3(z1, y1, x1)
     // stored chunks are full-size, so tiles are clipped to the region only
     Voxels.forEachTile(lo, hi, chunk, hi) { t =>
-      ds.chunkIndex.get((t.origin.z, t.origin.y, t.origin.x)).foreach { case (addr, len) =>
-        val chunkBytes = decodeChunk(ds, addr, len)
-        if (voxelScratch.length < chunkVox) voxelScratch = new Array[Short](chunkVox)
-        Voxels.fromLE(chunkBytes, 0, voxelScratch, chunkVox)
-        Voxels.copyBox(voxelScratch, chunk, t.origin, out, region, lo, t.lo, t.extent)
+      val stored = ds.chunkIndex.get((t.origin.z, t.origin.y, t.origin.x))
+      val (bytes, shuffled) = stored.fold((Array.emptyByteArray, false)) { case (addr, len) =>
+        decodeChunk(ds, addr, len) }
+      val le = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).asShortBuffer()
+      val run = t.extent.x.toInt
+      var z = t.lo.z
+      while (z < t.lo.z + t.extent.z) {
+        var y = t.lo.y
+        while (y < t.lo.y + t.extent.y) {
+          // the row's first voxel in the chunk and in the region
+          val s = (((z - t.origin.z) * chunk.y + (y - t.origin.y)) * chunk.x + (t.lo.x - t.origin.x)).toInt
+          val d = (((z - z0) * region.y + (y - y0)) * region.x + (t.lo.x - x0)).toInt
+          if (stored.isEmpty) java.util.Arrays.fill(out, d, d + run, 0.toShort)
+          else if (!shuffled) le.get(s, out, d, run)
+          else {
+            // byte plane 0 holds every voxel's low byte, plane 1 its high
+            var i = 0
+            while (i < run) {
+              out(d + i) = ((bytes(s + i) & 0xff) | (bytes(chunkVox + s + i) << 8)).toShort
+              i += 1
+            }
+          }
+          y += 1
+        }
+        z += 1
       }
     }
     out

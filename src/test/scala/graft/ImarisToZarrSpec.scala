@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -208,6 +210,8 @@ class ImarisToZarrSpec extends AnyFunSuite with BeforeAndAfterAll {
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
+    // no earlier test's job events may reach the counter
+    org.apache.spark.GraftSparkTestAccess.drainListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val progress = ImarisToZarr.Progress.init(spark)
@@ -219,11 +223,8 @@ class ImarisToZarrSpec extends AnyFunSuite with BeforeAndAfterAll {
           shard = Shape3(32, 32, 32), chunk = Shape3(16, 16, 16),
           translatePyramid = true),
         Some(progress))
-      // sentinel job flushes the listener bus deterministically
-      spark.sparkContext.parallelize(1 to 1, 1).count()
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (jobs.get() < 2 && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(jobs.get() == 2, "expected exactly 1 pooled job + 1 sentinel")
+      org.apache.spark.GraftSparkTestAccess.drainListenerBus(spark.sparkContext)
+      assert(jobs.get() == 1, "expected exactly 1 pooled job")
 
       // per-file stats identical to three single-file runs
       val byFile = stats.groupBy(_.file.split('/').last)
@@ -242,7 +243,8 @@ class ImarisToZarrSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(progress.bytes.value == stats.map(_.bytesWritten).sum)
 
       // computed-pyramid waves: 2 files × 2 levels ⇒ exactly 2 more jobs
-      // (one read wave + one downsample wave), pooled across both files
+      // (the read wave, whose tasks also encode level 1's chunk blobs, and
+      // one wave assembling level 1's shards), pooled across both files
       val out2 = Files.createTempDirectory("zarrpool2").toString
       val before = jobs.get()
       val stats2 = ImarisToZarr.convertAll(
@@ -251,54 +253,76 @@ class ImarisToZarrSpec extends AnyFunSuite with BeforeAndAfterAll {
           shard = Shape3(32, 32, 32), chunk = Shape3(16, 16, 16),
           translatePyramid = false, computeLevels = 2),
         None)
-      spark.sparkContext.parallelize(1 to 1, 1).count()
-      val deadline2 = System.nanoTime() + 10e9.toLong
-      while (jobs.get() < before + 3 && System.nanoTime() < deadline2) Thread.sleep(50)
-      assert(jobs.get() == before + 3, "expected 2 pooled level-waves + 1 sentinel")
+      org.apache.spark.GraftSparkTestAccess.drainListenerBus(spark.sparkContext)
+      assert(jobs.get() == before + 2, "expected 2 pooled level-waves")
       assert(stats2.groupBy(_.file).forall(_._2.map(_.level).distinct.sorted == Seq(0, 1)))
+
+      // an aligned 3-level computed pyramid (every level-1 and level-2
+      // chunk inside one level-0 task's reduced region): the level-0 wave
+      // encodes both levels' chunks, and ONE wave assembles both levels'
+      // shards — 2 jobs; the store read runs a wave per level — 3 jobs
+      for ((fuse, want) <- Seq(true -> 2, false -> 3)) {
+        val before3 = jobs.get()
+        val stats3 = ImarisToZarr.convert(spark, s"${Fixtures.dir}/ims_64.ims",
+          Files.createTempDirectory("zarraligned").toString,
+          ImarisToZarr.Settings(
+            shard = Shape3(32, 32, 32), chunk = Shape3(8, 8, 8),
+            translatePyramid = false, computeLevels = 3, fuseDownsample = fuse))
+        org.apache.spark.GraftSparkTestAccess.drainListenerBus(spark.sparkContext)
+        assert(jobs.get() == before3 + want, s"fuse=$fuse: expected $want jobs")
+        assert(stats3.map(_.level).distinct.sorted == Seq(0, 1, 2))
+      }
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("fused L1 reduction is voxel-exact vs the unfused compute wave") {
-    // 100³ true shape, shard 32 ⇒ edge tasks clamp at 100 and L1 tasks
-    // assemble from up to 8 partials with odd extents — every geometry
-    // edge of the fused path in one fixture. median exercises a
+    // 100³ true shape, shard 32 ⇒ edge tasks clamp at 100; level 1 takes
+    // its chunks from the level-0 tasks (16³ tiles of 16³ chunks), level
+    // 2 does not align (8³ tiles of 16³ chunks) and is assembled from up
+    // to 8 partials with odd extents. At 5 levels, level 3 is computed
+    // from level 2's partials and level 4 (13³ shards, odd) reads level
+    // 3's store — every source in one fixture. median exercises a
     // non-linear kernel (order statistics can't hide an off-by-one the
     // way mean might).
-    for ((mode, fmt) <- Seq(("mean", 3), ("median", 3), ("mean", 2))) {
+    val cases = for {
+      levels <- Seq(3, 5)
+      (mode, fmt, codec) <- Seq(("mean", 3, "zstd"), ("median", 3, "blosc"), ("mean", 3, "gzip"),
+        ("mean", 2, "zstd"))
+    } yield (levels, mode, fmt, codec)
+    for ((levels, mode, fmt, codec) <- cases) {
+      val what = s"levels=$levels mode=$mode fmt=$fmt codec=$codec"
       def conv(fuse: Boolean): (String, Seq[ImarisToZarr.ShardStats]) = {
-        val out = Files.createTempDirectory(s"zarrfuse_${mode}_${fmt}_$fuse").toString
+        val out = Files.createTempDirectory(s"zarrfuse_${levels}_${mode}_${fmt}_${codec}_$fuse").toString
         val stats = ImarisToZarr.convert(
           spark, s"${Fixtures.dir}/ims_padded.ims", out,
           ImarisToZarr.Settings(
             shard = Shape3(32, 32, 32), chunk = Shape3(16, 16, 16),
-            translatePyramid = false, computeLevels = 3, downsampleMode = mode,
-            zarrFormat = fmt, fuseDownsample = fuse))
+            translatePyramid = false, computeLevels = levels, downsampleMode = mode,
+            zarrFormat = fmt, codecName = codec, fuseDownsample = fuse))
         (s"$out/ims_padded.ome.zarr", stats)
       }
       val (fused, statsF) = conv(fuse = true)
       val (plain, statsP) = conv(fuse = false)
-      // identical stats (same keys, bytes, voxels) and identical voxels
+      // identical stats (same keys, bytes, voxels) and identical files
       assert(statsF.map(s => (s.level, s.key, s.bytesWritten, s.voxels)).sorted ==
-        statsP.map(s => (s.level, s.key, s.bytesWritten, s.voxels)).sorted)
-      for ((shape, l) <- Seq(Shape3(50, 50, 50) -> 1, Shape3(25, 25, 25) -> 2)) {
-        val (chunkL, shardL) =
-          graft.core.Geometry.clampSpec(shape, Shape3(16, 16, 16), Shape3(32, 32, 32))
-        def readLevel(store: String): Array[Short] =
-          if (fmt == 2)
-            graft.sinks.ZarrV2.readRegion(conf, s"$store/$l", shape,
-              chunkL, 0, shape.z, 0, shape.y, 0, shape.x, ".")
-          else
-            ZarrRegion.read(conf, s"$store/$l", shape, shardL,
-              chunkL, 0, shape.z, 0, shape.y, 0, shape.x)
-        assert(java.util.Arrays.equals(readLevel(fused), readLevel(plain)),
-          s"level $l mismatch (mode=$mode fmt=$fmt)")
+        statsP.map(s => (s.level, s.key, s.bytesWritten, s.voxels)).sorted, what)
+      def files(store: String): Map[String, Array[Byte]] = {
+        val root = java.nio.file.Paths.get(store)
+        val walk = Files.walk(root)
+        try walk.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(f => root.relativize(f).toString -> Files.readAllBytes(f)).toMap
+        finally walk.close()
       }
-      // the partial scratch dirs (every fused level) must be consumed
-      // and deleted — level 2's existence also proves the recursive
-      // L1→L2 fusion path ran through the same lifecycle
-      assert(!new java.io.File(s"$fused/1/.partial").exists())
-      assert(!new java.io.File(s"$fused/2/.partial").exists())
+      val (ff, fp) = (files(fused), files(plain))
+      assert(ff.keySet == fp.keySet, s"$what: file sets differ: ${ff.keySet diff fp.keySet} " +
+        s"vs ${fp.keySet diff ff.keySet}")
+      assert(ff.keySet.exists(_.startsWith(s"${levels - 1}/")), s"$what: no top level")
+      ff.foreach { case (k, bytes) =>
+        assert(java.util.Arrays.equals(bytes, fp(k)), s"$what: $k differs")
+      }
+      // every scratch dir (blobs and partials) is consumed and deleted
+      for (l <- 1 until levels; d <- Seq(".chunks", ".partial"))
+        assert(!new java.io.File(s"$fused/$l/$d").exists(), s"$what: $l/$d left behind")
     }
   }
 
